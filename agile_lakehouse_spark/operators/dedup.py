@@ -541,6 +541,11 @@ def minhash_signatures(
 ) -> DataFrame:
     """MinHash signature per doc: columns ``mh0..mh{n-1}``.
 
+    Doc ids (``id_col``) must be unique: each input row yields its own
+    signature row, so a repeated id yields several (possibly differing)
+    signature rows downstream.  Deduplicate ids first if the input may
+    repeat them.
+
     Round 14 (guide §2.4 "remove shuffles outright", §4.1 higher-order
     functions): each signature is computed WITHIN its own row — one
     ``transform`` hashes the doc's distinct shingle array once (md5 +
@@ -553,7 +558,7 @@ def minhash_signatures(
     and never with ``spark.sql.shuffle.partitions``.  min is
     order-insensitive and the per-shingle arithmetic is bit-identical,
     so the signatures equal the explode+agg form exactly (pinned in
-    ``tests/test_dedup.py::test_minhash_signatures_narrow_equals_agg``);
+    ``tests/test_llm_ops.py::test_minhash_signatures_narrow_equals_agg``);
     Catalyst keeps the hash array as its own projection (the
     CollapseProject expensive-expression guard), so md5 still runs once
     per shingle — verified: 1 md5 in the optimized plan.

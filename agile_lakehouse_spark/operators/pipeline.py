@@ -53,7 +53,6 @@ from agile_lakehouse_spark.operators.text import quality_score
 # tempdir cleanup.  The mode is read from the environment AT CALL TIME
 # (tests monkeypatch it); unknown values raise rather than silently
 # meaning checkpoint.
-STATE_PIN = os.environ.get("SPARK_GRAFT_STATE_PIN", "checkpoint")
 _STATE_PIN_MODES = ("checkpoint", "eager_checkpoint", "persist", "table")
 
 

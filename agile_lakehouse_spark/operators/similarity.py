@@ -722,6 +722,31 @@ def embedding_store_update(
     return store_df.select(*cols).unionByName(new_df.select(*cols))
 
 
+def _dirty_cells(tagged: DataFrame, cell_col: str, op: str) -> tuple[list, int]:
+    """The store-backed updates' dirty-cell list and the ``n_part`` that
+    range-clusters their appends.
+
+    The list is bounded by the centroid count (<= m rows) — the one
+    sanctioned driver-side collect of this family.  Its length sizes the
+    RANGE clustering: repartitionByRange gives files DISJOINT cell
+    ranges, so the manifest min/max prune is tight (hash clustering
+    interleaves cells across files and a file's [min, max] spans cells
+    it does not contain; AQE can also coalesce a no-count repartition to
+    one file at small scale, erasing pruning entirely).  A NULL cell
+    raises: it would crash ``prune_files_by_values`` (None vs int sort)
+    and an IN-list would silently DROP the null-cell rows — fail loudly
+    at the boundary instead.  ``op`` names the caller in the error.
+    """
+    dirty_vals = [r[0] for r in tagged.select(cell_col).distinct().collect()]
+    if any(v is None for v in dirty_vals):
+        raise ValueError(
+            f"{op}: batch contains rows with a NULL {cell_col} assignment; "
+            "every vector must carry a non-null cell (a caller-assigned "
+            f"{cell_col} column must be complete; ivf_assign never emits null)"
+        )
+    return dirty_vals, max(1, len(dirty_vals))
+
+
 def embedding_store_backed_update(
     spark,
     new_df: DataFrame,
@@ -775,14 +800,7 @@ def embedding_store_backed_update(
         F.col(block_col).cast("bigint").alias(block_col), F.col(id_col), F.col(vec_col)
     ).persist()
     own.append(tagged)
-    dirty_vals = [r[0] for r in tagged.select(block_col).distinct().collect()]
-    if any(v is None for v in dirty_vals):
-        raise ValueError(
-            "embedding_store_backed_update: batch contains rows with a "
-            f"NULL {block_col} assignment; every vector must carry a "
-            "non-null cell"
-        )
-    n_part = max(1, len(dirty_vals))
+    dirty_vals, n_part = _dirty_cells(tagged, block_col, "embedding_store_backed_update")
     if fold_only:
         tbl.append(tagged.repartitionByRange(n_part, block_col))
         return None
@@ -791,7 +809,7 @@ def embedding_store_backed_update(
             tagged, tagged.limit(0), threshold, block_col, vec_col, id_col
         )
     else:
-        store_dirty = tbl.scan_values(spark, block_col, dirty_vals)
+        store_dirty = tbl.scan_in(spark, block_col, dirty_vals)
         matches = embedding_match(
             tagged, store_dirty, threshold, block_col, vec_col, id_col
         )
@@ -1570,25 +1588,7 @@ def semantic_dedup_store_update(
     tagged = tagged.persist()
     own.append(tagged)
 
-    # dirty-cell list: bounded by the centroid count (<= m rows) — the one
-    # sanctioned driver-side collect of this family.  It also sizes the
-    # RANGE clustering below: repartitionByRange gives files DISJOINT cell
-    # ranges, so the manifest min/max prune is tight (hash clustering
-    # interleaves cells across files and a file's [min, max] spans cells
-    # it does not contain; AQE can also coalesce a no-count repartition
-    # to one file at small scale, erasing pruning entirely).
-    dirty_vals = [r[0] for r in tagged.select("cell").distinct().collect()]
-    if any(v is None for v in dirty_vals):
-        # a null cell would crash prune_files_by_values (None vs int sort)
-        # and Column.isin would silently DROP the null-cell rows — fail
-        # loudly at the boundary instead (r11 advice)
-        raise ValueError(
-            "semantic_dedup_store_update: batch contains rows with a NULL "
-            "cell assignment; every vector must carry a non-null cell "
-            "(pre-assigned mode requires the caller's cell column to be "
-            "complete, and ivf_assign never emits null)"
-        )
-    n_part = max(1, len(dirty_vals))
+    dirty_vals, n_part = _dirty_cells(tagged, "cell", "semantic_dedup_store_update")
 
     if vec_tbl.latest_version() is None:
         # first batch: the batch operator IS the fold base
@@ -1598,7 +1598,7 @@ def semantic_dedup_store_update(
         vec_tbl.append(tagged.repartitionByRange(n_part, "cell"))
         asg_tbl.append(assign.repartitionByRange(n_part, "cell"))
         return asg_tbl.read(spark)
-    store_dirty = vec_tbl.scan_values(spark, "cell", dirty_vals)
+    store_dirty = vec_tbl.scan_in(spark, "cell", dirty_vals)
     old_assign = asg_tbl.read(spark)
     assign, _ = semantic_dedup_update(
         tagged,

@@ -25,8 +25,25 @@ manifests listing immutable data files, made atomic by ``os.rename``
   writers could both "succeed" and the later one would clobber the
   earlier committed manifest (a lost append).
 
-In production swap this for Delta/Iceberg; the engine's call sites
-(append/overwrite/read/history/compact) are format-agnostic.
+Each public call parses its manifest once and serves the whole call from
+it — a snapshot is its file list plus its deletion vectors, the way Delta
+computes one from the log.  Every read (``read``, ``scan``, ``scan_in``,
+``lookup``, ``read_changes``) goes through one pruned-read path that
+applies the deletion vectors of the version it reads.
+
+In production swap this for Delta/Iceberg; the engine's call sites are
+format-agnostic:
+
+- operators/dedup and operators/similarity stores: ``append``,
+  ``scan_in``, ``read``, ``delete_where`` (with
+  ``prune_files_by_values`` candidates);
+- operators/pipeline state pins: ``append``, ``read``;
+- plans/incremental views: ``appends_only_between``, ``added_files``,
+  ``read``, ``overwrite``;
+- streaming/ingest: ``merge``, ``last_txn_batch``;
+- declared lakehouse entries: ``append``, ``delete_where``,
+  ``delete_where_mor``, ``apply_cdc``, ``optimize``, ``read`` (time
+  travel included).
 """
 
 from __future__ import annotations
@@ -86,7 +103,8 @@ class TransactionalTable:
         # exact regime where the 2^16 default saturates) rebuilds blooms
         # at the sizing the table was created with instead of silently
         # dropping back to the default.  Explicit constructor args win.
-        props = self._table_properties()
+        # Tables committed before properties existed have none.
+        props = (self._manifest() or {}).get("properties", {})
         if not self.bloom_columns and props.get("bloom_columns"):
             self.bloom_columns = tuple(props["bloom_columns"])
         if bloom_bits is None and props.get("bloom_bits") is not None:
@@ -111,14 +129,19 @@ class TransactionalTable:
         with open(self._manifest_path(version)) as f:
             return json.load(f)
 
-    def _table_properties(self, version: int | None = None) -> dict:
-        """Table-level properties recorded in the manifest (bloom sizing /
-        columns — carried commit-to-commit like the schema, absent on
-        tables committed before round 13)."""
+    def _manifest(self, version: int | None = None) -> dict | None:
+        """The manifest of ``version`` (default: latest), or None for a
+        table with no commit yet.  Public calls parse it once here and
+        hand the dict to every helper."""
         v = self.latest_version() if version is None else version
-        if v is None:
-            return {}
-        return self._read_manifest(v).get("properties", {})
+        return None if v is None else self._read_manifest(v)
+
+    def _snapshot(self, version: int | None = None) -> dict:
+        """:meth:`_manifest` for readers: a table with no commit raises."""
+        m = self._manifest(version)
+        if m is None:
+            raise FileNotFoundError(f"no committed version in {self.path}")
+        return m
 
     _UNSET = object()
 
@@ -127,36 +150,37 @@ class TransactionalTable:
         files: list[str],
         op: str,
         txn: tuple[str, int] | None = None,
-        base: int | None | object = _UNSET,
+        base: dict | None | object = _UNSET,
         schema: StructType | None = None,
         deletes: list[str] | object = _UNSET,
     ) -> int:
-        """Commit ``files`` as the snapshot SUCCEEDING version ``base``.
+        """Commit ``files`` as the snapshot SUCCEEDING manifest ``base``.
 
-        ``base`` must be the latest version the caller READ while deriving
-        ``files`` (None for a fresh table).  The committed version is
-        always ``base + 1`` — never re-derived here: recomputing "latest"
-        at link time would let a writer holding a STALE file list commit
-        on top of a concurrent commit it never saw, silently dropping that
-        commit's files (a lost update the put-if-absent link alone cannot
-        catch, since the two writers would claim different version
-        numbers).  If ``base + 1`` was already claimed, the hard link
-        fails atomically and the writer must re-read and retry.
+        ``base`` must be the latest manifest the caller READ while
+        deriving ``files`` (None for a fresh table).  The committed
+        version is always ``base["version"] + 1`` — never re-derived here:
+        recomputing "latest" at link time would let a writer holding a
+        STALE file list commit on top of a concurrent commit it never saw,
+        silently dropping that commit's files (a lost update the
+        put-if-absent link alone cannot catch, since the two writers would
+        claim different version numbers).  If that version was already
+        claimed, the hard link fails atomically and the writer must
+        re-read and retry.
         """
         if base is TransactionalTable._UNSET:
-            base = self.latest_version()
-        version = 0 if base is None else base + 1
+            base = self._manifest()
+        version = 0 if base is None else base["version"] + 1
+        base = base or {}
         # stats carry forward for retained files; newly staged files bring
         # their own footer stats from _pending_stats
-        prev_stats = self._stats(base) if base is not None else {}
-        known = {**prev_stats, **self._pending_stats}
+        known = {**base.get("stats", {}), **self._pending_stats}
         stats = {f: known[f] for f in files if f in known}
         if deletes is TransactionalTable._UNSET:
             # ops that don't touch deletion vectors carry the base's
             # forward; entries for files no longer in the manifest are
             # dead weight (they anti-join against nothing) until a
             # compact/overwrite clears them
-            deletes = self._read_manifest(base).get("deletes", []) if base is not None else []
+            deletes = base.get("deletes", [])
         manifest = {
             "version": version,
             "op": op,
@@ -172,17 +196,14 @@ class TransactionalTable:
         props = (
             {"bloom_columns": list(self.bloom_columns), "bloom_bits": self.bloom_bits}
             if self.bloom_columns
-            else (self._table_properties(base) if base is not None else {})
+            else base.get("properties", {})
         )
         if props:
             manifest["properties"] = props
-        if schema is None and base is not None:
-            # ops that don't change the schema carry the base's forward
-            schema_json = self._read_manifest(base).get("schema")
-            if schema_json is not None:
-                manifest["schema"] = schema_json
-        elif schema is not None:
-            manifest["schema"] = schema.jsonValue()
+        # ops that don't change the schema carry the base's forward
+        schema_json = base.get("schema") if schema is None else schema.jsonValue()
+        if schema_json is not None:
+            manifest["schema"] = schema_json
         if txn is not None:
             # streaming-sink transaction marker (Delta's txn appId/version):
             # lets an idempotent writer detect an already-committed batch
@@ -411,34 +432,6 @@ class TransactionalTable:
                 }
         return out
 
-    def prune_files_by_key(self, col: str, value, version: int | None = None) -> list[str]:
-        """Files a point lookup ``col = value`` must read, from manifest
-        blooms (files without a bloom for ``col`` are conservatively kept
-        — same Inexact contract as :meth:`prune_files`)."""
-        v = self.latest_version() if version is None else version
-        manifest = self._read_manifest(v)
-        stats = manifest.get("stats", {})
-        kept = []
-        for f in manifest["files"]:
-            decoded = self._bloom_entry((stats.get(f) or {}).get("bloom", {}).get(col))
-            if decoded is None:
-                kept.append(f)
-                continue
-            nbits, bitmap = decoded
-            if all(bitmap >> pos & 1 for pos in self._bloom_positions(value, nbits)):
-                kept.append(f)
-        return kept
-
-    def lookup(self, spark: SparkSession, col: str, value, version: int | None = None) -> DataFrame:
-        """Point lookup with bloom file skipping + exact re-filter."""
-        from pyspark.sql import functions as F
-
-        v = self.latest_version() if version is None else version
-        files = self.prune_files_by_key(col, value, v)
-        if not files:
-            return self.read(spark, v).limit(0)
-        return self._read_files(spark, files, v).filter(F.col(col) == F.lit(value))
-
     @staticmethod
     def _collect_stats(paths: list[str]) -> dict[str, dict]:
         """Read per-file numeric column min/max from the Parquet footers.
@@ -475,8 +468,8 @@ class TransactionalTable:
             }
         return out
 
-    def _evolved_schema(self, base: int | None, df: DataFrame) -> StructType | None:
-        """Schema for a commit appending ``df`` on top of version ``base``.
+    def _evolved_schema(self, base: dict | None, df: DataFrame) -> StructType | None:
+        """Schema for a commit appending ``df`` on top of manifest ``base``.
 
         Additive evolution only (the Delta/Iceberg default): new columns
         join the schema as nullable (old files simply lack them — readers
@@ -487,7 +480,7 @@ class TransactionalTable:
         """
         if base is None:
             return df.schema
-        schema_json = self._read_manifest(base).get("schema")
+        schema_json = base.get("schema")
         if schema_json is None:
             # legacy table (committed before schemas were recorded): the full
             # column set is unknown, so committing df.schema could HIDE old
@@ -516,10 +509,10 @@ class TransactionalTable:
         a new column widens the table; old rows read NULL for it.
         """
         new_files = self._stage(df)
-        latest = self.latest_version()
-        prev = self._read_manifest(latest)["files"] if latest is not None else []
-        schema = self._evolved_schema(latest, df)
-        return self._commit(prev + new_files, "append", txn=txn, base=latest, schema=schema)
+        base = self._manifest()
+        prev = base["files"] if base is not None else []
+        schema = self._evolved_schema(base, df)
+        return self._commit(prev + new_files, "append", txn=txn, base=base, schema=schema)
 
     def overwrite(self, df: DataFrame, txn: tuple[str, int] | None = None) -> int:
         """ACID overwrite: new snapshot references only the new files.
@@ -528,7 +521,7 @@ class TransactionalTable:
         The schema is replaced wholesale (overwrite = new table contents);
         time travel still reads each old version under ITS schema.
         """
-        base = self.latest_version()
+        base = self._manifest()
         return self._commit(
             self._stage(df), "overwrite", txn=txn, base=base, schema=df.schema, deletes=[]
         )
@@ -558,11 +551,9 @@ class TransactionalTable:
             raise ValueError(
                 "non-append commit in the requested window: file diff is not a row diff"
             )
-        files = self.added_files(since_version, version)
-        if not files:
-            return self.read(spark, version).limit(0)
-        v = self.latest_version() if version is None else version
-        return self._read_files(spark, files, v)
+        return self._read(
+            spark, self._snapshot(version), self.added_files(since_version, version)
+        )
 
     def appends_only_between(self, since_version: int | None, version: int | None = None) -> bool:
         """True if every commit in (since, version] kept all prior files
@@ -577,13 +568,13 @@ class TransactionalTable:
                 return False
         return True
 
-    def _affected_files(self, spark: SparkSession, files: list[str], marker: DataFrame) -> list[str]:
+    def _affected_files(self, files: list[str], marker: DataFrame) -> list[str]:
         """Physical files containing at least one row of ``marker``
-        (a filtered view of the snapshot carrying ``_file``)."""
-        rows = marker.select("_file").distinct().collect()
-        # scans yield URIs — file:///p (input_file_name) or file:/p
-        # (_metadata.file_path); manifests store plain local paths
-        found = {_localpath(r._file) for r in rows}
+        (a filtered view of the snapshot carrying ``_dv_file``)."""
+        rows = marker.select("_dv_file").distinct().collect()
+        # _metadata.file_path is a URI (file:/p); manifests store plain
+        # local paths
+        found = {_localpath(r._dv_file) for r in rows}
         return [f for f in files if f in found]
 
     def delete_where(
@@ -609,83 +600,64 @@ class TransactionalTable:
         from pyspark.sql import functions as F
 
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        latest = self.latest_version()
-        dvs = self._read_manifest(latest).get("deletes", [])
-        files = self._read_manifest(latest)["files"]
+        m = self._manifest()
+        files = m["files"]
         search = files if candidate_files is None else candidate_files
         if not search:
-            return latest
+            return m["version"]
         # version-schema reads: a post-evolution file set is heterogeneous,
         # and a bare parquet read would take one file's footer as THE schema
         # (dropping newer columns from rewritten survivors); _live applies
         # deletion vectors so MOR-deleted rows can't resurrect in a rewrite
-        tagged = self._live_tagged(spark, search, latest)
-        affected = self._affected_files(spark, search, tagged.filter(cond))
+        tagged = self._live(spark, search, m, tagged=True)
+        affected = self._affected_files(search, tagged.filter(cond))
         if not affected:
-            return latest  # nothing to delete — no new version needed
-        survivors = (
-            self._apply_deletes(spark, self._read_files(spark, affected, latest), dvs)
-            .filter(~cond)
-        )
+            return m["version"]  # nothing to delete — no new version needed
+        survivors = self._live(spark, affected, m).filter(~cond)
         keep = [f for f in files if f not in set(affected)]
         # round 14: emptiness decided from the staged footers, not a
         # separate limit(1).count() probe job (see _stage_nonempty)
         new_files = self._stage_nonempty(survivors)
-        return self._commit(keep + new_files, "delete", base=latest)
+        return self._commit(keep + new_files, "delete", base=m)
 
     # -- merge-on-read deletes (deletion vectors) ---------------------------
 
-    def _tag_pos(self, df: DataFrame) -> DataFrame:
-        """Append the physical row address (``_dv_file``, ``_dv_pos``)
-        from the parquet reader's hidden ``_metadata`` column — Spark's
-        native equivalent of Iceberg's (file, position) delete key."""
+    def _live(
+        self, spark: SparkSession, files: list[str], m: dict, tagged: bool = False
+    ) -> DataFrame:
+        """Read ``files`` of snapshot ``m`` with its deletion vectors
+        applied — the one deletion-vector path of every read and mutation.
+
+        Rows are tagged with their physical address (``_dv_file``,
+        ``_dv_pos``) from the parquet reader's hidden ``_metadata`` column
+        — Spark's native equivalent of Iceberg's (file, position) delete
+        key — and vector-masked rows leave through one BROADCAST anti-join
+        on that address: deletion vectors are tiny next to the data they
+        mask, so the read stays a single scan with a map-side filter,
+        never a shuffle.  Tagging happens BEFORE the join
+        (``input_file_name()`` refuses the join's second parquet source;
+        the metadata column binds to its scan regardless).  The tags are
+        kept only when ``tagged`` (mutations locate rows by them); a
+        snapshot with no vectors read untagged adds no metadata columns.
+        """
         from pyspark.sql import functions as F
 
-        return df.select(
+        df = self._read_files(spark, files, m)
+        deletes = m.get("deletes", [])
+        if not (deletes or tagged):
+            return df
+        df = df.select(
             "*",
             F.col("_metadata.file_path").alias("_dv_file"),
             F.col("_metadata.row_index").alias("_dv_pos"),
         )
-
-    def _apply_deletes(self, spark: SparkSession, df: DataFrame, deletes: list[str]) -> DataFrame:
-        """Filter out rows addressed by the deletion-vector files: one
-        BROADCAST anti-join on (file path, row position) — deletion
-        vectors are tiny next to the data they mask, so the read stays a
-        single scan with a map-side filter, never a shuffle."""
-        from pyspark.sql import functions as F
-
-        if not deletes:
-            return df
-        dv = spark.read.parquet(*deletes).select("file_path", "row_index")
-        tagged = self._tag_pos(df)
-        cond = (F.col("_dv_file") == F.col("file_path")) & (
-            F.col("_dv_pos") == F.col("row_index")
-        )
-        return tagged.join(F.broadcast(dv), cond, "left_anti").drop("_dv_file", "_dv_pos")
-
-    def _live(self, spark: SparkSession, files: list[str], version: int) -> DataFrame:
-        """Version-schema read with that version's deletion vectors applied."""
-        return self._apply_deletes(
-            spark,
-            self._read_files(spark, files, version),
-            self._read_manifest(version).get("deletes", []),
-        )
-
-    def _live_tagged(self, spark: SparkSession, files: list[str], version: int) -> DataFrame:
-        """DV-applied read carrying ``_file`` (the physical source path).
-
-        Tagged from ``_metadata.file_path`` BEFORE the deletion-vector
-        anti-join: ``input_file_name()`` refuses multi-source plans (the
-        DV join adds a second parquet source), and the metadata column
-        binds to its scan regardless."""
-        from pyspark.sql import functions as F
-
-        df = self._read_files(spark, files, version).withColumn(
-            "_file", F.col("_metadata.file_path")
-        )
-        return self._apply_deletes(
-            spark, df, self._read_manifest(version).get("deletes", [])
-        )
+        if deletes:
+            dv = spark.read.parquet(*deletes).select("file_path", "row_index")
+            cond = (F.col("_dv_file") == F.col("file_path")) & (
+                F.col("_dv_pos") == F.col("row_index")
+            )
+            df = df.join(F.broadcast(dv), cond, "left_anti")
+        return df if tagged else df.drop("_dv_file", "_dv_pos")
 
     def delete_where_mor(self, spark: SparkSession, condition) -> int:
         """Merge-on-read DELETE (Iceberg-v2-style positional deletes):
@@ -704,64 +676,7 @@ class TransactionalTable:
         from pyspark.sql import functions as F
 
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        latest = self.latest_version()
-        m = self._read_manifest(latest)
-        files = m["files"]
-        old = m.get("deletes", [])
-        live = self._tag_pos(self._read_files(spark, files, latest))
-        if old:
-            dv = self.spark_read_dv(spark, old)
-            live = live.join(
-                F.broadcast(dv),
-                (F.col("_dv_file") == F.col("file_path"))
-                & (F.col("_dv_pos") == F.col("row_index")),
-                "left_anti",
-            )
-        matched = live.filter(cond).select(
-            F.col("_dv_file").alias("file_path"), F.col("_dv_pos").alias("row_index")
-        )
-        return self._commit_dv(matched, files, old, latest)
-
-    def _commit_dv(self, matched: DataFrame, files, old, latest) -> int:
-        """Stage a deletion-vector DataFrame and commit it; on the
-        no-match path and on commit failure the staged directory is
-        removed so nothing unreferenced (and vacuum-invisible) leaks
-        inside the table path."""
-        stage_dir = os.path.join(self.path, f"deletes-{uuid.uuid4().hex}")
-        matched.write.parquet(stage_dir)
-        paths = [
-            os.path.join(stage_dir, f)
-            for f in sorted(os.listdir(stage_dir))
-            if f.endswith(".parquet")
-        ]
-        import pyarrow.parquet as pq
-
-        if sum(pq.ParquetFile(p).metadata.num_rows for p in paths) == 0:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            return latest  # no matches — no new version needed
-        try:
-            return self._commit(files, "delete-mor", base=latest, deletes=old + paths)
-        except Exception:
-            # reclaim the stage ONLY if no durable manifest references it:
-            # _commit's os.link can succeed (version N+1 durable, pointing
-            # at these vectors) and still raise afterwards — deleting then
-            # would corrupt the committed version.  Exception, not
-            # BaseException: a KeyboardInterrupt in that window must not
-            # trigger cleanup either.
-            try:
-                m = self._read_manifest(self.latest_version())
-                referenced = any(
-                    p.startswith(stage_dir) for p in m.get("deletes", [])
-                )
-            except Exception:
-                referenced = True  # can't prove it's orphaned — keep it
-            if not referenced:
-                shutil.rmtree(stage_dir, ignore_errors=True)
-            raise
-
-    @staticmethod
-    def spark_read_dv(spark: SparkSession, deletes: list[str]) -> DataFrame:
-        return spark.read.parquet(*deletes).select("file_path", "row_index")
+        return self._delete_mor(spark, lambda live: live.filter(cond))
 
     def delete_keys_mor(self, spark: SparkSession, keys: DataFrame, key: str) -> int:
         """Merge-on-read DELETE by KEY SET: deletion vectors for every
@@ -770,24 +685,56 @@ class TransactionalTable:
         is a semi-join, so the key set can be arbitrarily large; it is
         broadcast when small and shuffles otherwise (AQE's call).
         """
+        return self._delete_mor(
+            spark, lambda live: live.join(keys.select(key).distinct(), key, "left_semi")
+        )
+
+    def _delete_mor(self, spark: SparkSession, match) -> int:
+        """Shared body of the merge-on-read deletes: ``match`` narrows the
+        live, address-tagged snapshot to the rows to delete, whose
+        (file, row position) pairs become one new deletion-vector file.
+
+        The vector is staged and committed; on the no-match path and on
+        commit failure the staged directory is removed so nothing
+        unreferenced (and vacuum-invisible) leaks inside the table path.
+        """
+        import pyarrow.parquet as pq
         from pyspark.sql import functions as F
 
-        latest = self.latest_version()
-        m = self._read_manifest(latest)
-        files, old = m["files"], m.get("deletes", [])
-        live = self._tag_pos(self._read_files(spark, files, latest))
-        if old:
-            dv = self.spark_read_dv(spark, old)
-            live = live.join(
-                F.broadcast(dv),
-                (F.col("_dv_file") == F.col("file_path"))
-                & (F.col("_dv_pos") == F.col("row_index")),
-                "left_anti",
-            )
-        matched = live.join(keys.select(key).distinct(), key, "left_semi").select(
+        m = self._manifest()
+        matched = match(self._live(spark, m["files"], m, tagged=True)).select(
             F.col("_dv_file").alias("file_path"), F.col("_dv_pos").alias("row_index")
         )
-        return self._commit_dv(matched, files, old, latest)
+        stage_dir = os.path.join(self.path, f"deletes-{uuid.uuid4().hex}")
+        matched.write.parquet(stage_dir)
+        paths = [
+            os.path.join(stage_dir, f)
+            for f in sorted(os.listdir(stage_dir))
+            if f.endswith(".parquet")
+        ]
+        if sum(pq.ParquetFile(p).metadata.num_rows for p in paths) == 0:
+            shutil.rmtree(stage_dir, ignore_errors=True)
+            return m["version"]  # no matches — no new version needed
+        try:
+            return self._commit(
+                m["files"], "delete-mor", base=m, deletes=m.get("deletes", []) + paths
+            )
+        except Exception:
+            # reclaim the stage ONLY if no durable manifest references it:
+            # _commit's os.link can succeed (version N+1 durable, pointing
+            # at these vectors) and still raise afterwards — deleting then
+            # would corrupt the committed version.  Exception, not
+            # BaseException: a KeyboardInterrupt in that window must not
+            # trigger cleanup either.
+            try:
+                referenced = any(
+                    p.startswith(stage_dir) for p in self._manifest().get("deletes", [])
+                )
+            except Exception:
+                referenced = True  # can't prove it's orphaned — keep it
+            if not referenced:
+                shutil.rmtree(stage_dir, ignore_errors=True)
+            raise
 
     def apply_cdc(
         self,
@@ -859,54 +806,72 @@ class TransactionalTable:
         """
         from pyspark.sql import functions as F
 
-        latest = self.latest_version()
-        if latest is None:
-            return self._commit(self._stage(source), "merge", txn=txn, base=latest, schema=source.schema)
-        schema = self._evolved_schema(latest, source)
-        files = self._read_manifest(latest)["files"]
-        dvs = self._read_manifest(latest).get("deletes", [])
+        m = self._manifest()
+        if m is None:
+            return self._commit(self._stage(source), "merge", txn=txn, base=m, schema=source.schema)
+        schema = self._evolved_schema(m, source)
+        files = m["files"]
         keys = source.select(key).distinct()
-        tagged = self._live_tagged(spark, files, latest)
-        affected = self._affected_files(spark, files, tagged.join(F.broadcast(keys), key, "left_semi"))
+        tagged = self._live(spark, files, m, tagged=True)
+        affected = self._affected_files(files, tagged.join(F.broadcast(keys), key, "left_semi"))
         keep = [f for f in files if f not in set(affected)]
         new_files = []
         if affected:
-            survivors = self._apply_deletes(
-                spark, self._read_files(spark, affected, latest), dvs
-            ).join(F.broadcast(keys), key, "left_anti")
+            survivors = self._live(spark, affected, m).join(F.broadcast(keys), key, "left_anti")
             # round 14: emptiness from staged footers, no probe job
             new_files += self._stage_nonempty(survivors)
         new_files += self._stage(source)
-        return self._commit(keep + new_files, "merge", txn=txn, base=latest, schema=schema)
+        return self._commit(keep + new_files, "merge", txn=txn, base=m, schema=schema)
 
     # -- read paths ----------------------------------------------------------
 
-    def _read_files(self, spark: SparkSession, files: list[str], version: int) -> DataFrame:
-        """Read ``files`` under the schema committed at ``version``.
+    def _read_files(self, spark: SparkSession, files: list[str], m: dict) -> DataFrame:
+        """Read ``files`` under the schema committed in manifest ``m``.
 
         The explicit schema is what makes additive evolution work: files
         written before a column existed simply lack it in their footer and
         the reader fills NULL — no mergeSchema footer-sweep job (which at
         100 TB reads every footer just to plan the scan)."""
-        schema_json = self._read_manifest(version).get("schema")
+        schema_json = m.get("schema")
         reader = spark.read
         if schema_json is not None:
             reader = reader.schema(StructType.fromJson(schema_json))
         return reader.parquet(*files)
 
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        """Consistent snapshot read; ``version`` enables time travel.
+    def _read(
+        self, spark: SparkSession, m: dict, files: list[str] | None = None, pred=None
+    ) -> DataFrame:
+        """The one pruned-read path: ``files`` (default: all of ``m``'s) is
+        a manifest-pruned superset of the files holding matches, ``pred``
+        the exact re-filter — the reference's Inexact pushdown contract
+        (pc-format/src/table.rs:128-155).  Deletion vectors of ``m``
+        apply; an empty prune reads the snapshot's shape with no rows.
 
         Each version is read under the schema COMMITTED AT that version —
         time travel to before a column was added shows the old shape.
         """
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no committed version in {self.path}")
-        files = self._read_manifest(v)["files"]
-        if not files:
+        if not m["files"]:
             raise FileNotFoundError("empty snapshot")
-        return self._live(spark, files, v)
+        if files is None:
+            files = m["files"]
+        if not files:
+            return self._live(spark, m["files"], m).limit(0)
+        df = self._live(spark, files, m)
+        return df if pred is None else df.filter(pred)
+
+    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
+        """Consistent snapshot read; ``version`` enables time travel."""
+        return self._read(spark, self._snapshot(version))
+
+    @staticmethod
+    def _prune(m: dict, keep) -> list[str]:
+        """The one walk over a manifest's file stats: the files (in
+        manifest order) whose stats entry ``keep`` admits.  Files without
+        recorded stats arrive as ``{}``, which every ``_*_test`` keeps — the
+        Inexact contract: pruning may keep extra files, never drop one
+        holding a match."""
+        stats = m.get("stats", {})
+        return [f for f in m["files"] if keep(stats.get(f) or {})]
 
     def prune_files(self, ranges: dict[str, tuple[float, float]], version: int | None = None) -> list[str]:
         """Manifest-stats file skipping: the files a scan with the given
@@ -919,21 +884,17 @@ class TransactionalTable:
         "externalized manifest index"; same role as the reference's
         row-group R-tree, pc-io/src/helpers.rs:35-125).
         """
-        v = self.latest_version() if version is None else version
-        manifest = self._read_manifest(v)
-        stats = manifest.get("stats", {})
-        kept = []
-        for f in manifest["files"]:
-            st = stats.get(f)
-            keep = True
-            if st:
-                for col, (lo, hi) in ranges.items():
-                    if col in st["min"] and (st["max"][col] < lo or st["min"][col] > hi):
-                        keep = False
-                        break
-            if keep:
-                kept.append(f)
-        return kept
+        return self._prune(self._snapshot(version), self._range_test(ranges))
+
+    @staticmethod
+    def _range_test(ranges: dict[str, tuple[float, float]]):
+        def keep(st: dict) -> bool:
+            mins, maxs = st.get("min", {}), st.get("max", {})
+            return not any(
+                c in mins and (maxs[c] < lo or mins[c] > hi) for c, (lo, hi) in ranges.items()
+            )
+
+        return keep
 
     def prune_files_by_values(
         self, col: str, values, version: int | None = None
@@ -950,56 +911,53 @@ class TransactionalTable:
         the reference's row-group R-tree performs inside one file
         (``pc-io/src/helpers.rs:35-125``), lifted to the commit log.
         """
-        v = self.latest_version() if version is None else version
-        manifest = self._read_manifest(v)
-        stats = manifest.get("stats", {})
+        return self._prune(self._snapshot(version), self._values_test(col, values))
+
+    @staticmethod
+    def _values_test(col: str, values):
         vals = sorted(set(values))
-        kept = []
-        for f in manifest["files"]:
-            st = stats.get(f)
-            if not st or col not in st.get("min", {}):
-                kept.append(f)
-                continue
+
+        def keep(st: dict) -> bool:
+            if col not in st.get("min", {}):
+                return True
             lo, hi = st["min"][col], st["max"][col]
-            if any(lo <= x <= hi for x in vals):
-                kept.append(f)
-        return kept
+            return any(lo <= x <= hi for x in vals)
+
+        return keep
 
     def prune_files_by_keys(
         self, col: str, values, version: int | None = None
     ) -> list[str]:
         """Files an IN-list probe ``col IN (values)`` must read, from the
-        manifest BLOOMS — the multi-key form of :meth:`prune_files_by_key`
-        and the point-lookup complement of :meth:`prune_files_by_values`
-        (whose min/max path needs the table RANGE-clustered on ``col``;
-        blooms prune hash-scattered keys too).  A file is kept iff its
-        bloom admits AT LEAST ONE probe key; files without a bloom for
-        ``col`` are conservatively kept (the Inexact contract).
+        manifest BLOOMS — the point-lookup complement of
+        :meth:`prune_files_by_values` (whose min/max path needs the table
+        RANGE-clustered on ``col``; blooms prune hash-scattered keys too).
+        A file is kept iff its bloom admits AT LEAST ONE probe key; files
+        without a bloom for ``col`` are conservatively kept (the Inexact
+        contract).
 
         The LSH-index shape (round 12): a near-dup batch probes the
         signature store with its band keys — each key lives in O(1) files
         per commit (hash-clustered writes), so the batch reads the files
         holding true bucket collisions instead of the whole store.
         """
-        v = self.latest_version() if version is None else version
-        manifest = self._read_manifest(v)
-        stats = manifest.get("stats", {})
+        return self._prune(self._snapshot(version), self._bloom_test(col, values))
+
+    @classmethod
+    def _bloom_test(cls, col: str, values):
         keys = set(values)
         pos_cache: dict[int, list[list[int]]] = {}
-        kept = []
-        for f in manifest["files"]:
-            decoded = self._bloom_entry((stats.get(f) or {}).get("bloom", {}).get(col))
+
+        def keep(st: dict) -> bool:
+            decoded = cls._bloom_entry(st.get("bloom", {}).get(col))
             if decoded is None:
-                kept.append(f)
-                continue
+                return True
             nbits, bitmap = decoded
             if nbits not in pos_cache:
-                pos_cache[nbits] = [self._bloom_positions(x, nbits) for x in keys]
-            if any(
-                all(bitmap >> pos & 1 for pos in ps) for ps in pos_cache[nbits]
-            ):
-                kept.append(f)
-        return kept
+                pos_cache[nbits] = [cls._bloom_positions(x, nbits) for x in keys]
+            return any(all(bitmap >> pos & 1 for pos in ps) for ps in pos_cache[nbits])
+
+        return keep
 
     @staticmethod
     def _in_filter(col: str, vals: list):
@@ -1043,19 +1001,6 @@ class TransactionalTable:
             return F.col(col).isin(list(vals))
         return F.expr(f"`{col.replace('`', '``')}` IN ({lits})")
 
-    def scan_keys(
-        self, spark: SparkSession, col: str, values, version: int | None = None
-    ) -> DataFrame:
-        """Snapshot read of ``col IN (values)`` via bloom file skipping +
-        exact re-filter (blooms admit false positives, never negatives)."""
-        from pyspark.sql import functions as F
-
-        v = self.latest_version() if version is None else version
-        files = self.prune_files_by_keys(col, values, v)
-        if not files:
-            return self.read(spark, v).limit(0)
-        return self._live(spark, files, v).filter(self._in_filter(col, list(values)))
-
     def scan_in(
         self,
         spark: SparkSession,
@@ -1068,7 +1013,8 @@ class TransactionalTable:
         Python iterable OR a single-column DataFrame — the 100 TB shape,
         where a batch's probe set can exceed what a driver should collect
         (the :func:`~agile_lakehouse_spark.operators.dedup.
-        minhash_store_backed_update` escape hatch).
+        minhash_store_backed_update` escape hatch).  The only key-set read:
+        :meth:`lookup` is its one-key form.
 
         DataFrame keys are taken up to ``max_prune_keys``: at or under
         the cap the distinct key list drives manifest pruning — min/max
@@ -1083,39 +1029,27 @@ class TransactionalTable:
         """
         from pyspark.sql import functions as F
 
-        v = self.latest_version() if version is None else version
+        m = self._snapshot(version)
         if isinstance(keys, DataFrame):
             kdf = keys.select(F.col(keys.columns[0]).alias(col)).distinct()
             head = kdf.take(max_prune_keys + 1)
             if len(head) > max_prune_keys:
-                return self.read(spark, v).join(F.broadcast(kdf), col, "left_semi")
+                return self._read(spark, m).join(F.broadcast(kdf), col, "left_semi")
             vals = [r[0] for r in head]
         else:
             vals = list(keys)
-        files = set(self.prune_files_by_values(col, vals, v))
+        in_range = self._values_test(col, vals)
+        in_bloom = self._bloom_test(col, vals)
         try:
-            files &= set(self.prune_files_by_keys(col, vals, v))
+            files = self._prune(m, lambda st: in_range(st) and in_bloom(st))
         except TypeError:
-            pass  # float keys: blooms excluded by contract, range stats stand
-        manifest_files = self._read_manifest(v)["files"]
-        kept = [f for f in manifest_files if f in files]
-        if not kept:
-            return self.read(spark, v).limit(0)
-        return self._live(spark, kept, v).filter(self._in_filter(col, vals))
+            # float keys: blooms excluded by contract, range stats stand
+            files = self._prune(m, in_range)
+        return self._read(spark, m, files, self._in_filter(col, vals))
 
-    def scan_values(
-        self, spark: SparkSession, col: str, values, version: int | None = None
-    ) -> DataFrame:
-        """Snapshot read of ``col IN (values)``: manifest-pruned file list
-        + exact re-filter (pruning is file-granular, a kept file may hold
-        other keys too)."""
-        from pyspark.sql import functions as F
-
-        v = self.latest_version() if version is None else version
-        files = self.prune_files_by_values(col, values, v)
-        if not files:
-            return self.read(spark, v).limit(0)
-        return self._live(spark, files, v).filter(self._in_filter(col, list(values)))
+    def lookup(self, spark: SparkSession, col: str, value, version: int | None = None) -> DataFrame:
+        """Point lookup ``col = value``: :meth:`scan_in` with one key."""
+        return self.scan_in(spark, col, [value], version)
 
     def scan(
         self,
@@ -1132,17 +1066,13 @@ class TransactionalTable:
         """
         from pyspark.sql import functions as F
 
+        m = self._snapshot(version)
         if not ranges:
-            return self.read(spark, version)
-        v = self.latest_version() if version is None else version
-        files = self.prune_files(ranges, version)
-        if not files:
-            return self.read(spark, version).limit(0)
-        df = self._live(spark, files, v)
+            return self._read(spark, m)
         pred = F.lit(True)
         for col, (lo, hi) in ranges.items():
             pred = pred & (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-        return df.filter(pred)
+        return self._read(spark, m, self._prune(m, self._range_test(ranges)), pred)
 
     def history(self) -> list[dict]:
         return [self._read_manifest(v) for v in self.versions()]

@@ -1,13 +1,14 @@
-"""Round-13 optimization measurement pass (guide §1: measure first).
+"""Optimization measurement pass: measure before changing anything.
 
 For every bench entry (or the names given on argv): capture the
-``explain("formatted")`` plan to plans/r14/<name>_before.txt (or _after),
+``explain("formatted")`` plan to DIR/<name>_before.txt (or _after),
 count Exchange / BatchEvalPython / ArrowEvalPython / SortMergeJoin /
 BroadcastHashJoin nodes, and time N warm noop-sink runs so per-entry work
-is attributable before anything is changed.
+is attributable before anything is changed.  The per-entry results merge
+into DIR/profile_before.json (or _after).
 
 Usage:
-    python scripts/profile_r14.py [--after] [--reps N] [name ...]
+    python scripts/profile_plans.py --out DIR [--after] [--reps N] [name ...]
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ import re
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from agile_lakehouse_spark import declared, get_session  # noqa: E402
 
@@ -50,24 +51,35 @@ def plan_counts(plan: str) -> dict[str, int]:
     return out
 
 
+def _take_option(args: list[str], flag: str) -> str | None:
+    """Remove ``flag VALUE`` from ``args`` and return VALUE (None if the
+    flag is absent); a flag with no value after it exits with usage."""
+    if flag not in args:
+        return None
+    i = args.index(flag)
+    if i + 1 >= len(args):
+        sys.exit(f"{flag} needs a value\n{__doc__}")
+    value = args[i + 1]
+    del args[i : i + 2]
+    return value
+
+
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
+    args = sys.argv[1:]
     suffix = "_after" if "--after" in args else "_before"
     args = [a for a in args if a != "--after"]
-    reps = 2
-    if "--reps" in args:
-        i = args.index("--reps")
-        reps = int(args[i + 1])
-        del args[i : i + 2]
+    out_dir = _take_option(args, "--out")
+    if out_dir is None:
+        sys.exit(f"--out DIR is required\n{__doc__}")
+    reps = int(_take_option(args, "--reps") or 2)
     names = args or None
 
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import bench
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_session("profile-r14")
+    spark = get_session("profile")
     spark.sparkContext.setLogLevel("ERROR")
-    os.makedirs("plans/r14", exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
 
     # warm like bench.py does
     for t in ("lineitem", "orders", "documents", "embeddings", "events"):
@@ -90,7 +102,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        with open(f"plans/r14/{name}{suffix}.txt", "w") as fh:
+        with open(os.path.join(out_dir, f"{name}{suffix}.txt"), "w") as fh:
             fh.write(plan)
         t0 = time.time()
         bench.execute_fully(df)
@@ -111,7 +123,7 @@ def main() -> None:
         print(json.dumps({name: results[name]}), flush=True)
         spark.sparkContext.setJobDescription(None)
 
-    out = f"plans/r14/profile{suffix}.json"
+    out = os.path.join(out_dir, f"profile{suffix}.json")
     mode = json.load(open(out)) if os.path.exists(out) else {}
     mode.update(results)
     with open(out, "w") as fh:

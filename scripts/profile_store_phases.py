@@ -47,10 +47,8 @@ def main() -> None:
         lambda p: p, schema="k int, v double"
     ).count()
 
-    for m in ("_stage", "_build_blooms", "_collect_stats_wrapped", "append",
-              "delete_where", "scan_in", "scan_values", "read"):
-        if hasattr(snapshots.TransactionalTable, m):
-            _wrap(snapshots.TransactionalTable, m)
+    for m in ("_stage", "_build_blooms", "append", "delete_where", "scan_in", "read"):
+        _wrap(snapshots.TransactionalTable, m)
 
     # time localCheckpoint calls too (the pair-compute phase)
     from pyspark.sql import DataFrame as _DF

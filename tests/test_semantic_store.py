@@ -128,10 +128,10 @@ def test_prune_files_by_values_and_scan_values(spark, tmp_path):
     files = tbl._read_manifest(tbl.latest_version())["files"]
     pruned = tbl.prune_files_by_values("k", [3])
     assert set(pruned) <= set(files) and len(pruned) < len(files)
-    got = sorted(tuple(r) for r in tbl.scan_values(spark, "k", [3, 5]).collect())
+    got = sorted(tuple(r) for r in tbl.scan_in(spark, "k", [3, 5]).collect())
     assert got == [(3, 30), (5, 50)]
     # empty prune result -> empty frame, same schema
-    assert tbl.scan_values(spark, "k", [99]).count() == 0
+    assert tbl.scan_in(spark, "k", [99]).count() == 0
     # a column without recorded stats keeps every file (Inexact contract)
     assert tbl.prune_files_by_values("nosuch", [1]) == files
 
@@ -156,4 +156,23 @@ def test_delete_where_candidate_files(spark, tmp_path):
 def test_scan_values_empty_list(spark, tmp_path, nvals):
     tbl = TransactionalTable(str(tmp_path / "empty"))
     tbl.append(spark.createDataFrame([(1, 2)], "k long, v long"))
-    assert tbl.scan_values(spark, "k", []).count() == 0
+    assert tbl.scan_in(spark, "k", []).count() == 0
+
+
+@pytest.mark.parametrize(
+    "op", ["semantic_dedup_store_update", "embedding_store_backed_update"]
+)
+def test_store_updates_reject_null_cell(spark, tmp_path, op):
+    """Both store-backed updates refuse a batch with a NULL cell and name
+    themselves in the error (a NULL would crash the min/max prune and be
+    dropped by the IN-list)."""
+    batch = spark.createDataFrame(
+        [(1, 0, [1.0, 0.0]), (2, None, [0.0, 1.0])],
+        "vec_id long, cell long, embedding array<float>",
+    )
+    store = str(tmp_path / "nullcell")
+    with pytest.raises(ValueError, match=f"^{op}: .*NULL cell"):
+        if op == "semantic_dedup_store_update":
+            similarity.semantic_dedup_store_update(spark, batch, None, store)
+        else:
+            similarity.embedding_store_backed_update(spark, batch, store)

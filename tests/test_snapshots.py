@@ -411,10 +411,10 @@ def test_bloom_point_lookup_pruning(spark, tmp_path):
         got = t.lookup(spark, "k", k).collect()
         assert [(r.k, r.v) for r in got] == [(k, k * 3)]
         # and the probe read fewer files than the full snapshot
-        assert len(t.prune_files_by_key("k", k)) < len(files)
+        assert len(t.prune_files_by_keys("k", [k])) < len(files)
 
     # absent keys: usually zero files survive the bloom (fp-rate bounded)
-    miss = sum(len(t.prune_files_by_key("k", k)) for k in range(10_000, 10_050))
+    miss = sum(len(t.prune_files_by_keys("k", [k])) for k in range(10_000, 10_050))
     assert miss <= 5, f"bloom false-positive rate too high: {miss} file hits"
     assert t.lookup(spark, "k", 10_123).count() == 0
 
@@ -462,7 +462,7 @@ def test_bloom_probe_key_canonicalization(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(TypeError):
-        t.prune_files_by_key("k", 777.5)
+        t.prune_files_by_keys("k", [777.5])
 
 
 def test_bloom_probe_bool_column(spark, tmp_path):
@@ -504,6 +504,11 @@ def test_mor_deletes_accumulate_and_scan_applies_them(spark, table):
     assert table.read(spark).count() == 30
     got = table.scan(spark, {"k": (0.0, 100.0)}).agg(F.count("*")).collect()[0][0]
     assert got == 30
+    # point and key-set reads apply the vectors of the version they read
+    assert table.lookup(spark, "k", 5).count() == 0
+    assert [(r.k, r.v) for r in table.lookup(spark, "k", 25).collect()] == [(25, 50)]
+    assert [r.k for r in table.scan_in(spark, "k", [5, 25, 45]).collect()] == [25]
+    assert [(r.k, r.v) for r in table.lookup(spark, "k", 5, version=0).collect()] == [(5, 10)]
     # no-match delete commits nothing new
     v = table.latest_version()
     assert table.delete_where_mor(spark, "k > 999") == v

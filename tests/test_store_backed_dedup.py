@@ -340,11 +340,11 @@ def test_prune_files_by_keys_bloom_semantics(spark, tmp_path):
     files = tbl._read_manifest(tbl.latest_version())["files"]
     kept = tbl.prune_files_by_keys("s", ["key3"])
     assert set(kept) <= set(files) and len(kept) < len(files)
-    got = sorted(tuple(r) for r in tbl.scan_keys(spark, "s", ["key3", "key9"]).collect())
+    got = sorted(tuple(r) for r in tbl.scan_in(spark, "s", ["key3", "key9"]).collect())
     assert got == [("key3", 3), ("key9", 9)]
     # empty probe list prunes everything; absent key returns no rows
     assert tbl.prune_files_by_keys("s", []) == []
-    assert tbl.scan_keys(spark, "s", ["nope"]).count() == 0
+    assert tbl.scan_in(spark, "s", ["nope"]).count() == 0
     # a column without blooms keeps every file (Inexact contract)
     assert tbl.prune_files_by_keys("v", [3]) == files
 
@@ -393,7 +393,7 @@ def test_bloom_bits_knob_and_mixed_size_manifest(spark, tmp_path):
     kept = legacy.prune_files_by_keys("s", ["k3"])
     assert set(kept) < set(m["files"])  # prunes across both formats
     got = sorted(
-        tuple(r) for r in legacy.scan_keys(spark, "s", ["k3", "extra"]).collect()
+        tuple(r) for r in legacy.scan_in(spark, "s", ["k3", "extra"]).collect()
     )
     assert got == [("extra", 99), ("k3", 3)]
 
@@ -430,7 +430,7 @@ def test_bloom_knobs_persist_as_table_properties(spark, tmp_path):
     # and the rebuilt blooms actually prune + read correctly
     kept = bare.prune_files_by_keys("s", ["k3"])
     assert set(kept) < set(m2["files"])
-    assert [tuple(r) for r in bare.scan_keys(spark, "s", ["k3"]).collect()] == [("k3", 3)]
+    assert [tuple(r) for r in bare.scan_in(spark, "s", ["k3"]).collect()] == [("k3", 3)]
 
     # explicit args override the persisted properties
     override = TransactionalTable(path, bloom_columns=("v",), bloom_bits=1 << 17)
