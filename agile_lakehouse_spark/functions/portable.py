@@ -83,14 +83,6 @@ def hex15_duck(e: str) -> str:
     return hexfold_duck(f"md5({e})")
 
 
-def minhash_spark(e: str, a: int, b: int) -> str:
-    return f"(({a} * ({hex15_spark(e)} % {MERSENNE_P}) + {b}) % {MERSENNE_P})"
-
-
-def minhash_duck(e: str, a: int, b: int) -> str:
-    return f"(({a} * ({hex15_duck(e)} % {MERSENNE_P}) + {b}) % {MERSENNE_P})"
-
-
 # --- character shingles ----------------------------------------------------
 
 

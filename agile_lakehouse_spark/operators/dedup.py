@@ -217,17 +217,14 @@ def exact_dedup_store_backed_update(
     store_path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    target_files: int = 8,
-    bloom_bits: int | None = None,
     key_mode: str = "text",
-    max_prune_keys: int = 100_000,
     caches: list | None = None,
     fold_only: bool = False,
 ) -> DataFrame | None:
     """The PRODUCTION shape of :func:`exact_dedup_incremental` +
     :func:`exact_dedup_store_update`: the (text, keep_id) state lives in
-    a :class:`~agile_lakehouse_spark.plans.snapshots.TransactionalTable`
-    under ``store_path`` with commit-log BLOOMS on the text key, and the
+    a :class:`~agile_lakehouse_spark.plans.snapshots.StateStore` under
+    ``store_path`` with commit-log BLOOMS on the text key, and the
     batch's store read is pruned at the file level to files containing
     at least one batch text (``prune_files_by_keys`` — hash-scattered
     keys, so blooms prune where range stats cannot; the
@@ -239,9 +236,9 @@ def exact_dedup_store_backed_update(
     (blooms have no false negatives), so the pruned left join and the
     novel-text anti-join see exactly the store rows that can match —
     then appends the novel (text, keep_id) rows RANGE-clustered on the
-    text key via ``repartitionByRange`` (same key -> one file per
-    commit, keeping future probes O(1) files per key; see the inline
-    note for why a hash repartition is elided here).
+    text key via ``repartitionByRange`` into 8 files (same key -> one
+    file per commit, keeping future probes O(1) files per key; see the
+    inline note for why a hash repartition is elided here).
 
     ``key_mode="fingerprint"`` is the 100 TB shape (round 13, VERDICT
     r12 item 3): the store is keyed on the portable 128-bit md5 content
@@ -256,25 +253,14 @@ def exact_dedup_store_backed_update(
     Both modes return identical verdicts (doc_id, keep_id, kept) and
     are gated by the same oracle SQL (dq21l / dq21m).
 
-    The returned verdicts are eagerly ``localCheckpoint``-ed BEFORE the
-    append (round 13, VERDICT r12 item 5): the verdict plan reads the
-    pre-append snapshot by explicit file list, so a caller running
-    ``optimize()``/``vacuum()`` between update and consumption would
-    otherwise recompute from rewritten/deleted files.
-
-    ``fold_only=True`` (round 13, guide §1.2 "don't compute things you
-    throw away"): fold the batch into the store and return ``None``
-    WITHOUT computing the verdicts — the corpus-bootstrap shape, where
-    the caller only wants the state table.  The store content is
-    bit-identical either way (the novel-row append never depended on the
-    verdict plan; fold-parity pinned in tests), so a later batch sees
-    exactly the same state.
+    Why the verdicts are checkpointed before the append, and what
+    ``fold_only=True`` (fold the batch, return ``None``) keeps
+    unchanged: see :class:`~agile_lakehouse_spark.plans.snapshots.StateStore`.
     """
-    from agile_lakehouse_spark.plans.snapshots import TransactionalTable
+    from agile_lakehouse_spark.plans.snapshots import StateStore
 
     if key_mode not in ("text", "fingerprint"):
         raise ValueError(f"key_mode must be 'text' or 'fingerprint', got {key_mode!r}")
-    own: list = [] if caches is None else caches
     if key_mode == "fingerprint":
         key = "fp"
         batch = new_df.select(
@@ -283,25 +269,14 @@ def exact_dedup_store_backed_update(
     else:
         key = text_col
         batch = new_df.select(F.col(id_col), F.col(text_col))
-    tbl = TransactionalTable(
-        f"{store_path}/state", bloom_columns=(key,), bloom_bits=bloom_bits
+    state = StateStore(f"{store_path}/state", bloom_columns=(key,), caches=caches)
+    # scan_in's DataFrame key form: in fingerprint mode the keys are 32-char
+    # hex strings, so nothing document-sized reaches the driver either way
+    store = state.probe(
+        spark, key, batch.select(key),
+        batch.select(F.col(key), F.lit(0).cast("bigint").alias("keep_id")).limit(0),
+        lambda found: found.select(key, "keep_id"),
     )
-    if tbl.latest_version() is None:
-        store = batch.select(
-            F.col(key), F.lit(0).cast("bigint").alias("keep_id")
-        ).limit(0)
-    else:
-        # scan_in's DataFrame form: the distinct key column drives manifest
-        # pruning (blooms + range stats intersected) while it collects under
-        # max_prune_keys, and degrades to a broadcast semi-join over the
-        # full store past it — in fingerprint mode the keys are 32-char hex
-        # strings, so nothing document-sized reaches the driver either way
-        store = (
-            tbl.scan_in(spark, key, batch.select(key), max_prune_keys=max_prune_keys)
-            .select(key, "keep_id")
-            .persist()
-        )
-        own.append(store)
     novel_agg = [F.min(id_col).cast("bigint").alias("keep_id")]
     if key_mode == "fingerprint":
         # text rides as payload: every row in an fp group has the same text
@@ -310,22 +285,16 @@ def exact_dedup_store_backed_update(
     novel = batch.groupBy(key).agg(*novel_agg).join(
         store.select(key), key, "left_anti"
     )
-    if fold_only:
-        tbl.append(novel.repartitionByRange(max(1, target_files), key))
-        return None
-    verdicts = exact_dedup_incremental(batch, store, key, id_col)
-    # materialize before mutating the table: the verdict plan reads the
-    # pre-append snapshot by explicit file list, and optimize()/vacuum()
-    # may rewrite or delete those files before the caller consumes it
-    verdicts = verdicts.localCheckpoint(eager=True)
     # repartitionByRange, NOT repartition(n, key): the groupBy above
     # already hash-partitions on the key, so a hash repartition on
     # the same key is elided as redundant and the write follows the
     # AQE-coalesced agg shuffle — one file, no per-file bloom selectivity.
     # Range partitioning is a different distribution, forcing a real
     # exchange with the explicit partition count.
-    tbl.append(novel.repartitionByRange(max(1, target_files), key))
-    return verdicts
+    return state.commit(
+        novel.repartitionByRange(8, key),
+        None if fold_only else exact_dedup_incremental(batch, store, key, id_col),
+    )
 
 
 def minhash_store_update(corpus_sigs: DataFrame, new_sigs: DataFrame) -> DataFrame:
@@ -363,13 +332,12 @@ def minhash_store_backed_update(
     max_bucket_size: int | None = None,
     target_files: int = 8,
     bloom_bits: int | None = None,
-    max_prune_keys: int = 100_000,
     caches: list | None = None,
     fold_only: bool = False,
 ) -> DataFrame | None:
     """The PRODUCTION shape of :func:`minhash_incremental_pairs` +
     :func:`minhash_store_update`: the signature store lives in ONE
-    :class:`~agile_lakehouse_spark.plans.snapshots.TransactionalTable`
+    :class:`~agile_lakehouse_spark.plans.snapshots.StateStore`
     under ``store_path`` as an LSH bucket-membership index — one row per
     (doc, band) carrying ``bkey`` (the band's bucket key) plus the doc's
     FULL signature — and the incremental match's store read is pruned at
@@ -407,69 +375,44 @@ def minhash_store_backed_update(
     index/storage trade.  The probe is carried as a DataFrame through
     ``TransactionalTable.scan_in`` (round 13): the distinct ``bkey``
     column drives manifest pruning while it collects under
-    ``max_prune_keys`` and degrades to a broadcast semi-join over the
-    full file list past it, so a 1 M-doc batch (4 M band keys at
-    defaults) never materializes its probe driver-side.
+    ``scan_in``'s 100 k-key cap and degrades to a broadcast semi-join
+    over the full file list past it, so a 1 M-doc batch (4 M band keys
+    at defaults) never materializes its probe driver-side.
 
-    The returned pairs are eagerly ``localCheckpoint``-ed BEFORE the
-    append (round 13, VERDICT r12 item 5): the match plan reads the
-    pre-append snapshot by explicit file list, so a caller running
-    ``optimize()``/``vacuum()`` between update and consumption would
-    otherwise recompute from rewritten/deleted files.
-
-    ``fold_only=True`` (round 13, guide §1.2): fold the batch's bucket
-    rows into the store and return ``None`` WITHOUT computing the
-    batch's near-dup pairs — the corpus-bootstrap shape (a store build
-    has no "yesterday" to match against and discards the within-batch
-    pairs).  The appended rows never depended on the pair plan, so the
-    store is bit-identical either way (fold-parity pinned in tests).
+    Why the pairs are checkpointed before the append, and what
+    ``fold_only=True`` (fold the batch, return ``None``) keeps
+    unchanged: see :class:`~agile_lakehouse_spark.plans.snapshots.StateStore`.
     """
-    from agile_lakehouse_spark.plans.snapshots import TransactionalTable
+    from agile_lakehouse_spark.plans.snapshots import StateStore
 
-    own: list = [] if caches is None else caches
-    tbl = TransactionalTable(
-        f"{store_path}/sigs", bloom_columns=("bkey",), bloom_bits=bloom_bits
+    sigs = StateStore(
+        f"{store_path}/sigs", bloom_columns=("bkey",), bloom_bits=bloom_bits,
+        caches=caches,
     )
     mh_cols = [f"mh{j}" for j in range(num_perms)]
 
-    new_sigs = minhash_signatures(new_df, k, num_perms, text_col, id_col, seed).persist()
-    own.append(new_sigs)
+    new_sigs = sigs.keep(minhash_signatures(new_df, k, num_perms, text_col, id_col, seed))
     bucket_rows = (
         _lsh_buckets(new_sigs, bands, rows_per_band, id_col)
         .withColumn("bkey", F.concat_ws(":", F.col("band").cast("string"), F.col("key")))
         .join(new_sigs, id_col)
         .select("bkey", id_col, *mh_cols)
     )
-
+    rows = bucket_rows.repartition(max(1, target_files), "bkey")
     if fold_only:
-        tbl.append(bucket_rows.repartition(max(1, target_files), "bkey"))
-        return None
-    if tbl.latest_version() is None:
-        cand = new_sigs.limit(0)  # empty corpus: within-batch pairs only
-    else:
-        cand = (
-            tbl.scan_in(
-                spark, "bkey", bucket_rows.select("bkey"),
-                max_prune_keys=max_prune_keys,
-            )
-            .select(id_col, *mh_cols)
-            .distinct()
-            .persist()
-        )
-        own.append(cand)
+        return sigs.commit(rows)
+    cand = sigs.probe(
+        spark, "bkey", bucket_rows.select("bkey"),
+        new_sigs.limit(0),  # empty corpus: within-batch pairs only
+        lambda found: found.select(id_col, *mh_cols).distinct(),
+    )
     pairs = minhash_incremental_pairs(
         new_df, cand, num_perms, bands, rows_per_band, threshold,
         k, text_col, id_col, seed,
         persist_sigs=False, max_bucket_size=max_bucket_size,
-        caches=own, new_sigs=new_sigs,
+        caches=sigs.caches, new_sigs=new_sigs,
     )
-    # materialize before mutating the table: the match plan reads the
-    # pre-append snapshot by explicit file list, and a later
-    # optimize()/vacuum() would rewrite or delete those files before the
-    # caller consumes the (small) pair list
-    pairs = pairs.localCheckpoint(eager=True)
-    tbl.append(bucket_rows.repartition(max(1, target_files), "bkey"))
-    return pairs
+    return sigs.commit(rows, pairs)
 
 
 def shingle_df(df: DataFrame, k: int = 5, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

@@ -195,14 +195,6 @@ def _warn_unconverged(op: str, max_iterations: int) -> None:
     )
 
 
-def component_sizes(components: DataFrame, id_col: str = "id") -> DataFrame:
-    """Cluster summary: one row per component with its size."""
-    return (
-        components.groupBy("component")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_members"))
-    )
-
-
 def dedup_keep_representatives(
     df: DataFrame,
     pairs: DataFrame,

@@ -14,7 +14,11 @@ one agg, near-dup the LSH join) regardless of corpus size.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,10 +40,11 @@ from agile_lakehouse_spark.operators.text import quality_score
 # materialization into standalone driver-blocking jobs, build 8-10 s)
 # completes the A/B matrix.  "table" (round 14, VERDICT r13 item 2) is
 # the SCALE-SAFE mode: state lands in a TransactionalTable under
-# $SPARK_GRAFT_STATE_PIN_DIR (default: a session tempdir) and reads back
-# as a plain parquet scan — localCheckpoint blocks live on executors and
-# are UNRECOVERABLE after an executor loss (the job fails, it cannot
-# recompute), acceptable on local[n] where executor==driver, fatal on a
+# $SPARK_GRAFT_STATE_PIN_DIR (default: one tempdir per process, removed
+# at exit) and reads back as a plain parquet scan — localCheckpoint
+# blocks live on executors and are UNRECOVERABLE after an executor loss
+# (the job fails, it cannot recompute), acceptable on local[n] where
+# executor==driver, fatal on a
 # real cluster; the table mode is exactly the "production reloads state
 # from the lakehouse between batches" contract, durable across executor
 # AND driver restarts.  Content is identical in all four modes: the same
@@ -50,7 +55,7 @@ from agile_lakehouse_spark.operators.text import quality_score
 # unpersist-able — DataFrame.unpersist() is a cacheManager no-op for
 # them, so a caches=[...] sweep releases only the "persist" mode's
 # blocks; checkpoint blocks free at GC/session end, table files at
-# tempdir cleanup.  The mode is read from the environment AT CALL TIME
+# process exit (never, under a user-set SPARK_GRAFT_STATE_PIN_DIR).  The mode is read from the environment AT CALL TIME
 # (tests monkeypatch it); unknown values raise rather than silently
 # meaning checkpoint.
 _STATE_PIN_MODES = ("checkpoint", "eager_checkpoint", "persist", "table")
@@ -73,17 +78,23 @@ def _pin_state(df: DataFrame, caches: list | None) -> DataFrame:
     return df
 
 
+@functools.cache
+def _process_pin_dir() -> str:
+    """The pin base when SPARK_GRAFT_STATE_PIN_DIR is unset: one temp
+    directory per process, created on first use and removed at
+    interpreter exit.  A user-set directory is never removed."""
+    base = tempfile.mkdtemp(prefix="state_pin_")
+    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    return base
+
+
 def _pin_state_table(df: DataFrame) -> DataFrame:
     """Materialize a state frame into a TransactionalTable and read it
     back: the durable STATE_PIN mode (one table per pin — state frames
     are immutable snapshots, the next batch pins a new one)."""
-    import tempfile
-
     from agile_lakehouse_spark.plans.snapshots import TransactionalTable
 
-    base = os.environ.get("SPARK_GRAFT_STATE_PIN_DIR") or tempfile.mkdtemp(
-        prefix="state_pin_"
-    )
+    base = os.environ.get("SPARK_GRAFT_STATE_PIN_DIR") or _process_pin_dir()
     path = tempfile.mkdtemp(prefix="state_", dir=base)
     tbl = TransactionalTable(f"{path}/state")
     tbl.append(df)

@@ -760,7 +760,7 @@ def embedding_store_backed_update(
 ) -> DataFrame | None:
     """The PRODUCTION shape of :func:`embedding_match` +
     :func:`embedding_store_update`: the corpus vector table lives in a
-    :class:`~agile_lakehouse_spark.plans.snapshots.TransactionalTable`
+    :class:`~agile_lakehouse_spark.plans.snapshots.StateStore`
     under ``store_path`` — written ``repartitionByRange(cell)`` exactly
     like :func:`semantic_dedup_store_update`'s vectors store, so the
     commit-log min/max stats prune the bipartite match's store read to
@@ -778,46 +778,24 @@ def embedding_store_backed_update(
     of the batch, one file-pruned read of the dirty cells, the bipartite
     gram sieve — never the clean corpus.
 
-    The returned matches are eagerly ``localCheckpoint``-ed BEFORE the
-    append (round 13, VERDICT r12 item 5): the match plan reads the
-    pre-append snapshot by explicit file list, so a caller running
-    ``optimize()``/``vacuum()`` between update and consumption would
-    otherwise recompute from rewritten/deleted files.  The checkpoint
-    pins the small pair list, making the result safe under any later
-    table maintenance (the dq148d discipline).
-
-    ``fold_only=True`` (round 13, guide §1.2): fold the batch's vectors
-    into the store and return ``None`` WITHOUT computing the matches —
-    the corpus-bootstrap shape.  The appended rows never depended on the
-    match plan, so the store is bit-identical either way (fold-parity
-    pinned in tests).
+    Why the matches are checkpointed before the append, and what
+    ``fold_only=True`` (fold the batch, return ``None``) keeps
+    unchanged: see :class:`~agile_lakehouse_spark.plans.snapshots.StateStore`.
     """
-    from agile_lakehouse_spark.plans.snapshots import TransactionalTable
+    from agile_lakehouse_spark.plans.snapshots import StateStore
 
-    own: list = [] if caches is None else caches
-    tbl = TransactionalTable(f"{store_path}/vectors")
-    tagged = new_df.select(
+    store = StateStore(f"{store_path}/vectors", caches=caches)
+    tagged = store.keep(new_df.select(
         F.col(block_col).cast("bigint").alias(block_col), F.col(id_col), F.col(vec_col)
-    ).persist()
-    own.append(tagged)
+    ))
     dirty_vals, n_part = _dirty_cells(tagged, block_col, "embedding_store_backed_update")
+    rows = tagged.repartitionByRange(n_part, block_col)
     if fold_only:
-        tbl.append(tagged.repartitionByRange(n_part, block_col))
-        return None
-    if tbl.latest_version() is None:
-        matches = embedding_match(
-            tagged, tagged.limit(0), threshold, block_col, vec_col, id_col
-        )
-    else:
-        store_dirty = tbl.scan_in(spark, block_col, dirty_vals)
-        matches = embedding_match(
-            tagged, store_dirty, threshold, block_col, vec_col, id_col
-        )
-    # materialize before mutating the table: the lazy plan pins pre-append
-    # files that optimize()/vacuum() may rewrite or delete
-    matches = matches.localCheckpoint(eager=True)
-    tbl.append(tagged.repartitionByRange(n_part, block_col))
-    return matches
+        return store.commit(rows)
+    store_dirty = store.probe(spark, block_col, dirty_vals, tagged.limit(0))
+    return store.commit(
+        rows, embedding_match(tagged, store_dirty, threshold, block_col, vec_col, id_col)
+    )
 
 
 # PQ splits each D-dim vector into m subvectors and replaces every
@@ -1545,10 +1523,12 @@ def semantic_dedup_store_update(
     caches: list | None = None,
 ) -> DataFrame:
     """The PRODUCTION shape of :func:`semantic_dedup_update`: state lives
-    in two :class:`~agile_lakehouse_spark.plans.snapshots.TransactionalTable`
-    stores under ``store_path`` instead of session-cached DataFrames, and
-    the dirty-cell semi-join prunes the vector-store read at the FILE
-    level from the commit-log stats — clean-cell vector files are never
+    in two tables under ``store_path`` instead of session-cached
+    DataFrames (the vectors in a
+    :class:`~agile_lakehouse_spark.plans.snapshots.StateStore`, the
+    assignment in a plain ``TransactionalTable``), and the dirty-cell
+    semi-join prunes the vector-store read at the FILE level from the
+    commit-log stats — clean-cell vector files are never
     opened (pinned by ``tests/test_semantic_store.py``, which corrupts
     them on disk and still folds correctly).
 
@@ -1570,10 +1550,9 @@ def semantic_dedup_store_update(
     bipartite gram sieve within shared cells, and a rewrite of the dirty
     assign files — never the clean-cell corpus.
     """
-    from agile_lakehouse_spark.plans.snapshots import TransactionalTable
+    from agile_lakehouse_spark.plans.snapshots import StateStore, TransactionalTable
 
-    own: list = [] if caches is None else caches
-    vec_tbl = TransactionalTable(f"{store_path}/vectors")
+    vec = StateStore(f"{store_path}/vectors", caches=caches)
     asg_tbl = TransactionalTable(f"{store_path}/assign")
 
     if centroids is None:
@@ -1585,20 +1564,20 @@ def semantic_dedup_store_update(
         tagged = new_df.join(assigned, id_col).select(
             F.col("cell").cast("bigint").alias("cell"), F.col(id_col), F.col(vec_col)
         )
-    tagged = tagged.persist()
-    own.append(tagged)
+    tagged = vec.keep(tagged)
 
     dirty_vals, n_part = _dirty_cells(tagged, "cell", "semantic_dedup_store_update")
+    rows = tagged.repartitionByRange(n_part, "cell")
 
-    if vec_tbl.latest_version() is None:
+    store_dirty = vec.probe(spark, "cell", dirty_vals, None)
+    if store_dirty is None:
         # first batch: the batch operator IS the fold base
         assign = semantic_dedup(
             tagged, None, threshold, vec_col, id_col, persist_cells=False
         )
-        vec_tbl.append(tagged.repartitionByRange(n_part, "cell"))
+        vec.commit(rows)
         asg_tbl.append(assign.repartitionByRange(n_part, "cell"))
         return asg_tbl.read(spark)
-    store_dirty = vec_tbl.scan_in(spark, "cell", dirty_vals)
     old_assign = asg_tbl.read(spark)
     assign, _ = semantic_dedup_update(
         tagged,
@@ -1607,7 +1586,7 @@ def semantic_dedup_store_update(
         threshold,
         vec_col,
         id_col,
-        caches=own,
+        caches=vec.caches,
     )
     # materialize the dirty slice BEFORE delete_where rewrites the files
     # old_assign's lineage points at.  Literal IN-list while the dirty set
@@ -1615,14 +1594,12 @@ def semantic_dedup_store_update(
     # (and its hashing) — switch to a broadcast semi-join on the same
     # distinct frame (r11 verdict item 8)
     if len(dirty_vals) <= 10_000:
-        dirty_pred = F.col("cell").isin(dirty_vals)
-        dirty_assign = assign.filter(dirty_pred).persist()
+        dirty_assign = vec.keep(assign.filter(F.col("cell").isin(dirty_vals)))
     else:
         dirty_df = tagged.select("cell").distinct()
-        dirty_assign = assign.join(F.broadcast(dirty_df), "cell", "left_semi").persist()
-    own.append(dirty_assign)
+        dirty_assign = vec.keep(assign.join(F.broadcast(dirty_df), "cell", "left_semi"))
     dirty_assign.count()
-    vec_tbl.append(tagged.repartitionByRange(n_part, "cell"))
+    vec.commit(rows)
     asg_tbl.delete_where(
         spark,
         F.col("cell").isin(dirty_vals),

@@ -34,9 +34,10 @@ applies the deletion vectors of the version it reads.
 In production swap this for Delta/Iceberg; the engine's call sites are
 format-agnostic:
 
-- operators/dedup and operators/similarity stores: ``append``,
-  ``scan_in``, ``read``, ``delete_where`` (with
-  ``prune_files_by_values`` candidates);
+- operators/dedup and operators/similarity stores: through
+  :class:`StateStore` (``latest_version``, ``scan_in``, ``append``);
+  SemDeDup's assign table directly (``read``, ``delete_where`` with
+  ``prune_files_by_values`` candidates, ``append``);
 - operators/pipeline state pins: ``append``, ``read``;
 - plans/incremental views: ``appends_only_between``, ``added_files``,
   ``read``, ``overwrite``;
@@ -1163,6 +1164,68 @@ class TransactionalTable:
                     os.unlink(f)
                     removed.append(f)
         return removed
+
+
+class StateStore:
+    """The state-store protocol the store-backed dedup family shares
+    (exact, MinHash and embedding dedup; SemDeDup's vector table): one
+    :class:`TransactionalTable` holds the operator state, each batch
+    probes the pre-commit snapshot for the keys it can match, and one
+    commit appends the batch's clustered rows.  The operator supplies
+    only its key extraction, its match kernel and its clustering.
+
+    - ``probe``: the rows whose key is in the batch's key set, read with
+      manifest pruning (:meth:`TransactionalTable.scan_in`); before the
+      first commit there is nothing to read and the caller's empty frame
+      stands in for the store.
+    - ``keep``: persist a frame the match plan reads more than once and
+      register it in ``caches`` for the caller to unpersist.
+    - ``commit(rows, result)``: pin ``result``, then append ``rows``.
+
+    Why the result is pinned BEFORE the append: the match plan reads the
+    pre-commit snapshot by explicit file list, so a caller running
+    ``optimize()``/``vacuum()`` between the update and consuming the
+    result would otherwise recompute from rewritten or deleted files.
+    An eager ``localCheckpoint`` materializes the (small) result once
+    and cuts that lineage, so it is safe under any later maintenance.
+
+    Why ``fold_only`` leaves the store bit-identical: the corpus-bootstrap
+    shape passes ``result=None`` and skips computing the result it would
+    discard.  The appended rows are the same frame either way — they
+    never depend on the match plan — so a later batch sees exactly the
+    same state (fold-parity pinned in tests/test_store_backed_dedup.py).
+    """
+
+    def __init__(
+        self,
+        path: str,
+        bloom_columns: tuple[str, ...] = (),
+        bloom_bits: int | None = None,
+        caches: list | None = None,
+    ):
+        self._table = TransactionalTable(path, bloom_columns, bloom_bits)
+        self.caches = [] if caches is None else caches
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        df = df.persist()
+        self.caches.append(df)
+        return df
+
+    def probe(self, spark: SparkSession, col: str, keys, empty, shape=None):
+        """``col IN keys`` over the pre-commit snapshot, or ``empty`` when
+        the store has no version yet.  ``shape`` projects the scanned rows,
+        which are then kept: the probe feeds several branches of the match
+        plan and should be read once."""
+        if self._table.latest_version() is None:
+            return empty
+        found = self._table.scan_in(spark, col, keys)
+        return found if shape is None else self.keep(shape(found))
+
+    def commit(self, rows: DataFrame, result: DataFrame | None = None) -> DataFrame | None:
+        if result is not None:
+            result = result.localCheckpoint(eager=True)
+        self._table.append(rows)
+        return result
 
 
 def commit_with_retry(fn, retries: int = 5):

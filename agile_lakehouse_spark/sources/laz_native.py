@@ -388,15 +388,6 @@ def _u64(v: int) -> int:
     return v & 0xFFFF_FFFF_FFFF_FFFF
 
 
-def _f64_bits(x: float) -> int:
-    """Double -> i64 bit pattern (LASzip codes gps time as its raw bits)."""
-    return struct.unpack("<q", struct.pack("<d", x))[0]
-
-
-def _bits_f64(i: int) -> float:
-    return struct.unpack("<d", struct.pack("<q", i))[0]
-
-
 def _i32_quantize(f: np.float32) -> int:
     """LASzip I32_QUANTIZE: float32 round-half-away-from-zero, truncating."""
     return int(np.float32(f) + np.float32(0.5)) if f >= 0 else int(

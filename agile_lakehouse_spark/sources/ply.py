@@ -52,16 +52,6 @@ _PLY_TO_NP = {
 _INT_BOUNDS = {"int": (-(2**31), 2**31 - 1), "short": (-(2**15), 2**15 - 1), "char": (-128, 127)}
 
 
-def parse_header(lines: list[str]) -> tuple[list[tuple[str, str]], int, str]:
-    """Parse a PLY header -> ([(name, spark_type)], n_rows, format) for the
-    vertex element."""
-    elements, fmt = _parse_elements(lines)
-    for name, count, props in elements:
-        if name == "vertex":
-            return [(p, _PLY_TO_SPARK[t]) for p, t in props], count, fmt
-    return [], 0, fmt
-
-
 def _parse_elements(lines: list[str]) -> tuple[list[tuple[str, int, list[tuple[str, str]]]], str]:
     """Full header parse: every element with its count and scalar
     properties (PLY type names), in file order — needed to compute binary

@@ -1682,6 +1682,28 @@ def test_curate_incremental_state_pin_table_mode(spark, sf_dir, tmp_path, monkey
     [c.unpersist() for c in bogus_caches]
 
 
+def test_state_pin_table_reuses_one_base_dir(spark, monkeypatch):
+    """With SPARK_GRAFT_STATE_PIN_DIR unset, table pins land in ONE
+    per-process base directory (removed at interpreter exit) instead of
+    a fresh, never-removed temp directory per pin."""
+    import os
+    import re
+    import tempfile
+
+    from agile_lakehouse_spark.operators.pipeline import _pin_state_table
+
+    monkeypatch.delenv("SPARK_GRAFT_STATE_PIN_DIR", raising=False)
+    bases = set()
+    for n in (3, 4):
+        pinned = _pin_state_table(spark.range(n))
+        assert pinned.count() == n
+        for f in pinned.inputFiles():
+            local = "/" + f.removeprefix("file:").lstrip("/")
+            bases.add(re.match(r"(.*/state_pin_[^/]+)/", local).group(1))
+    assert len(bases) == 1, f"each pin made its own base dir: {sorted(bases)}"
+    assert os.path.dirname(bases.pop()) == tempfile.gettempdir()
+
+
 def test_embedding_match_sieve_equals_join(spark):
     """Bipartite matcher: gram-sieve path == plain block join, forced
     big-block fallback included; one-sided blocks yield no pairs."""

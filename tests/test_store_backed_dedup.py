@@ -49,7 +49,7 @@ def test_minhash_store_backed_folds_and_prunes(spark, tmp_path):
     store = str(tmp_path / "mhstore")
     caches: list = []
     dedup.minhash_store_backed_update(
-        spark, b1, store, k=K, threshold=T, target_files=8, caches=caches
+        spark, b1, store, k=K, threshold=T, caches=caches
     )
     spark.catalog.clearCache()  # state must come from disk, not lineage
 
@@ -94,7 +94,7 @@ def test_exact_store_backed_folds_and_prunes(spark, tmp_path):
     b2 = _docs(spark, [(200, "dup me"), (201, "novel text"), (202, "novel text")])
     store = str(tmp_path / "exstore")
     caches: list = []
-    dedup.exact_dedup_store_backed_update(spark, b1, store, target_files=8, caches=caches)
+    dedup.exact_dedup_store_backed_update(spark, b1, store, caches=caches)
     spark.catalog.clearCache()
 
     tbl = TransactionalTable(f"{store}/state", bloom_columns=("text",))
@@ -131,7 +131,7 @@ def test_exact_store_backed_fingerprint_mode(spark, tmp_path):
     store = str(tmp_path / "fpstore")
     caches: list = []
     dedup.exact_dedup_store_backed_update(
-        spark, b1, store, key_mode="fingerprint", target_files=8, caches=caches
+        spark, b1, store, key_mode="fingerprint", caches=caches
     )
     spark.catalog.clearCache()
 
@@ -452,7 +452,9 @@ def test_fold_only_is_store_identical_across_the_trio(spark, tmp_path):
     only skip computing the discarded bootstrap result.  For each trio
     member: fold batch 1 twice (with and without fold_only), run batch 2
     against both stores, assert identical outputs; and assert fold_only
-    returns None (nothing was computed to return)."""
+    returns None (nothing was computed to return).  The non-fold_only
+    batch-1 call runs on an EMPTY store, so its result must equal the
+    in-memory operator against an empty state."""
     b1, b2 = _minhash_corpus(spark)
     caches: list = []
 
@@ -461,7 +463,12 @@ def test_fold_only_is_store_identical_across_the_trio(spark, tmp_path):
         spark, b1, s_a, k=K, threshold=T, caches=caches, fold_only=True
     )
     assert r is None
-    dedup.minhash_store_backed_update(spark, b1, s_b, k=K, threshold=T, caches=caches)
+    first = dedup.minhash_store_backed_update(spark, b1, s_b, k=K, threshold=T, caches=caches)
+    empty_sigs = dedup.minhash_signatures(b1, k=K).limit(0)
+    expected = dedup.minhash_incremental_pairs(
+        b1, empty_sigs, threshold=T, k=K, persist_sigs=False
+    )
+    assert _pairs(first) == _pairs(expected) and first.count() > 0
     got_a = dedup.minhash_store_backed_update(spark, b2, s_a, k=K, threshold=T, caches=caches)
     got_b = dedup.minhash_store_backed_update(spark, b2, s_b, k=K, threshold=T, caches=caches)
     assert _pairs(got_a) == _pairs(got_b) and got_a.count() > 0
@@ -471,7 +478,10 @@ def test_fold_only_is_store_identical_across_the_trio(spark, tmp_path):
         spark, b1, s_a, caches=caches, fold_only=True
     )
     assert r is None
-    dedup.exact_dedup_store_backed_update(spark, b1, s_b, caches=caches)
+    first = dedup.exact_dedup_store_backed_update(spark, b1, s_b, caches=caches)
+    empty_store = dedup.exact_dedup_store(b1).limit(0)
+    expected = dedup.exact_dedup_incremental(b1, empty_store)
+    assert _pairs(first) == _pairs(expected) and first.count() == b1.count()
     got_a = dedup.exact_dedup_store_backed_update(spark, b2, s_a, caches=caches)
     got_b = dedup.exact_dedup_store_backed_update(spark, b2, s_b, caches=caches)
     assert _pairs(got_a) == _pairs(got_b) and got_a.count() > 0
@@ -484,7 +494,11 @@ def test_fold_only_is_store_identical_across_the_trio(spark, tmp_path):
         spark, v1, s_a, threshold=0.9, caches=caches, fold_only=True
     )
     assert r is None
-    similarity.embedding_store_backed_update(spark, v1, s_b, threshold=0.9, caches=caches)
+    first = similarity.embedding_store_backed_update(
+        spark, v1, s_b, threshold=0.9, caches=caches
+    )
+    expected = similarity.embedding_match(v1, v1.limit(0), threshold=0.9)
+    assert _pairs(first) == _pairs(expected)
     got_a = similarity.embedding_store_backed_update(spark, v2, s_a, threshold=0.9, caches=caches)
     got_b = similarity.embedding_store_backed_update(spark, v2, s_b, threshold=0.9, caches=caches)
     assert _pairs(got_a) == _pairs(got_b) and got_a.count() > 0
