@@ -3692,8 +3692,9 @@ def apply_cdc_q(spark, sf_dir):
     """dq154: CDC apply under the value gate — a deterministic change
     batch (every 5th order re-priced at seq 1, every 10th deleted at
     seq 2 — the later delete must win; every 100th spawning a new 'Z'
-    order) applied to a TransactionalTable as ONE merge + ONE
-    deletion-vector commit, then the LIVE state aggregated.  The oracle
+    order) applied to a TransactionalTable as ONE merge-on-read commit
+    (a deletion vector for every changed key plus the upserted rows),
+    then the LIVE state aggregated through the vectors.  The oracle
     replays latest-change-wins relationally."""
     import shutil
     import tempfile

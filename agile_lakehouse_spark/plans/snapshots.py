@@ -31,6 +31,15 @@ computes one from the log.  Every read (``read``, ``scan``, ``scan_in``,
 ``lookup``, ``read_changes``) goes through one pruned-read path that
 applies the deletion vectors of the version it reads.
 
+Row-level mutations are merge-on-read: ``delete_where_mor``,
+``delete_keys_mor``, ``merge`` and ``apply_cdc`` share one body that
+records the (file, row position) of every row they retire as a deletion
+vector and stages the rows they insert, both in ONE commit — no data
+file is rewritten, so an upsert writes about its own size.  Reads carry
+those vectors until ``optimize``/``compact`` rewrites the table.  Only
+``delete_where`` is copy-on-write (it rewrites the files holding matches,
+searching just the caller's ``candidate_files`` when given).
+
 In production swap this for Delta/Iceberg; the engine's call sites are
 format-agnostic:
 
@@ -569,15 +578,6 @@ class TransactionalTable:
                 return False
         return True
 
-    def _affected_files(self, files: list[str], marker: DataFrame) -> list[str]:
-        """Physical files containing at least one row of ``marker``
-        (a filtered view of the snapshot carrying ``_dv_file``)."""
-        rows = marker.select("_dv_file").distinct().collect()
-        # _metadata.file_path is a URI (file:/p); manifests store plain
-        # local paths
-        found = {_localpath(r._dv_file) for r in rows}
-        return [f for f in files if f in found]
-
     def delete_where(
         self,
         spark: SparkSession,
@@ -611,7 +611,11 @@ class TransactionalTable:
         # (dropping newer columns from rewritten survivors); _live applies
         # deletion vectors so MOR-deleted rows can't resurrect in a rewrite
         tagged = self._live(spark, search, m, tagged=True)
-        affected = self._affected_files(search, tagged.filter(cond))
+        rows = tagged.filter(cond).select("_dv_file").distinct().collect()
+        # _metadata.file_path is a URI (file:/p); manifests store plain
+        # local paths
+        found = {_localpath(r._dv_file) for r in rows}
+        affected = [f for f in search if f in found]
         if not affected:
             return m["version"]  # nothing to delete — no new version needed
         survivors = self._live(spark, affected, m).filter(~cond)
@@ -677,65 +681,115 @@ class TransactionalTable:
         from pyspark.sql import functions as F
 
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        return self._delete_mor(spark, lambda live: live.filter(cond))
+        return self._mutate(spark, self._manifest(), "delete-mor", lambda live: live.filter(cond))
 
     def delete_keys_mor(self, spark: SparkSession, keys: DataFrame, key: str) -> int:
         """Merge-on-read DELETE by KEY SET: deletion vectors for every
-        live row whose ``key`` appears in ``keys`` — the CDC-delete shape
-        (:func:`apply_cdc`).  Unlike a collected IN-list predicate this
-        is a semi-join, so the key set can be arbitrarily large; it is
-        broadcast when small and shuffles otherwise (AQE's call).
+        live row whose ``key`` appears in ``keys``.  Unlike a collected
+        IN-list predicate this is a semi-join, so the key set can be
+        arbitrarily large; it is broadcast when small and shuffles
+        otherwise (AQE's call).
         """
-        return self._delete_mor(
-            spark, lambda live: live.join(keys.select(key).distinct(), key, "left_semi")
+        return self._mutate(
+            spark,
+            self._manifest(),
+            "delete-mor",
+            lambda live: live.join(keys.select(key).distinct(), key, "left_semi"),
         )
 
-    def _delete_mor(self, spark: SparkSession, match) -> int:
-        """Shared body of the merge-on-read deletes: ``match`` narrows the
-        live, address-tagged snapshot to the rows to delete, whose
-        (file, row position) pairs become one new deletion-vector file.
+    def _mutate(
+        self,
+        spark: SparkSession,
+        m: dict | None,
+        op: str,
+        match,
+        rows: DataFrame | None = None,
+        txn: tuple[str, int] | None = None,
+    ) -> int | None:
+        """The one merge-on-read mutation body (``delete_where_mor``,
+        ``delete_keys_mor``, ``merge``, ``apply_cdc``): ``match`` narrows
+        the live, address-tagged snapshot ``m`` to the rows the mutation
+        retires, whose (file, row position) pairs become one staged
+        deletion-vector directory; ``rows``, if given, are staged as new
+        data files.  Both land in ONE commit on top of ``m``, so no reader
+        and no crash sees the inserts without the deletes.  No data file
+        is rewritten — the rewrite is deferred to :meth:`compact` /
+        :meth:`optimize`.
 
-        The vector is staged and committed; on the no-match path and on
-        commit failure the staged directory is removed so nothing
-        unreferenced (and vacuum-invisible) leaks inside the table path.
+        Emptiness of both halves comes from the staged parquet footers,
+        not from a probe job; when both are empty nothing is committed
+        and ``m``'s version is returned.  If staging or the commit fails,
+        :meth:`_reclaim` removes the staged directories unless the
+        version this commit claimed references them.
         """
         import pyarrow.parquet as pq
         from pyspark.sql import functions as F
 
-        m = self._manifest()
-        matched = match(self._live(spark, m["files"], m, tagged=True)).select(
-            F.col("_dv_file").alias("file_path"), F.col("_dv_pos").alias("row_index")
-        )
-        stage_dir = os.path.join(self.path, f"deletes-{uuid.uuid4().hex}")
-        matched.write.parquet(stage_dir)
-        paths = [
-            os.path.join(stage_dir, f)
-            for f in sorted(os.listdir(stage_dir))
-            if f.endswith(".parquet")
-        ]
-        if sum(pq.ParquetFile(p).metadata.num_rows for p in paths) == 0:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-            return m["version"]  # no matches — no new version needed
+        files = m["files"] if m else []
+        # checked before any job: an incompatible column type stages nothing
+        schema = None if rows is None else self._evolved_schema(m, rows)
+        dirs: list[str] = []
+        vectors: list[str] = []
+        staged: list[str] = []
         try:
+            if files:
+                matched = match(self._live(spark, files, m, tagged=True)).select(
+                    F.col("_dv_file").alias("file_path"), F.col("_dv_pos").alias("row_index")
+                )
+                stage_dir = os.path.join(self.path, f"deletes-{uuid.uuid4().hex}")
+                dirs.append(stage_dir)
+                matched.write.parquet(stage_dir)
+                vectors = [
+                    os.path.join(stage_dir, f)
+                    for f in sorted(os.listdir(stage_dir))
+                    if f.endswith(".parquet")
+                ]
+                if sum(pq.ParquetFile(p).metadata.num_rows for p in vectors) == 0:
+                    shutil.rmtree(stage_dir, ignore_errors=True)
+                    vectors = []
+            if rows is not None:
+                staged = self._stage_nonempty(rows)
+                dirs.extend({os.path.dirname(p) for p in staged})
+            if not (vectors or staged):
+                return m["version"] if m else None
+            # the schema evolves only when rows land (a delete-only batch
+            # keeps the table's schema whatever columns its frame carries)
             return self._commit(
-                m["files"], "delete-mor", base=m, deletes=m.get("deletes", []) + paths
+                files + staged,
+                op,
+                txn=txn,
+                base=m,
+                schema=schema if staged else None,
+                deletes=(m.get("deletes", []) if m else []) + vectors,
             )
         except Exception:
-            # reclaim the stage ONLY if no durable manifest references it:
-            # _commit's os.link can succeed (version N+1 durable, pointing
-            # at these vectors) and still raise afterwards — deleting then
-            # would corrupt the committed version.  Exception, not
-            # BaseException: a KeyboardInterrupt in that window must not
-            # trigger cleanup either.
-            try:
-                referenced = any(
-                    p.startswith(stage_dir) for p in self._manifest().get("deletes", [])
-                )
-            except Exception:
-                referenced = True  # can't prove it's orphaned — keep it
-            if not referenced:
-                shutil.rmtree(stage_dir, ignore_errors=True)
+            # Exception, not BaseException: an interrupt between the link
+            # and the return must not trigger cleanup either
+            self._reclaim(m, dirs, vectors + staged)
             raise
+
+    def _reclaim(self, m: dict | None, dirs: list[str], paths: list[str]) -> None:
+        """Undo the staging of a mutation on top of ``m`` that raised:
+        remove ``dirs`` and drop ``paths``' pending stats — but ONLY if
+        the version the commit claimed does not reference ``paths``.
+        ``_commit``'s ``os.link`` can succeed (the version is durable and
+        points at these files) and still raise afterwards; deleting then
+        would corrupt the committed version.  A manifest that cannot be
+        read proves nothing, so the files are kept."""
+        version = 0 if m is None else m["version"] + 1
+        try:
+            landed = self._read_manifest(version)
+        except FileNotFoundError:
+            landed = {}
+        except (OSError, ValueError):
+            return
+        refs = set(landed.get("files", [])) | set(landed.get("deletes", []))
+        if any(p in refs for p in paths):
+            return
+        for p in paths:
+            self._pending_stats.pop(p, None)
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
 
     def apply_cdc(
         self,
@@ -749,11 +803,15 @@ class TransactionalTable:
         emit the new image, 'D' deletes the key) and a sequence column;
         only each key's LATEST change applies (CDC feeds replay history).
 
-        Upserts land as ONE copy-on-write merge; deletes as ONE
-        merge-on-read vector commit — two commits per batch regardless of
-        change volume, both key-join-shaped (no collect, no per-row op).
+        ONE merge-on-read commit per batch, whatever its change volume:
+        one deletion vector retires the live row of every key the batch
+        touches (upserted or deleted) and the upserted images are staged
+        beside it, so no version holds a batch's upserts without its
+        deletes.  Key-join-shaped throughout (no collect, no per-row op).
         Keys whose latest change is D are deleted even if earlier changes
-        in the same batch upserted them.
+        in the same batch upserted them.  A batch that matches no live row
+        and upserts nothing commits nothing.  Reads carry the vector until
+        :meth:`optimize` / :meth:`compact` rewrites the table.
         """
         from pyspark.sql import Window
         from pyspark.sql import functions as F
@@ -771,19 +829,13 @@ class TransactionalTable:
             .drop("_rn")
         )
         ups = latest.filter(F.col(op_col) != "D").drop(op_col, seq_col)
-        dels = latest.filter(F.col(op_col) == "D").select(key)
-        v = self.latest_version()
-        # round 14: ONE aggregate job decides both branches (was two
-        # limit(1).count() probes, each replaying the window pipeline)
-        n_ups, n_dels = latest.agg(
-            F.count(F.when(F.col(op_col) != "D", 1)),
-            F.count(F.when(F.col(op_col) == "D", 1)),
-        ).first()
-        if n_ups:
-            v = self.merge(spark, ups, key)
-        if n_dels:
-            v = self.delete_keys_mor(spark, dels, key)
-        return v
+        return self._mutate(
+            spark,
+            self._manifest(),
+            "cdc",
+            lambda live: live.join(latest.select(key), key, "left_semi"),
+            rows=ups,
+        )
 
     def last_txn_batch(self, app: str) -> int:
         """Highest batch id committed by ``app``, or -1 (idempotence probe
@@ -796,33 +848,29 @@ class TransactionalTable:
         return best
 
     def merge(self, spark: SparkSession, source: DataFrame, key: str, txn: tuple[str, int] | None = None) -> int:
-        """Copy-on-write MERGE (upsert): rows of ``source`` replace
+        """Merge-on-read MERGE (upsert): rows of ``source`` replace
         same-``key`` rows in the table; unmatched source rows are inserted.
 
-        Only files containing a matching key are rewritten (semi-join
-        against the source keys finds them); everything else is carried
-        forward untouched — the same file-level copy-on-write Delta's
-        MERGE performs, with the matching-file discovery done by a
-        broadcast-able key join instead of a full rewrite.
+        One commit: a deletion vector retires every live row whose key is
+        in ``source`` (broadcast semi-join against the source keys) and
+        ``source`` is staged as new files.  No data file is rewritten, so
+        the commit writes the source plus kilobytes of vector, not the
+        files the keys land in (Delta's copy-on-write MERGE cost, which
+        deletion vectors remove).  Reads carry the vector until
+        :meth:`optimize` / :meth:`compact` rewrites the table.  A source
+        column the table lacks evolves its schema (:meth:`_evolved_schema`);
+        ``txn`` records the streaming-sink marker
+        (:meth:`last_txn_batch`).
         """
         from pyspark.sql import functions as F
 
         m = self._manifest()
         if m is None:
             return self._commit(self._stage(source), "merge", txn=txn, base=m, schema=source.schema)
-        schema = self._evolved_schema(m, source)
-        files = m["files"]
-        keys = source.select(key).distinct()
-        tagged = self._live(spark, files, m, tagged=True)
-        affected = self._affected_files(files, tagged.join(F.broadcast(keys), key, "left_semi"))
-        keep = [f for f in files if f not in set(affected)]
-        new_files = []
-        if affected:
-            survivors = self._live(spark, affected, m).join(F.broadcast(keys), key, "left_anti")
-            # round 14: emptiness from staged footers, no probe job
-            new_files += self._stage_nonempty(survivors)
-        new_files += self._stage(source)
-        return self._commit(keep + new_files, "merge", txn=txn, base=m, schema=schema)
+        keys = F.broadcast(source.select(key).distinct())
+        return self._mutate(
+            spark, m, "merge", lambda live: live.join(keys, key, "left_semi"), rows=source, txn=txn
+        )
 
     # -- read paths ----------------------------------------------------------
 

@@ -15,12 +15,14 @@ of the reference's DataFusion ``TableProvider`` + ``LasExec``
   natively too (``laz_native.py``); exotic variants need laspy; a
   ``.fakelas`` synthetic decoder remains for partition-planning tests.
 
-Filter pushdown note: the Python DataSource API (as of Spark 4.1) exposes
-projection/partitioning but not filter pushdown hooks, so file/chunk
-min-max skipping (reference ``provider.rs:43-81``) stays in the ELT path:
-ingest once to Parquet and let footer/page stats prune.  This source is
-for exploratory direct scans; the lakehouse path remains convert-then-query
-(SURVEY.md §2.1 S1-S5).
+Filter pushdown note: the Python DataSource API (Spark 4.1) does have a
+filter-pushdown hook, ``DataSourceReader.pushFilters``, but this reader
+does not implement it: every chunk is decoded and Spark applies the
+filters afterwards.  File/chunk min-max skipping (reference
+``provider.rs:43-81``) therefore stays in the ELT path: ingest once to
+Parquet and let footer/page stats prune.  This source is for exploratory
+direct scans; the lakehouse path remains convert-then-query (SURVEY.md
+§2.1 S1-S5).
 """
 
 from __future__ import annotations

@@ -91,8 +91,13 @@ def stream_upsert(
     (at-least-once), and the table's commit log records a ``txn``
     (app_id, batch_id) marker per merge — a replayed batch whose id is
     already committed is skipped, so the MERGE applies exactly once even
-    across driver restarts.  Combined with the table's copy-on-write merge
-    this is streaming CDC-style ingestion with ACID snapshots.
+    across driver restarts.  Each batch is one merge-on-read commit (a
+    deletion vector for the replaced rows plus the batch's rows as new
+    files; nothing is rewritten), so this is streaming CDC-style ingestion
+    with ACID snapshots at a write cost of about the batch itself.  Reads
+    carry the accumulated vectors until ``optimize``/``compact``.  An
+    empty batch commits nothing and records no marker; replaying it is a
+    no-op anyway.
 
     ``app_id`` identifies the (stream, checkpoint) lineage — batch ids are
     only monotonic within one checkpoint, so starting over with a NEW

@@ -533,6 +533,37 @@ def test_mor_then_merge_no_resurrection(spark, table):
     assert table.read(spark).filter("k = 18").collect()[0].v == -1
 
 
+def test_merge_rewrites_no_data_file(spark, table):
+    """MERGE is merge-on-read: every pre-merge data file stays in the
+    manifest, the only new files hold the source rows, and the replaced
+    rows leave through a deletion vector."""
+    table.append(_df(spark, 0, 10).coalesce(1))
+    table.append(_df(spark, 100, 110).coalesce(1))
+    pre = table.latest_version()
+    before = table._read_manifest(pre)["files"]
+    src = spark.createDataFrame([(0, -1), (105, -1), (200, -1)], "k long, v long")
+    v = table.merge(spark, src, "k")
+    after = table._read_manifest(v)
+    assert v == pre + 1
+    assert set(before) <= set(after["files"])  # nothing rewritten or dropped
+    new = [f for f in after["files"] if f not in before]
+    assert sorted(tuple(r) for r in spark.read.parquet(*new).collect()) == [
+        (0, -1), (105, -1), (200, -1)
+    ]
+    assert after["deletes"]
+    assert sorted((r.k, r.v) for r in table.read(spark).filter("k IN (0, 105, 200)").collect()) == [
+        (0, -1), (105, -1), (200, -1)
+    ]
+    assert table.read(spark).count() == 21
+    old = table.read(spark, version=pre).filter("k IN (0, 105, 200)").collect()
+    assert sorted((r.k, r.v) for r in old) == [(0, 0), (105, 210)]
+    # a merge is a row change, not an append: the incremental plans must
+    # not take its file diff for a row diff
+    assert not table.appends_only_between(pre, v)
+    with pytest.raises(ValueError):
+        table.read_changes(spark, pre, v)
+
+
 def test_compact_materializes_mor_deletes(spark, table):
     table.append(_df(spark, 0, 60))
     table.delete_where_mor(spark, "k % 2 = 0")
@@ -584,6 +615,28 @@ def test_apply_cdc_latest_change_wins(spark, table):
     assert got[20] == 200
     assert got[5] == 10  # untouched rows intact
     assert len(got) == 10  # 10 - deleted 3 + new 20
+
+
+def test_apply_cdc_is_one_commit(spark, table):
+    """A CDC batch with upserts and deletes lands as ONE version: no
+    snapshot holds its upserts without its deletes.  A batch whose
+    deletes all miss and which upserts nothing commits nothing."""
+    table.append(_df(spark, 0, 10))  # (k, v=2k)
+    v0 = table.latest_version()
+    changes = spark.createDataFrame(
+        [(1, 100, "U", 1), (2, 0, "D", 1), (3, 0, "D", 1), (30, 300, "I", 1)],
+        "k bigint, v bigint, op string, seq bigint",
+    )
+    v = table.apply_cdc(spark, changes, key="k", seq_col="seq")
+    assert v == v0 + 1 == table.latest_version()
+    want = {k: 2 * k for k in range(10) if k not in (2, 3)} | {1: 100, 30: 300}
+    got = table.read(spark, version=v).collect()
+    assert len(got) == len(want) and {r.k: r.v for r in got} == want
+    misses = spark.createDataFrame(
+        [(2, 0, "D", 2), (500, 0, "D", 1)], "k bigint, v bigint, op string, seq bigint"
+    )
+    assert table.apply_cdc(spark, misses, key="k", seq_col="seq") == v
+    assert table.latest_version() == v
 
 
 def test_mor_no_match_leaves_no_staged_dir(spark, table):
@@ -657,3 +710,59 @@ def test_mor_commit_crash_after_link_keeps_referenced_vectors(
     assert table.latest_version() == 1
     assert table.read(spark).count() == 15
     assert sorted(r.k for r in table.read(spark).collect()) == list(range(5, 20))
+
+
+def _unreferenced_staging(table):
+    """Staged data and vector directories no committed version lists."""
+    import os
+
+    refs = set()
+    for v in table.versions():
+        m = table._read_manifest(v)
+        refs |= {os.path.dirname(f) for f in m["files"] + m.get("deletes", [])}
+    return [
+        d for d in os.listdir(table.path)
+        if d.startswith(("stage-", "deletes-")) and os.path.join(table.path, d) not in refs
+    ]
+
+
+def test_merge_commit_crash_before_link_reclaims_stage(spark, table, monkeypatch):
+    """A MERGE whose commit fails BEFORE landing reclaims both its staged
+    source rows and its staged deletion vector, drops their pending
+    stats, and leaves the version unchanged."""
+    table.append(_df(spark, 0, 20))
+    v = table.latest_version()
+
+    def failing(self, *a, **k):
+        raise CommitConflict("simulated pre-link failure")
+
+    src = spark.createDataFrame([(3, -1), (50, -1)], "k long, v long")
+    monkeypatch.setattr(TransactionalTable, "_commit", failing)
+    with pytest.raises(CommitConflict):
+        table.merge(spark, src, "k")
+    monkeypatch.undo()
+    assert table.latest_version() == v
+    assert _unreferenced_staging(table) == []
+    assert table._pending_stats == {}
+    assert table.read(spark).count() == 20
+
+
+def test_merge_commit_crash_after_link_keeps_referenced_files(spark, table, monkeypatch):
+    """A MERGE that lands durably and THEN raises keeps its staged rows
+    and vector: the new version references them."""
+    table.append(_df(spark, 0, 20))
+    orig = TransactionalTable._commit
+
+    def crash_after(self, *a, **k):
+        orig(self, *a, **k)
+        raise RuntimeError("simulated post-link crash")
+
+    src = spark.createDataFrame([(3, -1), (50, -1)], "k long, v long")
+    monkeypatch.setattr(TransactionalTable, "_commit", crash_after)
+    with pytest.raises(RuntimeError):
+        table.merge(spark, src, "k")
+    monkeypatch.undo()
+    assert table.latest_version() == 1
+    got = {r.k: r.v for r in table.read(spark).collect()}
+    assert len(got) == 21 and got[3] == -1 and got[50] == -1
+    assert _unreferenced_staging(table) == []
