@@ -8,9 +8,12 @@ manifests listing immutable data files, made atomic by ``os.rename``
 (atomic on POSIX within a filesystem):
 
     table/
-      _log/v00000000.json   {"version":0,"files":[...],"op":"append"}
+      _log/v00000000.json   {"version":0,"op":"append","files":[...],
+                             "stats":{...},"operationMetrics":{...}}
       _log/v00000001.json
-      part-....parquet      (immutable data files)
+      stage-<id>/part-....parquet           (immutable data files)
+      stage-<id>/_part-....parquet.bloom    (immutable bloom sidecars)
+      deletes-<id>/part-....parquet         (deletion vectors)
 
 - Readers pick the highest committed version (or an explicit one — time
   travel) and read exactly its file list: consistent snapshots, no torn
@@ -30,6 +33,19 @@ it — a snapshot is its file list plus its deletion vectors, the way Delta
 computes one from the log.  Every read (``read``, ``scan``, ``scan_in``,
 ``lookup``, ``read_changes``) goes through one pruned-read path that
 applies the deletion vectors of the version it reads.
+
+A manifest is small: per data file it holds the footer row count and
+min/max, and for bloom columns only the bloom's bit count.  Each file's
+blooms are written ONCE, at staging, as a zlib-compressed binary sidecar
+beside it (``_`` prefix, so Spark and pyarrow directory listings skip
+it); a commit never rewrites them.  What every commit still rewrites is
+the file list with its stats, a few hundred bytes a file.  Readers open
+a sidecar only for files that survive min/max, and ``vacuum`` deletes
+it with its file.  Manifests written before sidecars existed carry their
+blooms inline as hex and still read.  Each commit also records
+``operationMetrics`` (rows, files and bytes added and removed, vectors
+added, staging and bloom time), which :meth:`TransactionalTable.history`
+returns.
 
 Row-level mutations are merge-on-read: ``delete_where_mor``,
 ``delete_keys_mor``, ``merge`` and ``apply_cdc`` share one body that
@@ -58,11 +74,13 @@ format-agnostic:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import time
 import uuid
+import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
@@ -73,6 +91,15 @@ def _localpath(p: str) -> str:
     if p.startswith("file:"):
         p = "/" + p[5:].lstrip("/")
     return p
+
+
+def _bytes(paths) -> int:
+    """Total size of ``paths``; a file already vacuumed counts 0."""
+    total = 0
+    for p in paths:
+        with contextlib.suppress(FileNotFoundError):
+            total += os.stat(p).st_size
+    return total
 
 
 class CommitConflict(RuntimeError):
@@ -96,6 +123,9 @@ class TransactionalTable:
         # footer stats for files staged since the last commit, folded into
         # the next manifest (per-file min/max -> reader-side file skipping)
         self._pending_stats: dict[str, dict] = {}
+        # staging and bloom time of each staged directory, folded into the
+        # operationMetrics of the commit that lands its files
+        self._pending_ms: dict[str, dict[str, float]] = {}
         # columns to build per-file bloom filters for at commit time
         # (point-lookup file skipping; min/max stats only help range scans)
         self.bloom_columns = tuple(bloom_columns)
@@ -191,12 +221,33 @@ class TransactionalTable:
             # dead weight (they anti-join against nothing) until a
             # compact/overwrite clears them
             deletes = base.get("deletes", [])
+        before = set(base.get("files", []))
+        added = [f for f in files if f not in before]
+        removed = before - set(files)
+        old_vectors = set(base.get("deletes", []))
+        vectors = [d for d in deletes if d not in old_vectors]
+        dropped = old_vectors - set(deletes)
+        timings = [
+            self._pending_ms.get(d, {}) for d in {os.path.dirname(p) for p in added + vectors}
+        ]
         manifest = {
             "version": version,
             "op": op,
             "files": files,
             "stats": stats,
             "committed_at": time.time(),
+            # Delta's commitInfo.operationMetrics: counts from the staged
+            # footers, bytes from os.stat of the data and vector files
+            "operationMetrics": {
+                "rows_added": sum(stats.get(f, {}).get("rows", 0) for f in added),
+                "files_added": len(added),
+                "bytes_added": _bytes(added + vectors),
+                "files_removed": len(removed),
+                "bytes_removed": _bytes(removed | dropped),
+                "vectors_added": len(vectors),
+                "stage_ms": round(sum(t.get("stage_ms", 0.0) for t in timings), 3),
+                "bloom_ms": round(sum(t.get("bloom_ms", 0.0) for t in timings), 3),
+            },
         }
         if deletes:
             manifest["deletes"] = deletes
@@ -235,6 +286,8 @@ class TransactionalTable:
         # have staged files for its own upcoming commit
         for f in files:
             self._pending_stats.pop(f, None)
+        for p in added + vectors:
+            self._pending_ms.pop(os.path.dirname(p), None)
         return version
 
     def _stats(self, version: int) -> dict:
@@ -247,6 +300,7 @@ class TransactionalTable:
     def _stage(self, df: DataFrame) -> list[str]:
         """Write immutable data files into a staging subdir, return paths."""
         stage_dir = os.path.join(self.path, f"stage-{uuid.uuid4().hex}")
+        t0 = time.perf_counter()
         df.write.mode("overwrite").parquet(stage_dir)
         paths = [
             os.path.join(stage_dir, f)
@@ -255,15 +309,19 @@ class TransactionalTable:
         ]
         stats = self._collect_stats(paths)
         self._pending_stats.update(stats)
+        t1 = time.perf_counter()
         # bloom build is a Spark job (one column-pruned scan of the new
         # files); an all-empty staging has no keys to index, so skip it
-        # (round 14 — the manifest is identical either way: empty files
-        # contribute no bloom words)
+        # (round 14 — empty files contribute no bloom words)
         if self.bloom_columns and any(s["rows"] for s in stats.values()):
             for p, blooms in self._build_blooms(
                 df.sparkSession, stage_dir, schema=df.schema
             ).items():
-                self._pending_stats.setdefault(p, {})["bloom"] = blooms
+                self._pending_stats.setdefault(p, {})["bloom"] = self._write_blooms(p, blooms)
+        self._pending_ms[stage_dir] = {
+            "stage_ms": (t1 - t0) * 1000.0,
+            "bloom_ms": (time.perf_counter() - t1) * 1000.0,
+        }
         return paths
 
     def _stage_nonempty(self, df: DataFrame) -> list[str]:
@@ -288,12 +346,14 @@ class TransactionalTable:
         for p in paths:
             self._pending_stats.pop(p, None)
         if paths:
+            self._pending_ms.pop(os.path.dirname(paths[0]), None)
             shutil.rmtree(os.path.dirname(paths[0]), ignore_errors=True)
         return []
 
-    # bloom sizing: capped so a manifest stays a small metadata read even
-    # for large files; fp rate rises past ~100k distinct keys/file, which
-    # only costs extra reads, never misses (no false negatives)
+    # default bloom size: an 8 KB bitmap per column per file, kept small
+    # because a point probe reads the sidecar of every file min/max
+    # admits; fp rate rises past ~5-10k distinct keys/file, which only
+    # costs extra reads, never misses (no false negatives)
     _BLOOM_BITS = 1 << 16
     _BLOOM_HASHES = 7
 
@@ -339,30 +399,67 @@ class TransactionalTable:
             out.append(chunk % bits)
         return out
 
+    @staticmethod
+    def _sidecar(path: str) -> str:
+        """The bloom sidecar of data file ``path``: ``_<name>.bloom`` in
+        the same directory."""
+        d, name = os.path.split(path)
+        return os.path.join(d, f"_{name}.bloom")
+
+    def _write_blooms(self, path: str, blooms: dict[str, int]) -> dict[str, dict]:
+        """Write ``path``'s bloom bitmaps once, as its sidecar: the
+        columns' little-endian bitmaps in column-name order, concatenated
+        and zlib-compressed.  Returns the manifest entry, which keeps only
+        each bloom's bit count."""
+        nbytes = (self.bloom_bits + 7) // 8
+        raw = b"".join(blooms[c].to_bytes(nbytes, "little") for c in sorted(blooms))
+        with open(self._sidecar(path), "wb") as f:
+            f.write(zlib.compress(raw))
+        return {c: {"bits": self.bloom_bits} for c in sorted(blooms)}
+
     @classmethod
-    def _bloom_entry(cls, entry) -> tuple[int, int] | None:
-        """Decode a manifest bloom entry -> (bits, bitmap).  Legacy plain
-        hex strings are the original fixed 2^16-bit format; dict entries
-        (round 12) carry their build-time size explicitly."""
+    def _bloom_entry(cls, path: str, blooms: dict, col: str) -> tuple[int, int] | None:
+        """Decode data file ``path``'s bloom on ``col`` -> (bits, bitmap),
+        or None when the file has no bloom for ``col``.
+
+        ``blooms`` is the file's manifest bloom entry.  Current entries
+        (``{"bits": n}``) point at the sidecar; a sidecar that is gone
+        decodes as no bloom, so the file is kept.  Manifests written
+        before sidecars carry the bitmap inline as hex: a plain string
+        (the original fixed 2^16 bits) or ``{"bits", "hex"}``."""
+        entry = blooms.get(col)
         if entry is None:
             return None
-        if isinstance(entry, dict):
+        if isinstance(entry, str):
+            return cls._BLOOM_BITS, int(entry, 16)
+        if "hex" in entry:
             return int(entry["bits"]), int(entry["hex"], 16)
-        return cls._BLOOM_BITS, int(entry, 16)
+        try:
+            with open(cls._sidecar(path), "rb") as f:
+                raw = zlib.decompress(f.read())
+        except FileNotFoundError:
+            return None
+        offset = 0
+        for c in sorted(blooms):
+            nbytes = (int(blooms[c]["bits"]) + 7) // 8
+            if c == col:
+                return int(entry["bits"]), int.from_bytes(raw[offset : offset + nbytes], "little")
+            offset += nbytes
 
     _BLOOM_TYPES = ("int", "bigint", "smallint", "tinyint", "string")
 
     def _build_blooms(
         self, spark: SparkSession, stage_dir: str, schema: StructType | None = None
-    ) -> dict[str, dict[str, str]]:
-        """Per-file bloom filters over ``bloom_columns``, hex-encoded for
-        the JSON manifest.
+    ) -> dict[str, dict[str, int]]:
+        """Per-file bloom filters over ``bloom_columns``: ``{path: {col:
+        bitmap}}`` with each bitmap a ``bloom_bits``-bit int, which
+        :meth:`_write_blooms` stores as the file's sidecar.
 
         The point-lookup complement of min/max stats: an equality probe on
         a high-cardinality key (user id, doc id, order key) rarely prunes
         by range — every file spans most of the key domain — but a bloom
-        answers "definitely not in this file" in O(k) bit tests from the
-        commit log alone (the Delta/Iceberg bloom-index mechanism; the
+        answers "definitely not in this file" in O(k) bit tests without
+        opening the data file (the Delta/Iceberg bloom-index mechanism; the
         reference has no point-lookup path at all).
 
         Built as a DISTRIBUTED aggregation over the staged files: each row
@@ -431,15 +528,9 @@ class TransactionalTable:
             # Java's long is signed: bit 63 comes back negative — mask
             per_file.setdefault(key, 0)
             per_file[key] |= (r["__m"] & ((1 << 64) - 1)) << (64 * r["__w"])
-        out: dict[str, dict[str, str]] = {}
+        out: dict[str, dict[str, int]] = {}
         for (path, c), bitmap in per_file.items():
-            if self.bloom_bits == self._BLOOM_BITS:
-                out.setdefault(path, {})[c] = f"{bitmap:x}"  # legacy form
-            else:
-                out.setdefault(path, {})[c] = {
-                    "bits": self.bloom_bits,
-                    "hex": f"{bitmap:x}",
-                }
+            out.setdefault(path, {})[c] = bitmap
         return out
 
     @staticmethod
@@ -520,9 +611,10 @@ class TransactionalTable:
         """
         new_files = self._stage(df)
         base = self._manifest()
-        prev = base["files"] if base is not None else []
-        schema = self._evolved_schema(base, df)
-        return self._commit(prev + new_files, "append", txn=txn, base=base, schema=schema)
+        with self._reclaiming(base, new_files):
+            prev = base["files"] if base is not None else []
+            schema = self._evolved_schema(base, df)
+            return self._commit(prev + new_files, "append", txn=txn, base=base, schema=schema)
 
     def overwrite(self, df: DataFrame, txn: tuple[str, int] | None = None) -> int:
         """ACID overwrite: new snapshot references only the new files.
@@ -532,9 +624,11 @@ class TransactionalTable:
         time travel still reads each old version under ITS schema.
         """
         base = self._manifest()
-        return self._commit(
-            self._stage(df), "overwrite", txn=txn, base=base, schema=df.schema, deletes=[]
-        )
+        new_files = self._stage(df)
+        with self._reclaiming(base, new_files):
+            return self._commit(
+                new_files, "overwrite", txn=txn, base=base, schema=df.schema, deletes=[]
+            )
 
     def added_files(self, since_version: int | None, version: int | None = None) -> list[str]:
         """Data files present in ``version`` but not in ``since_version``
@@ -623,7 +717,8 @@ class TransactionalTable:
         # round 14: emptiness decided from the staged footers, not a
         # separate limit(1).count() probe job (see _stage_nonempty)
         new_files = self._stage_nonempty(survivors)
-        return self._commit(keep + new_files, "delete", base=m)
+        with self._reclaiming(m, new_files):
+            return self._commit(keep + new_files, "delete", base=m)
 
     # -- merge-on-read deletes (deletion vectors) ---------------------------
 
@@ -716,10 +811,16 @@ class TransactionalTable:
         is rewritten — the rewrite is deferred to :meth:`compact` /
         :meth:`optimize`.
 
-        Emptiness of both halves comes from the staged parquet footers,
-        not from a probe job; when both are empty nothing is committed
-        and ``m``'s version is returned.  If staging or the commit fails,
-        :meth:`_reclaim` removes the staged directories unless the
+        The vector is written through ``repartition(1)``, so a mutation
+        adds ONE vector file, not one per scan task, to every later
+        read's broadcast; the scan keeps its parallelism (``coalesce(1)``
+        would not).  The shuffle costs one extra Spark job per mutation
+        under adaptive execution, which runs its map stage as a job of
+        its own.  Emptiness of
+        both halves comes from the staged parquet footers, not from a
+        probe job; when both are empty nothing is committed and ``m``'s
+        version is returned.  If staging or the commit fails,
+        :meth:`_reclaiming` removes the staged directories unless the
         version this commit claimed references them.
         """
         import pyarrow.parquet as pq
@@ -731,25 +832,27 @@ class TransactionalTable:
         dirs: list[str] = []
         vectors: list[str] = []
         staged: list[str] = []
-        try:
+        with self._reclaiming(m, vectors, staged, dirs=dirs):
             if files:
                 matched = match(self._live(spark, files, m, tagged=True)).select(
                     F.col("_dv_file").alias("file_path"), F.col("_dv_pos").alias("row_index")
                 )
                 stage_dir = os.path.join(self.path, f"deletes-{uuid.uuid4().hex}")
                 dirs.append(stage_dir)
-                matched.write.parquet(stage_dir)
-                vectors = [
+                t0 = time.perf_counter()
+                matched.repartition(1).write.parquet(stage_dir)
+                vectors.extend(
                     os.path.join(stage_dir, f)
                     for f in sorted(os.listdir(stage_dir))
                     if f.endswith(".parquet")
-                ]
+                )
                 if sum(pq.ParquetFile(p).metadata.num_rows for p in vectors) == 0:
                     shutil.rmtree(stage_dir, ignore_errors=True)
-                    vectors = []
+                    vectors.clear()
+                else:
+                    self._pending_ms[stage_dir] = {"stage_ms": (time.perf_counter() - t0) * 1000.0}
             if rows is not None:
-                staged = self._stage_nonempty(rows)
-                dirs.extend({os.path.dirname(p) for p in staged})
+                staged.extend(self._stage_nonempty(rows))
             if not (vectors or staged):
                 return m["version"] if m else None
             # the schema evolves only when rows land (a delete-only batch
@@ -762,34 +865,41 @@ class TransactionalTable:
                 schema=schema if staged else None,
                 deletes=(m.get("deletes", []) if m else []) + vectors,
             )
+
+    @contextlib.contextmanager
+    def _reclaiming(self, m: dict | None, *staged: list[str], dirs: list[str] = ()):
+        """Run a body that stages files and commits them on top of ``m``
+        (every write path commits inside one).  If it raises, undo the
+        staging: remove ``dirs`` and the directories of the ``staged``
+        paths (data files, bloom sidecars, vectors) and drop those paths'
+        pending stats and timings.  The lists are read only then, so a
+        body may fill them as it stages.
+
+        Nothing is removed if the version the commit claimed references
+        a staged path: ``_commit``'s ``os.link`` can succeed (the version
+        is durable and points at these files) and still raise afterwards;
+        deleting then would corrupt the committed version.  A manifest
+        that cannot be read proves nothing, so the files are kept."""
+        try:
+            yield
         except Exception:
             # Exception, not BaseException: an interrupt between the link
             # and the return must not trigger cleanup either
-            self._reclaim(m, dirs, vectors + staged)
+            paths = [p for ps in staged for p in ps]
+            try:
+                landed = self._read_manifest(0 if m is None else m["version"] + 1)
+                refs = set(landed.get("files", [])) | set(landed.get("deletes", []))
+            except FileNotFoundError:
+                refs = set()
+            except (OSError, ValueError):
+                refs = None
+            if refs is not None and refs.isdisjoint(paths):
+                for p in paths:
+                    self._pending_stats.pop(p, None)
+                for d in set(dirs) | {os.path.dirname(p) for p in paths}:
+                    self._pending_ms.pop(d, None)
+                    shutil.rmtree(d, ignore_errors=True)
             raise
-
-    def _reclaim(self, m: dict | None, dirs: list[str], paths: list[str]) -> None:
-        """Undo the staging of a mutation on top of ``m`` that raised:
-        remove ``dirs`` and drop ``paths``' pending stats — but ONLY if
-        the version the commit claimed does not reference ``paths``.
-        ``_commit``'s ``os.link`` can succeed (the version is durable and
-        points at these files) and still raise afterwards; deleting then
-        would corrupt the committed version.  A manifest that cannot be
-        read proves nothing, so the files are kept."""
-        version = 0 if m is None else m["version"] + 1
-        try:
-            landed = self._read_manifest(version)
-        except FileNotFoundError:
-            landed = {}
-        except (OSError, ValueError):
-            return
-        refs = set(landed.get("files", [])) | set(landed.get("deletes", []))
-        if any(p in refs for p in paths):
-            return
-        for p in paths:
-            self._pending_stats.pop(p, None)
-        for d in dirs:
-            shutil.rmtree(d, ignore_errors=True)
 
     def apply_cdc(
         self,
@@ -866,7 +976,9 @@ class TransactionalTable:
 
         m = self._manifest()
         if m is None:
-            return self._commit(self._stage(source), "merge", txn=txn, base=m, schema=source.schema)
+            new_files = self._stage(source)
+            with self._reclaiming(m, new_files):
+                return self._commit(new_files, "merge", txn=txn, base=m, schema=source.schema)
         keys = F.broadcast(source.select(key).distinct())
         return self._mutate(
             spark, m, "merge", lambda live: live.join(keys, key, "left_semi"), rows=source, txn=txn
@@ -915,12 +1027,12 @@ class TransactionalTable:
     @staticmethod
     def _prune(m: dict, keep) -> list[str]:
         """The one walk over a manifest's file stats: the files (in
-        manifest order) whose stats entry ``keep`` admits.  Files without
+        manifest order) that ``keep(path, stats)`` admits.  Files without
         recorded stats arrive as ``{}``, which every ``_*_test`` keeps — the
         Inexact contract: pruning may keep extra files, never drop one
         holding a match."""
         stats = m.get("stats", {})
-        return [f for f in m["files"] if keep(stats.get(f) or {})]
+        return [f for f in m["files"] if keep(f, stats.get(f) or {})]
 
     def prune_files(self, ranges: dict[str, tuple[float, float]], version: int | None = None) -> list[str]:
         """Manifest-stats file skipping: the files a scan with the given
@@ -937,7 +1049,7 @@ class TransactionalTable:
 
     @staticmethod
     def _range_test(ranges: dict[str, tuple[float, float]]):
-        def keep(st: dict) -> bool:
+        def keep(_path: str, st: dict) -> bool:
             mins, maxs = st.get("min", {}), st.get("max", {})
             return not any(
                 c in mins and (maxs[c] < lo or mins[c] > hi) for c, (lo, hi) in ranges.items()
@@ -966,7 +1078,7 @@ class TransactionalTable:
     def _values_test(col: str, values):
         vals = sorted(set(values))
 
-        def keep(st: dict) -> bool:
+        def keep(_path: str, st: dict) -> bool:
             if col not in st.get("min", {}):
                 return True
             lo, hi = st["min"][col], st["max"][col]
@@ -978,7 +1090,7 @@ class TransactionalTable:
         self, col: str, values, version: int | None = None
     ) -> list[str]:
         """Files an IN-list probe ``col IN (values)`` must read, from the
-        manifest BLOOMS — the point-lookup complement of
+        per-file BLOOMS — the point-lookup complement of
         :meth:`prune_files_by_values` (whose min/max path needs the table
         RANGE-clustered on ``col``; blooms prune hash-scattered keys too).
         A file is kept iff its bloom admits AT LEAST ONE probe key; files
@@ -997,8 +1109,8 @@ class TransactionalTable:
         keys = set(values)
         pos_cache: dict[int, list[list[int]]] = {}
 
-        def keep(st: dict) -> bool:
-            decoded = cls._bloom_entry(st.get("bloom", {}).get(col))
+        def keep(path: str, st: dict) -> bool:
+            decoded = cls._bloom_entry(path, st.get("bloom", {}), col)
             if decoded is None:
                 return True
             nbits, bitmap = decoded
@@ -1090,7 +1202,9 @@ class TransactionalTable:
         in_range = self._values_test(col, vals)
         in_bloom = self._bloom_test(col, vals)
         try:
-            files = self._prune(m, lambda st: in_range(st) and in_bloom(st))
+            # the bloom (a sidecar read) is consulted only for files that
+            # survive min/max
+            files = self._prune(m, lambda f, st: in_range(f, st) and in_bloom(f, st))
         except TypeError:
             # float keys: blooms excluded by contract, range stats stand
             files = self._prune(m, in_range)
@@ -1193,7 +1307,8 @@ class TransactionalTable:
         return self.overwrite(clustered)
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
-        """Drop data files unreachable from the newest ``keep_versions``.
+        """Drop data files unreachable from the newest ``keep_versions``,
+        with their bloom sidecars, and unreachable deletion vectors.
 
         Returns the deleted paths.  Destroys time travel beyond the kept
         window (same contract as Delta VACUUM).
@@ -1211,6 +1326,10 @@ class TransactionalTable:
                 if f not in keep and os.path.exists(f):
                     os.unlink(f)
                     removed.append(f)
+                    side = self._sidecar(f)
+                    if os.path.exists(side):
+                        os.unlink(side)
+                        removed.append(side)
         return removed
 
 

@@ -766,3 +766,202 @@ def test_merge_commit_crash_after_link_keeps_referenced_files(spark, table, monk
     got = {r.k: r.v for r in table.read(spark).collect()}
     assert len(got) == 21 and got[3] == -1 and got[50] == -1
     assert _unreferenced_staging(table) == []
+
+
+# -- manifest v2: bloom sidecars, operation metrics --------------------------
+
+
+def _keyed(spark, lo, hi, parts):
+    """Rows k in [lo, hi) dealt round-robin into ``parts`` files, so every
+    file spans about the whole key range and only blooms prune."""
+    return spark.range(lo, hi).select(F.col("id").alias("k"), (F.col("id") * 3).alias("v")).repartition(parts)
+
+
+def test_v2_manifest_holds_no_bitmap_text(spark, tmp_path):
+    """Blooms live in per-file sidecars: the manifest entry is only the
+    bit count, and an 8-file bloom table's manifest stays under 1 KB per
+    file (an inline 2^16-bit hex bloom alone was ~16 KB per file)."""
+    import json
+    import re
+
+    t = TransactionalTable(str(tmp_path / "v2"), bloom_columns=("k",))
+    t.append(_keyed(spark, 0, 8000, 8))
+    v = t.latest_version()
+    with open(t._manifest_path(v)) as f:
+        raw = f.read()
+    m = json.loads(raw)
+    assert len(m["files"]) == 8
+    assert all(m["stats"][f]["bloom"] == {"k": {"bits": 1 << 16}} for f in m["files"])
+    assert "hex" not in raw and not re.search(r"[0-9a-f]{64}", raw)
+    assert len(raw) < 1024 * len(m["files"]), len(raw)
+    assert [r.v for r in t.lookup(spark, "k", 4321).collect()] == [4321 * 3]
+
+
+def test_bloom_sidecars_written_once_and_vacuumed(spark, tmp_path):
+    """Each new data file gets a ``_<name>.bloom`` sidecar at staging; a
+    later commit leaves it untouched; ``vacuum`` removes it with its
+    file."""
+    import os
+
+    t = TransactionalTable(str(tmp_path / "side"), bloom_columns=("k",))
+    t.append(_keyed(spark, 0, 400, 2))
+    first = t.history()[-1]["files"]
+    sides = [t._sidecar(f) for f in first]
+    assert all(os.path.basename(s).startswith("_") for s in sides)
+    before = {s: (os.stat(s).st_mtime_ns, os.path.getsize(s)) for s in sides}
+    t.append(_keyed(spark, 400, 600, 1))
+    assert {s: (os.stat(s).st_mtime_ns, os.path.getsize(s)) for s in sides} == before
+    assert all(os.path.exists(t._sidecar(f)) for f in t.history()[-1]["files"])
+
+    t.optimize(spark, target_files=1)
+    removed = set(t.vacuum(keep_versions=1))
+    assert set(sides) <= removed
+    assert not any(os.path.exists(s) for s in sides)
+    (live,) = t.history()[-1]["files"]
+    assert os.path.exists(t._sidecar(live))
+    assert [r.v for r in t.lookup(spark, "k", 123).collect()] == [369]
+    assert t.prune_files_by_keys("k", [10**9]) == []
+    # a lost sidecar keeps its file (no bloom means no pruning)
+    os.unlink(t._sidecar(live))
+    assert t.prune_files_by_keys("k", [10**9]) == [live]
+    assert [r.v for r in t.lookup(spark, "k", 124).collect()] == [372]
+
+
+def _v1_entry(t, path, bits):
+    """A pre-sidecar inline bloom entry for data file ``path``, built in
+    Python from the file's keys: plain hex at 2^16 bits, else
+    ``{"bits", "hex"}``."""
+    import pyarrow.parquet as pq
+
+    bitmap = 0
+    for k in pq.read_table(path, columns=["k"]).column("k").to_pylist():
+        for pos in t._bloom_positions(k, bits):
+            bitmap |= 1 << pos
+    return f"{bitmap:x}" if bits == 1 << 16 else {"bits": bits, "hex": f"{bitmap:x}"}
+
+
+def _write_v1_manifest(spark, path):
+    """A 4-file table whose manifest carries inline v1 blooms on ``k``:
+    two plain-hex entries and two ``{"bits": 2^12, "hex"}`` entries."""
+    import json
+
+    t = TransactionalTable(path)
+    t.append(_keyed(spark, 0, 1000, 4))
+    v = t.latest_version()
+    m = t._read_manifest(v)
+    for i, f in enumerate(m["files"]):
+        m["stats"][f]["bloom"] = {"k": _v1_entry(t, f, 1 << 16 if i < 2 else 1 << 12)}
+    with open(t._manifest_path(v), "w") as out:
+        json.dump(m, out)
+    return m["files"]
+
+
+def _holder(files, k):
+    import pyarrow.parquet as pq
+
+    return [f for f in files if k in pq.read_table(f, columns=["k"]).column("k").to_pylist()]
+
+
+def test_v1_inline_bloom_manifest_still_prunes_and_reads(spark, tmp_path):
+    path = str(tmp_path / "v1")
+    files = _write_v1_manifest(spark, path)
+    t = TransactionalTable(path)
+    for k in (0, 1, 2, 3, 777):
+        kept = t.prune_files_by_keys("k", [k])
+        assert set(_holder(files, k)) <= set(kept) and len(kept) < len(files)
+        assert [(r.k, r.v) for r in t.lookup(spark, "k", k).collect()] == [(k, 3 * k)]
+    got = sorted(tuple(r) for r in t.scan_in(spark, "k", [5, 600, 5000]).collect())
+    assert got == [(5, 15), (600, 1800)]
+    assert t.lookup(spark, "k", 5000).count() == 0
+
+
+def test_mixed_v1_and_v2_bloom_manifest(spark, tmp_path):
+    """A v2 commit on a v1 table carries the inline entries forward
+    unrewritten, and pruning and reads stay exact across both."""
+    path = str(tmp_path / "mixed")
+    old = _write_v1_manifest(spark, path)
+    t = TransactionalTable(path, bloom_columns=("k",))
+    t.append(_keyed(spark, 1000, 1400, 2))
+    m = t._read_manifest(t.latest_version())
+    new = [f for f in m["files"] if f not in old]
+    assert len(new) == 2
+    assert all(m["stats"][f]["bloom"]["k"] == {"bits": 1 << 16} for f in new)
+    legacy = [m["stats"][f]["bloom"]["k"] for f in old]
+    assert all(isinstance(e, str) or "hex" in e for e in legacy)
+    for k in (7, 1001, 1398):
+        kept = t.prune_files_by_keys("k", [k])
+        assert set(_holder(m["files"], k)) <= set(kept) and len(kept) < len(m["files"])
+    got = sorted(tuple(r) for r in t.scan_in(spark, "k", [7, 1001, 1398, 9999]).collect())
+    assert got == [(7, 21), (1001, 3003), (1398, 4194)]
+    assert [r.v for r in t.lookup(spark, "k", 1200).collect()] == [3600]
+
+
+_OP_METRICS = {
+    "rows_added", "files_added", "bytes_added", "files_removed",
+    "bytes_removed", "vectors_added", "stage_ms", "bloom_ms",
+}
+
+
+def test_history_returns_operation_metrics(spark, tmp_path):
+    import os
+
+    t = TransactionalTable(str(tmp_path / "om"), bloom_columns=("k",))
+    t.append(_keyed(spark, 0, 400, 2))
+    src = spark.createDataFrame([(3, -1), (7, -1), (900, -1)], "k long, v long").repartition(3)
+    t.merge(spark, src, "k")
+    t.delete_where_mor(spark, "k < 2")
+    t.optimize(spark, target_files=1)
+    h = t.history()
+    assert [x["op"] for x in h] == ["append", "merge", "delete-mor", "overwrite"]
+    assert all(set(x["operationMetrics"]) == _OP_METRICS for x in h)
+    append, merge, delete, optimize = (x["operationMetrics"] for x in h)
+    assert (append["rows_added"], append["files_added"], append["vectors_added"]) == (400, 2, 0)
+    assert append["bytes_added"] == sum(os.path.getsize(f) for f in h[0]["files"])
+    assert append["stage_ms"] > 0 and append["bloom_ms"] > 0
+    assert (merge["rows_added"], merge["vectors_added"], merge["files_removed"]) == (3, 1, 0)
+    assert (delete["rows_added"], delete["files_added"], delete["vectors_added"]) == (0, 0, 1)
+    assert delete["bloom_ms"] == 0
+    assert (optimize["rows_added"], optimize["files_added"]) == (399, 1)
+    assert optimize["files_removed"] == len(h[2]["files"])
+    assert optimize["bytes_removed"] > 0 and optimize["vectors_added"] == 0
+
+
+def test_merge_writes_one_vector_file(spark, tmp_path):
+    """A merge whose match scan runs as several tasks (a 4-file table, a
+    4-partition source) still adds exactly one deletion-vector file."""
+    t = TransactionalTable(str(tmp_path / "onedv"))
+    t.append(_keyed(spark, 0, 400, 4))
+    src = spark.createDataFrame([(k, -1) for k in range(0, 400, 7)], "k long, v long")
+    t.merge(spark, src.repartition(4), "k")
+    assert len(t.history()[-1]["deletes"]) == 1
+    got = {r.k: r.v for r in t.read(spark).collect()}
+    assert len(got) == 400 and got[7] == -1 and got[8] == 24
+
+
+@pytest.mark.parametrize("op", ["append", "delete_where"])
+def test_failed_commit_reclaims_staging(spark, tmp_path, monkeypatch, op):
+    """``append`` and copy-on-write ``delete_where`` whose commit fails
+    before landing leave no staged directory, no bloom sidecar and no
+    pending stats behind."""
+    import glob
+
+    t = TransactionalTable(str(tmp_path / "leak"), bloom_columns=("k",))
+    t.append(_keyed(spark, 0, 400, 4))
+    v = t.latest_version()
+
+    def failing(self, *a, **k):
+        raise CommitConflict("simulated pre-link failure")
+
+    monkeypatch.setattr(TransactionalTable, "_commit", failing)
+    with pytest.raises(CommitConflict):
+        if op == "append":
+            t.append(_keyed(spark, 400, 500, 2))
+        else:
+            t.delete_where(spark, "k % 3 = 0")
+    monkeypatch.undo()
+    assert t.latest_version() == v
+    assert _unreferenced_staging(t) == []
+    assert t._pending_stats == {} and t._pending_ms == {}
+    live = {t._sidecar(f) for f in t.history()[-1]["files"]}
+    assert set(glob.glob(f"{t.path}/*/_*.bloom")) == live
+    assert t.read(spark).count() == 400

@@ -373,10 +373,11 @@ def test_scan_in_list_dataframe_and_overcap_fallback(spark, tmp_path):
 def test_bloom_bits_knob_and_mixed_size_manifest(spark, tmp_path):
     """Round 12: bloom_bits is a write-side knob (saturation fix for
     high-key-count files); each manifest entry records its build-time
-    size, so commits of DIFFERENT sizes coexist in one table and legacy
-    plain-hex entries still decode as the 2^16 default.  (Round 13: an
+    size (``{"bits": n}``; the bitmap is in the file's sidecar), so
+    commits of DIFFERENT sizes coexist in one table.  (Round 13: an
     UNSPECIFIED size now inherits the persisted table property, so the
-    mixed-size second commit must ask for the default explicitly.)"""
+    mixed-size second commit must ask for the default explicitly.)
+    Decoding of inline legacy entries is covered in test_snapshots.py."""
     path = str(tmp_path / "bb")
     big = TransactionalTable(path, bloom_columns=("s",), bloom_bits=1 << 18)
     df = spark.createDataFrame(
@@ -388,10 +389,10 @@ def test_bloom_bits_knob_and_mixed_size_manifest(spark, tmp_path):
     legacy.append(spark.createDataFrame([("extra", 99)], "s string, v long"))
     m = legacy._read_manifest(legacy.latest_version())
     entries = [(m["stats"][f].get("bloom") or {}).get("s") for f in m["files"]]
-    assert any(isinstance(e, dict) and e["bits"] == 1 << 18 for e in entries)
-    assert any(isinstance(e, str) for e in entries)  # legacy form preserved
+    assert any(e == {"bits": 1 << 18} for e in entries)
+    assert any(e == {"bits": 1 << 16} for e in entries)
     kept = legacy.prune_files_by_keys("s", ["k3"])
-    assert set(kept) < set(m["files"])  # prunes across both formats
+    assert set(kept) < set(m["files"])  # prunes across both sizes
     got = sorted(
         tuple(r) for r in legacy.scan_in(spark, "s", ["k3", "extra"]).collect()
     )
@@ -424,9 +425,7 @@ def test_bloom_knobs_persist_as_table_properties(spark, tmp_path):
     m2 = bare._read_manifest(bare.latest_version())
     assert m2["properties"] == {"bloom_columns": ["s"], "bloom_bits": 1 << 18}
     entries = [(m2["stats"][f].get("bloom") or {}).get("s") for f in m2["files"]]
-    assert entries and all(
-        isinstance(e, dict) and e["bits"] == 1 << 18 for e in entries
-    ), entries
+    assert entries and all(e == {"bits": 1 << 18} for e in entries), entries
     # and the rebuilt blooms actually prune + read correctly
     kept = bare.prune_files_by_keys("s", ["k3"])
     assert set(kept) < set(m2["files"])
