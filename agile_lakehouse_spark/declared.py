@@ -3798,7 +3798,7 @@ ORACLES["dq155_orc_roundtrip"] = """
 
 def time_travel_q(spark, sf_dir):
     """dq156: snapshot time travel under the value gate — two appends and
-    one copy-on-write DELETE build three versions of an orders table
+    one merge-on-read DELETE build three versions of an orders table
     (``plans/snapshots.py::TransactionalTable.read(version=...)``; the
     reference's commit-log surface, Iceberg/Delta ``VERSION AS OF``), then
     every historical version is aggregated THROUGH the time-travel read.
@@ -3816,7 +3816,7 @@ def time_travel_q(spark, sf_dir):
         t = TransactionalTable(f"{tmp}/orders")
         v0 = t.append(orders.filter(F.col("o_orderkey") % 3 == 0))
         v1 = t.append(orders.filter(F.col("o_orderkey") % 3 == 1))
-        v2 = t.delete_where(spark, "o_orderstatus = 'O'")
+        v2 = t.delete_where_mor(spark, "o_orderstatus = 'O'")
         steps = []
         for step, v in enumerate((v0, v1, v2)):
             steps.append(
@@ -4310,7 +4310,7 @@ def incremental_view_q(spark, sf_dir):
     value gate (`plans/incremental.py::IncrementalAggregate` — the
     commit-log file-diff as free CDC).  Three refreshes: the first is a
     full build, the second must take the INCREMENTAL path (append-only
-    delta, scans only the new files), and a copy-on-write DELETE then
+    delta, scans only the new files), and a merge-on-read DELETE then
     forces the FULL-recompute fallback.  The refresh modes are emitted as
     literal columns so the oracle pins that the fast path actually
     engaged and the fallback actually triggered — plus the final state
@@ -4340,7 +4340,7 @@ def incremental_view_q(spark, sf_dir):
         view.refresh(spark)
         t.append(src.filter(F.col("o_orderkey") % 3 == 1))
         r2 = view.refresh(spark)
-        t.delete_where(spark, "o_orderstatus = 'F'")
+        t.delete_where_mor(spark, "o_orderstatus = 'F'")
         r3 = view.refresh(spark)
         out = (
             view.read(spark)

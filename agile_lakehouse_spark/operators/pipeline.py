@@ -26,39 +26,29 @@ from pyspark.sql import functions as F
 from agile_lakehouse_spark.operators import dedup
 from agile_lakehouse_spark.operators.text import quality_score
 
-# How curate_corpus_incremental pins the cross-batch STATE frames:
-# "checkpoint" (default) = LAZY localCheckpoint — truncates the state's
-# lineage at pin time (batch N+1 plans against a LogicalRDD instead of
-# embedding every prior batch's full pipeline) while the blocks are
-# computed on first use, overlapped with batch N+1's own stages.  Guide
-# §3.3/§5: very large plans make the optimizer itself the bottleneck —
-# under "persist" (the round-9..12 behavior, kept for A/B) dq124b's
-# 2-batch execution ran 85 serial AQE stage jobs and 7.7-9.1 s vs
-# checkpoint's 47 jobs / 4.0-4.6 s, because persist truncates nothing at
-# planning time and every prior batch's pipeline is re-planned per
-# consumer.  "eager_checkpoint" (measured worse: it serializes the state
-# materialization into standalone driver-blocking jobs, build 8-10 s)
-# completes the A/B matrix.  "table" (round 14, VERDICT r13 item 2) is
-# the SCALE-SAFE mode: state lands in a TransactionalTable under
-# $SPARK_GRAFT_STATE_PIN_DIR (default: one tempdir per process, removed
-# at exit) and reads back as a plain parquet scan — localCheckpoint
-# blocks live on executors and are UNRECOVERABLE after an executor loss
-# (the job fails, it cannot recompute), acceptable on local[n] where
-# executor==driver, fatal on a
-# real cluster; the table mode is exactly the "production reloads state
-# from the lakehouse between batches" contract, durable across executor
-# AND driver restarts.  Content is identical in all four modes: the same
-# deterministic frame, pinned; only lineage/durability differ (pinned by
+# How curate_corpus_incremental pins the cross-batch STATE frames
+# (SPARK_GRAFT_STATE_PIN, read from the environment AT CALL TIME — tests
+# monkeypatch it; an unknown value raises rather than silently meaning
+# checkpoint):
+# - "checkpoint" (default) = LAZY localCheckpoint — truncates the state's
+#   lineage at pin time (batch N+1 plans against a LogicalRDD instead of
+#   embedding every prior batch's full pipeline) while the blocks are
+#   computed on first use, overlapped with batch N+1's own stages (very
+#   large plans make the optimizer itself the bottleneck).
+#   The blocks live on executors and are UNRECOVERABLE after an executor
+#   loss (the job fails, it cannot recompute): acceptable on local[n],
+#   where executor==driver, fatal on a real cluster.  They free at GC or
+#   session end; DataFrame.unpersist() does not release them.
+# - "table" = the SCALE-SAFE mode: state lands in a TransactionalTable
+#   under $SPARK_GRAFT_STATE_PIN_DIR (default: one tempdir per process,
+#   removed at exit; a user-set directory is never removed) and reads
+#   back as a plain parquet scan — the "production reloads state from the
+#   lakehouse between batches" contract, durable across executor AND
+#   driver restarts.
+# Content is identical in both modes: the same deterministic frame,
+# pinned; only lineage/durability differ (pinned by
 # test_curate_incremental_state_pin_table_mode).
-#
-# Lifetime contract: frames pinned via (eager_)checkpoint/table are NOT
-# unpersist-able — DataFrame.unpersist() is a cacheManager no-op for
-# them, so a caches=[...] sweep releases only the "persist" mode's
-# blocks; checkpoint blocks free at GC/session end, table files at
-# process exit (never, under a user-set SPARK_GRAFT_STATE_PIN_DIR).  The mode is read from the environment AT CALL TIME
-# (tests monkeypatch it); unknown values raise rather than silently
-# meaning checkpoint.
-_STATE_PIN_MODES = ("checkpoint", "eager_checkpoint", "persist", "table")
+_STATE_PIN_MODES = ("checkpoint", "table")
 
 
 def _pin_state(df: DataFrame, caches: list | None) -> DataFrame:
@@ -67,12 +57,10 @@ def _pin_state(df: DataFrame, caches: list | None) -> DataFrame:
         raise ValueError(
             f"SPARK_GRAFT_STATE_PIN={mode!r}: expected one of {_STATE_PIN_MODES}"
         )
-    if mode == "persist":
-        df = df.persist()
-    elif mode == "table":
+    if mode == "table":
         df = _pin_state_table(df)
     else:
-        df = df.localCheckpoint(eager=(mode == "eager_checkpoint"))
+        df = df.localCheckpoint(eager=False)
     if caches is not None:
         caches.append(df)
     return df

@@ -47,29 +47,30 @@ blooms inline as hex and still read.  Each commit also records
 added, staging and bloom time), which :meth:`TransactionalTable.history`
 returns.
 
-Row-level mutations are merge-on-read: ``delete_where_mor``,
+Every row-level change is merge-on-read: ``delete_where_mor``,
 ``delete_keys_mor``, ``merge`` and ``apply_cdc`` share one body that
 records the (file, row position) of every row they retire as a deletion
 vector and stages the rows they insert, both in ONE commit — no data
-file is rewritten, so an upsert writes about its own size.  Reads carry
-those vectors until ``optimize``/``compact`` rewrites the table.  Only
-``delete_where`` is copy-on-write (it rewrites the files holding matches,
-searching just the caller's ``candidate_files`` when given).
+file is rewritten, so an upsert writes about its own size.  A data file
+whose every row the new vector retires leaves the file list instead of
+being masked.  Reads carry the vectors until ``optimize``/``compact``
+rewrites the table; only ``overwrite``, ``compact`` and ``optimize``
+write data files that replace others.
 
 In production swap this for Delta/Iceberg; the engine's call sites are
 format-agnostic:
 
 - operators/dedup and operators/similarity stores: through
   :class:`StateStore` (``latest_version``, ``scan_in``, ``append``);
-  SemDeDup's assign table directly (``read``, ``delete_where`` with
-  ``prune_files_by_values`` candidates, ``append``);
+  SemDeDup's assign table directly (``read``, ``delete_keys_mor`` with
+  the dirty-cell list, ``append``) — like every merge-on-read table it
+  carries its vectors until ``optimize``/``compact``;
 - operators/pipeline state pins: ``append``, ``read``;
 - plans/incremental views: ``appends_only_between``, ``added_files``,
   ``read``, ``overwrite``;
 - streaming/ingest: ``merge``, ``last_txn_batch``;
-- declared lakehouse entries: ``append``, ``delete_where``,
-  ``delete_where_mor``, ``apply_cdc``, ``optimize``, ``read`` (time
-  travel included).
+- declared lakehouse entries: ``append``, ``delete_where_mor``,
+  ``apply_cdc``, ``optimize``, ``read`` (time travel included).
 """
 
 from __future__ import annotations
@@ -328,17 +329,11 @@ class TransactionalTable:
         """Stage ``df`` and return its file paths, or ``[]`` if it produced
         zero rows (the staged dir is removed and its stats dropped).
 
-        Round 14 (guide §1.2/§5 — VERDICT r13 item 1): the mutation paths
-        used to run a separate ``df.limit(1).count()`` probe job per call
-        to decide whether to stage at all; when non-empty (the common
-        case) the probe recomputed the survivor pipeline the write was
-        about to run anyway — one extra serial driver-blocking Spark job
-        per DELETE/MERGE.  Emptiness now falls out of the parquet footers
-        the staging write already produces (``_collect_stats`` is a
-        driver-side metadata read, not a job): stage unconditionally,
-        discard if empty.  Job parity when empty too: the write job
-        replaces the probe job (and ``_stage`` skips the bloom job for
-        all-empty stagings).
+        How :meth:`_mutate` stages the rows it inserts: emptiness falls
+        out of the parquet footers the write already produces
+        (``_collect_stats`` is a driver-side metadata read), so no
+        ``limit(1).count()`` probe job recomputes the rows first, and
+        ``_stage`` skips the bloom job for an all-empty staging.
         """
         paths = self._stage(df)
         if any(self._pending_stats.get(p, {}).get("rows") for p in paths):
@@ -672,55 +667,7 @@ class TransactionalTable:
                 return False
         return True
 
-    def delete_where(
-        self,
-        spark: SparkSession,
-        condition,
-        candidate_files: list[str] | None = None,
-    ) -> int:
-        """Copy-on-write DELETE (Delta-style): rewrite ONLY the files that
-        contain matching rows; untouched files are carried into the new
-        snapshot as-is.
-
-        ``condition``: SQL string or Column.  Old files remain on disk for
-        time travel until :func:`vacuum`.
-
-        ``candidate_files``: optional manifest-pruned superset of the
-        files that can contain matching rows (e.g. from
-        :meth:`prune_files_by_values` for a key IN-list delete) — the
-        affected-file search then scans only those instead of the whole
-        table.  The caller is responsible for the superset property;
-        stats-based pruning is conservative, so manifest prunes qualify.
-        """
-        from pyspark.sql import functions as F
-
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        m = self._manifest()
-        files = m["files"]
-        search = files if candidate_files is None else candidate_files
-        if not search:
-            return m["version"]
-        # version-schema reads: a post-evolution file set is heterogeneous,
-        # and a bare parquet read would take one file's footer as THE schema
-        # (dropping newer columns from rewritten survivors); _live applies
-        # deletion vectors so MOR-deleted rows can't resurrect in a rewrite
-        tagged = self._live(spark, search, m, tagged=True)
-        rows = tagged.filter(cond).select("_dv_file").distinct().collect()
-        # _metadata.file_path is a URI (file:/p); manifests store plain
-        # local paths
-        found = {_localpath(r._dv_file) for r in rows}
-        affected = [f for f in search if f in found]
-        if not affected:
-            return m["version"]  # nothing to delete — no new version needed
-        survivors = self._live(spark, affected, m).filter(~cond)
-        keep = [f for f in files if f not in set(affected)]
-        # round 14: emptiness decided from the staged footers, not a
-        # separate limit(1).count() probe job (see _stage_nonempty)
-        new_files = self._stage_nonempty(survivors)
-        with self._reclaiming(m, new_files):
-            return self._commit(keep + new_files, "delete", base=m)
-
-    # -- merge-on-read deletes (deletion vectors) ---------------------------
+    # -- merge-on-read mutations (deletion vectors) -------------------------
 
     def _live(
         self, spark: SparkSession, files: list[str], m: dict, tagged: bool = False
@@ -760,36 +707,47 @@ class TransactionalTable:
         return df if tagged else df.drop("_dv_file", "_dv_pos")
 
     def delete_where_mor(self, spark: SparkSession, condition) -> int:
-        """Merge-on-read DELETE (Iceberg-v2-style positional deletes):
-        instead of rewriting every file containing a matching row
-        (:meth:`delete_where`'s copy-on-write), record the matches'
-        (file, row position) pairs as a deletion-vector parquet and leave
-        all data files untouched.
+        """Merge-on-read DELETE (Iceberg-v2-style positional deletes) of
+        the rows matching ``condition`` (SQL string or Column): record
+        their (file, row position) pairs as a deletion-vector parquet and
+        leave every data file untouched.
 
         The 100 TB trade: a predicate touching 1 row per file makes
         copy-on-write rewrite the whole table; merge-on-read writes
         kilobytes and defers the rewrite to :meth:`compact` / OPTIMIZE,
         which read through :meth:`read` (vectors applied) and commit with
         an empty vector list — materializing the deletes.  Reads pay one
-        broadcast anti-join until then.
+        broadcast anti-join until then.  A file whose every row matches
+        leaves the snapshot instead (see :meth:`_mutate`).
         """
         from pyspark.sql import functions as F
 
         cond = F.expr(condition) if isinstance(condition, str) else condition
         return self._mutate(spark, self._manifest(), "delete-mor", lambda live: live.filter(cond))
 
-    def delete_keys_mor(self, spark: SparkSession, keys: DataFrame, key: str) -> int:
+    def delete_keys_mor(self, spark: SparkSession, keys, key: str) -> int:
         """Merge-on-read DELETE by KEY SET: deletion vectors for every
-        live row whose ``key`` appears in ``keys``.  Unlike a collected
-        IN-list predicate this is a semi-join, so the key set can be
-        arbitrarily large; it is broadcast when small and shuffles
-        otherwise (AQE's call).
+        live row whose ``key`` appears in ``keys``, a Python iterable or a
+        DataFrame with a ``key`` column.
+
+        A key list is an exact IN-list filter whose match scan opens only
+        the files the manifest's min/max and blooms admit — the walk
+        :meth:`scan_in` prunes with (:meth:`_prune_keys`).  A DataFrame is
+        a semi-join over every file, so the key set can be arbitrarily
+        large; it is broadcast when small and shuffles otherwise (AQE's
+        call).
         """
+        m = self._manifest()
+        if isinstance(keys, DataFrame):
+            ks = keys.select(key).distinct()
+            return self._mutate(spark, m, "delete-mor", lambda live: live.join(ks, key, "left_semi"))
+        vals = list(keys)
         return self._mutate(
             spark,
-            self._manifest(),
+            m,
             "delete-mor",
-            lambda live: live.join(keys.select(key).distinct(), key, "left_semi"),
+            lambda live: live.filter(self._in_filter(key, vals)),
+            scan=self._prune_keys(m, key, vals) if m else [],
         )
 
     def _mutate(
@@ -800,41 +758,49 @@ class TransactionalTable:
         match,
         rows: DataFrame | None = None,
         txn: tuple[str, int] | None = None,
+        scan: list[str] | None = None,
     ) -> int | None:
         """The one merge-on-read mutation body (``delete_where_mor``,
         ``delete_keys_mor``, ``merge``, ``apply_cdc``): ``match`` narrows
-        the live, address-tagged snapshot ``m`` to the rows the mutation
-        retires, whose (file, row position) pairs become one staged
-        deletion-vector directory; ``rows``, if given, are staged as new
-        data files.  Both land in ONE commit on top of ``m``, so no reader
-        and no crash sees the inserts without the deletes.  No data file
-        is rewritten — the rewrite is deferred to :meth:`compact` /
-        :meth:`optimize`.
+        the live, address-tagged files ``scan`` of snapshot ``m`` (default:
+        all of them; else a manifest-pruned superset of the files holding
+        matches) to the rows the mutation retires, whose (file, row
+        position) pairs become one staged deletion-vector directory;
+        ``rows``, if given, are staged as new data files.  Both land in
+        ONE commit on top of ``m``, so no reader and no crash sees the
+        inserts without the deletes.  No data file is rewritten — the
+        rewrite is deferred to :meth:`compact` / :meth:`optimize`.
 
         The vector is written through ``repartition(1)``, so a mutation
         adds ONE vector file, not one per scan task, to every later
         read's broadcast; the scan keeps its parallelism (``coalesce(1)``
         would not).  The shuffle costs one extra Spark job per mutation
         under adaptive execution, which runs its map stage as a job of
-        its own.  Emptiness of
-        both halves comes from the staged parquet footers, not from a
-        probe job; when both are empty nothing is committed and ``m``'s
-        version is returned.  If staging or the commit fails,
-        :meth:`_reclaiming` removes the staged directories unless the
-        version this commit claimed references them.
+        its own.  The driver then reads the vector's ``file_path`` column
+        with pyarrow (no Spark job): a data file it retires whole (its
+        count equals the footer ``rows`` in the manifest) leaves the
+        commit's file list instead of being masked, and a vector that
+        masks nothing else is not committed.  Emptiness of the inserted
+        rows comes from their staged parquet footers; when nothing is
+        retired or inserted, nothing is committed and ``m``'s version is
+        returned.  If staging or the commit fails, :meth:`_reclaiming`
+        removes the staged directories unless the version this commit
+        claimed references them.
         """
         import pyarrow.parquet as pq
         from pyspark.sql import functions as F
 
         files = m["files"] if m else []
+        scan = files if scan is None else scan
         # checked before any job: an incompatible column type stages nothing
         schema = None if rows is None else self._evolved_schema(m, rows)
         dirs: list[str] = []
         vectors: list[str] = []
         staged: list[str] = []
+        dead: set[str] = set()
         with self._reclaiming(m, vectors, staged, dirs=dirs):
-            if files:
-                matched = match(self._live(spark, files, m, tagged=True)).select(
+            if scan:
+                matched = match(self._live(spark, scan, m, tagged=True)).select(
                     F.col("_dv_file").alias("file_path"), F.col("_dv_pos").alias("row_index")
                 )
                 stage_dir = os.path.join(self.path, f"deletes-{uuid.uuid4().hex}")
@@ -846,19 +812,25 @@ class TransactionalTable:
                     for f in sorted(os.listdir(stage_dir))
                     if f.endswith(".parquet")
                 )
-                if sum(pq.ParquetFile(p).metadata.num_rows for p in vectors) == 0:
+                hits = pq.read_table(vectors, columns=["file_path"])["file_path"].value_counts()
+                # _metadata.file_path is a URI (file:/p); manifests store
+                # plain local paths
+                counts = {_localpath(h["values"]): h["counts"] for h in hits.to_pylist()}
+                stats = m.get("stats", {})
+                dead = {f for f, n in counts.items() if n == stats.get(f, {}).get("rows")}
+                if len(dead) == len(counts):  # empty, or masks only files that leave
                     shutil.rmtree(stage_dir, ignore_errors=True)
                     vectors.clear()
                 else:
                     self._pending_ms[stage_dir] = {"stage_ms": (time.perf_counter() - t0) * 1000.0}
             if rows is not None:
                 staged.extend(self._stage_nonempty(rows))
-            if not (vectors or staged):
+            if not (vectors or staged or dead):
                 return m["version"] if m else None
             # the schema evolves only when rows land (a delete-only batch
             # keeps the table's schema whatever columns its frame carries)
             return self._commit(
-                files + staged,
+                [f for f in files if f not in dead] + staged,
                 op,
                 txn=txn,
                 base=m,
@@ -970,18 +942,20 @@ class TransactionalTable:
         :meth:`optimize` / :meth:`compact` rewrites the table.  A source
         column the table lacks evolves its schema (:meth:`_evolved_schema`);
         ``txn`` records the streaming-sink marker
-        (:meth:`last_txn_batch`).
+        (:meth:`last_txn_batch`).  On a fresh table the source is staged
+        and its schema committed.  An empty source commits nothing, on a
+        fresh table as on an existing one (a fresh table returns None).
         """
         from pyspark.sql import functions as F
 
-        m = self._manifest()
-        if m is None:
-            new_files = self._stage(source)
-            with self._reclaiming(m, new_files):
-                return self._commit(new_files, "merge", txn=txn, base=m, schema=source.schema)
         keys = F.broadcast(source.select(key).distinct())
         return self._mutate(
-            spark, m, "merge", lambda live: live.join(keys, key, "left_semi"), rows=source, txn=txn
+            spark,
+            self._manifest(),
+            "merge",
+            lambda live: live.join(keys, key, "left_semi"),
+            rows=source,
+            txn=txn,
         )
 
     # -- read paths ----------------------------------------------------------
@@ -1006,13 +980,16 @@ class TransactionalTable:
         a manifest-pruned superset of the files holding matches, ``pred``
         the exact re-filter — the reference's Inexact pushdown contract
         (pc-format/src/table.rs:128-155).  Deletion vectors of ``m``
-        apply; an empty prune reads the snapshot's shape with no rows.
+        apply; an empty prune reads the snapshot's shape with no rows, as
+        does a snapshot whose every file a mutation retired.
 
         Each version is read under the schema COMMITTED AT that version —
         time travel to before a column was added shows the old shape.
         """
         if not m["files"]:
-            raise FileNotFoundError("empty snapshot")
+            if m.get("schema") is None:
+                raise FileNotFoundError("empty snapshot")
+            return spark.createDataFrame([], StructType.fromJson(m["schema"]))
         if files is None:
             files = m["files"]
         if not files:
@@ -1199,16 +1176,22 @@ class TransactionalTable:
             vals = [r[0] for r in head]
         else:
             vals = list(keys)
+        return self._read(spark, m, self._prune_keys(m, col, vals), self._in_filter(col, vals))
+
+    def _prune_keys(self, m: dict, col: str, vals: list) -> list[str]:
+        """The files of ``m`` that can hold ``col IN (vals)``: min/max
+        range stats AND blooms, intersected (each is a no-false-negative
+        filter, so their intersection is too).  The pruning walk of
+        :meth:`scan_in` and of a key-list :meth:`delete_keys_mor`."""
         in_range = self._values_test(col, vals)
         in_bloom = self._bloom_test(col, vals)
         try:
             # the bloom (a sidecar read) is consulted only for files that
             # survive min/max
-            files = self._prune(m, lambda f, st: in_range(f, st) and in_bloom(f, st))
+            return self._prune(m, lambda f, st: in_range(f, st) and in_bloom(f, st))
         except TypeError:
             # float keys: blooms excluded by contract, range stats stand
-            files = self._prune(m, in_range)
-        return self._read(spark, m, files, self._in_filter(col, vals))
+            return self._prune(m, in_range)
 
     def lookup(self, spark: SparkSession, col: str, value, version: int | None = None) -> DataFrame:
         """Point lookup ``col = value``: :meth:`scan_in` with one key."""
@@ -1308,10 +1291,14 @@ class TransactionalTable:
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
         """Drop data files unreachable from the newest ``keep_versions``,
-        with their bloom sidecars, and unreachable deletion vectors.
+        with their bloom sidecars, and unreachable deletion vectors.  A
+        staged directory that held such a file and holds no file of a
+        kept version goes too, with its ``_SUCCESS`` and checksum files;
+        a directory no version lists (a writer's in-flight staging) is
+        never touched.
 
-        Returns the deleted paths.  Destroys time travel beyond the kept
-        window (same contract as Delta VACUUM).
+        Returns the deleted data files, vectors and sidecars.  Destroys
+        time travel beyond the kept window (same contract as Delta VACUUM).
         """
         vs = self.versions()
         keep = set()
@@ -1320,16 +1307,20 @@ class TransactionalTable:
             keep.update(m["files"])
             keep.update(m.get("deletes", []))
         removed = []
+        dead_dirs = set()
         for v in vs[:-keep_versions] if keep_versions else vs:
             m = self._read_manifest(v)
             for f in m["files"] + m.get("deletes", []):
-                if f not in keep and os.path.exists(f):
-                    os.unlink(f)
-                    removed.append(f)
-                    side = self._sidecar(f)
-                    if os.path.exists(side):
-                        os.unlink(side)
-                        removed.append(side)
+                if f in keep:
+                    continue
+                dead_dirs.add(os.path.dirname(f))
+                for p in (f, self._sidecar(f)):
+                    if os.path.exists(p):
+                        os.unlink(p)
+                        removed.append(p)
+        for d in dead_dirs - {os.path.dirname(f) for f in keep}:
+            if os.path.basename(d).startswith(("stage-", "deletes-")):
+                shutil.rmtree(d, ignore_errors=True)
         return removed
 
 

@@ -103,7 +103,7 @@ def main() -> None:
         lambda p: p, schema="k int, v double"
     ).count()
 
-    for m in ("_stage", "_build_blooms", "append", "delete_where", "scan_in", "read"):
+    for m in ("_stage", "_build_blooms", "append", "delete_keys_mor", "scan_in", "read"):
         _wrap(snapshots.TransactionalTable, m)
 
     # time localCheckpoint calls too (the pair-compute phase).  Patch the

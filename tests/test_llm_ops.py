@@ -1682,6 +1682,17 @@ def test_curate_incremental_state_pin_table_mode(spark, sf_dir, tmp_path, monkey
     [c.unpersist() for c in bogus_caches]
 
 
+@pytest.mark.parametrize("mode", ["persist", "eager_checkpoint"])
+def test_state_pin_rejects_retired_modes(spark, monkeypatch, mode):
+    """Only "checkpoint" and "table" pin state; the retired modes raise
+    like any other unknown value."""
+    from agile_lakehouse_spark.operators.pipeline import _pin_state
+
+    monkeypatch.setenv("SPARK_GRAFT_STATE_PIN", mode)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STATE_PIN"):
+        _pin_state(spark.range(1), None)
+
+
 def test_state_pin_table_reuses_one_base_dir(spark, monkeypatch):
     """With SPARK_GRAFT_STATE_PIN_DIR unset, table pins land in ONE
     per-process base directory (removed at interpreter exit) instead of

@@ -203,7 +203,7 @@ def test_incremental_view_equals_full_recompute(spark, tmp_path_factory, batches
     for i, batch in enumerate(batches):
         src.append(spark.createDataFrame(batch, "k long, v long"))
         if i == delete_after:
-            src.delete_where(spark, "v % 7 = 3")
+            src.delete_where_mor(spark, "v % 7 = 3")
         view.refresh(spark)
         got = {r.k: (r.n, r.mx) for r in view.read(spark).collect()}
         want = {

@@ -136,7 +136,9 @@ def test_prune_files_by_values_and_scan_values(spark, tmp_path):
     assert tbl.prune_files_by_values("nosuch", [1]) == files
 
 
-def test_delete_where_candidate_files(spark, tmp_path):
+def test_delete_where_candidate_files(spark, tmp_path, monkeypatch):
+    """A key-list delete prunes its match scan from the manifest: it reads
+    only the files min/max admits for the keys."""
     tbl = TransactionalTable(str(tmp_path / "cow"))
     df = spark.createDataFrame(
         [(k, f"r{k}") for k in range(8)], "k long, s string"
@@ -144,12 +146,22 @@ def test_delete_where_candidate_files(spark, tmp_path):
     tbl.append(df)
     cands = tbl.prune_files_by_values("k", [2])
     assert len(cands) < len(tbl._read_manifest(tbl.latest_version())["files"])
-    tbl.delete_where(spark, F.col("k") == 2, candidate_files=cands)
+    scanned = []
+    live = TransactionalTable._live
+
+    def spy(self, spark, files, m, tagged=False):
+        if tagged:  # the mutation's match scan
+            scanned.append(list(files))
+        return live(self, spark, files, m, tagged)
+
+    monkeypatch.setattr(TransactionalTable, "_live", spy)
+    tbl.delete_keys_mor(spark, [2], "k")
     left = sorted(r["k"] for r in tbl.read(spark).collect())
     assert left == [0, 1, 3, 4, 5, 6, 7]
-    # empty candidate list is a no-op commit-wise
+    # a key no file admits is a no-op commit-wise, and scans nothing
     v = tbl.latest_version()
-    assert tbl.delete_where(spark, F.col("k") == 3, candidate_files=[]) == v
+    assert tbl.delete_keys_mor(spark, [99], "k") == v
+    assert scanned == [cands]
 
 
 @pytest.mark.parametrize("nvals", [0])

@@ -107,11 +107,11 @@ def test_delete_where_copy_on_write(spark, table):
     table.append(_df(spark, 0, 10).coalesce(1))
     table.append(_df(spark, 100, 110).coalesce(1))
     files_before = set(table._read_manifest(table.latest_version())["files"])
-    v = table.delete_where(spark, "k >= 100 AND k < 105")
+    v = table.delete_where_mor(spark, "k >= 100 AND k < 105")
     out = table.read(spark)
     assert out.count() == 15
     assert out.filter("k >= 100 AND k < 105").count() == 0
-    # copy-on-write: the untouched file is carried forward byte-identical
+    # the untouched file is carried forward as is
     files_after = set(table._read_manifest(v)["files"])
     assert files_before & files_after, "untouched files must be reused, not rewritten"
     # time travel still sees the pre-delete rows
@@ -120,20 +120,19 @@ def test_delete_where_copy_on_write(spark, table):
 
 def test_delete_where_no_match_is_noop(spark, table):
     v0 = table.append(_df(spark, 0, 10))
-    v = table.delete_where(spark, "k > 999")
+    v = table.delete_where_mor(spark, "k > 999")
     assert v == v0  # no new version for a no-op delete
 
 
 def test_delete_where_whole_file_commits_no_empty_files(spark, table):
-    """Round 14: emptiness is decided from the staged parquet footers (no
-    limit(1).count() probe job) — a delete that empties a file must not
-    commit a zero-row file, and must not leave its discarded staging dir
-    behind."""
+    """A delete that retires every row of a file drops that file from the
+    snapshot instead of masking it: no zero-row file is committed and no
+    staging dir is left behind."""
     import os
 
     table.append(_df(spark, 0, 10).coalesce(1))
     table.append(_df(spark, 100, 110).coalesce(1))
-    v = table.delete_where(spark, "k >= 100")  # empties the second file whole
+    v = table.delete_where_mor(spark, "k >= 100")  # empties the second file whole
     out = table.read(spark)
     assert out.count() == 10 and out.filter("k >= 100").count() == 0
     manifest = table._read_manifest(v)
@@ -232,7 +231,7 @@ def test_incremental_refresh_falls_back_on_non_append(spark, tmp_path):
     view = IncrementalAggregate(src, str(tmp_path / "view"), ["k"], {"n": ("count", "v")})
     view.refresh(spark)
 
-    src.delete_where(spark, "v >= 30")
+    src.delete_where_mor(spark, "v >= 30")
     r = view.refresh(spark)
     assert r["mode"] == "full"
     got = {r_.k: r_.n for r_ in view.read(spark).collect()}
@@ -263,7 +262,7 @@ def test_read_changes_is_row_delta_for_appends(spark, tmp_path):
     # full-history changes = everything
     assert t.read_changes(spark, None).count() == 15
 
-    t.delete_where(spark, "k >= 12")
+    t.delete_where_mor(spark, "k >= 12")
     try:
         t.read_changes(spark, v1)
         raise AssertionError("must refuse: delete in window")
@@ -333,12 +332,12 @@ def test_schema_evolution_rejects_type_change(spark, table):
 
 
 def test_delete_rewrite_preserves_evolved_column(spark, table):
-    """Copy-on-write DELETE over a mixed-schema file set must rewrite
-    survivors under the VERSION schema — a bare parquet read could adopt an
-    old file's footer as the schema and silently drop the new column."""
+    """A DELETE over a mixed-schema file set must read survivors under the
+    VERSION schema — a bare parquet read could adopt an old file's footer
+    as the schema and silently drop the new column."""
     table.append(_df(spark, 0, 5))
     table.append(_df_lang(spark, 5, 8))
-    table.delete_where(spark, "k = 6")
+    table.delete_where_mor(spark, "k = 6")
     latest = table.read(spark)
     assert latest.count() == 7
     kept = {r.k for r in latest.filter(F.col("lang") == "en").collect()}
@@ -517,8 +516,8 @@ def test_mor_deletes_accumulate_and_scan_applies_them(spark, table):
 def test_mor_then_cow_delete_no_resurrection(spark, table):
     table.append(_df(spark, 0, 40))
     table.delete_where_mor(spark, "k < 10")        # rows 0-9 masked
-    table.delete_where(spark, "k >= 30")           # COW rewrite of the file
-    # the rewrite must NOT bring rows 0-9 back
+    table.delete_where_mor(spark, "k >= 30")       # a second vector
+    # the second delete must NOT bring rows 0-9 back
     ks = sorted(r.k for r in table.read(spark).collect())
     assert ks == list(range(10, 30))
 
@@ -586,6 +585,85 @@ def test_vacuum_reclaims_old_delete_vectors(spark, table):
     assert all(not os.path.exists(p) for p in dvs)
     assert any(p in set(removed) for p in dvs)
     assert table.read(spark).count() == 25
+
+
+def test_vacuum_removes_dead_staging_dirs(spark, tmp_path):
+    """After ``optimize`` + ``vacuum(1)`` the table root holds only the
+    directories the latest version references: each dead ``stage-*`` and
+    ``deletes-*`` directory goes with its ``_SUCCESS`` and checksum files.
+    A directory no version lists (an in-flight writer's) is left alone."""
+    import os
+
+    t = TransactionalTable(str(tmp_path / "vdirs"), bloom_columns=("k",))
+    t.append(_keyed(spark, 0, 200, 2))
+    t.append(_keyed(spark, 200, 300, 1))
+    t.delete_where_mor(spark, "k % 5 = 0")
+    t.merge(spark, spark.createDataFrame([(3, -1), (250, -1)], "k long, v long"), "k")
+    inflight = os.path.join(t.path, "stage-inflight")
+    os.makedirs(inflight)
+    open(os.path.join(inflight, "_SUCCESS"), "w").close()
+    t.optimize(spark, target_files=1)
+    removed = set(t.vacuum(keep_versions=1))
+    *old, latest = t.history()
+    live = {os.path.basename(os.path.dirname(f)) for f in latest["files"] + latest.get("deletes", [])}
+    assert set(os.listdir(t.path)) == {"_log", "stage-inflight"} | live
+    data = {f for m in old for f in m["files"]}
+    sides = {t._sidecar(f) for m in old for f in m["files"] if m["stats"][f].get("bloom")}
+    vectors = {f for m in old for f in m.get("deletes", [])}
+    assert len(vectors) == 2
+    assert data | sides | vectors == removed
+    assert t.read(spark).count() == 241
+
+
+def test_mor_delete_of_every_row_drops_every_file(spark, table):
+    """A delete that retires every row of the table drops every data file
+    and commits no vector; the snapshot still reads, empty, under its
+    schema, and time travel still sees the rows."""
+    import os
+
+    table.append(_df(spark, 0, 20))
+    v = table.delete_where_mor(spark, "k >= 0")
+    m = table._read_manifest(v)
+    assert m["files"] == [] and not m.get("deletes")
+    assert [d for d in os.listdir(table.path) if d.startswith("deletes-")] == []
+    out = table.read(spark)
+    assert out.columns == ["k", "v"] and out.count() == 0
+    assert table.scan_in(spark, "k", [3]).count() == 0
+    assert table.read(spark, version=v - 1).count() == 20
+    assert table.merge(spark, _df(spark, 5, 7), "k") == v + 1
+    assert sorted(r.k for r in table.read(spark).collect()) == [5, 6]
+
+
+def test_merge_on_fresh_table(spark, tmp_path):
+    """``merge`` on a table with no commit stages the source and commits
+    its schema; an empty source commits nothing, as it does on an
+    existing table."""
+    import os
+
+    t = TransactionalTable(str(tmp_path / "fresh"))
+    empty = spark.createDataFrame([], "k long, v long")
+    assert t.merge(spark, empty, "k") is None
+    assert t.latest_version() is None and os.listdir(t.path) == ["_log"]
+    assert t.merge(spark, _df(spark, 0, 5), "k", txn=("app", 0)) == 0
+    assert t.last_txn_batch("app") == 0
+    assert [m["op"] for m in t.history()] == ["merge"]
+    assert sorted(r.k for r in t.read(spark).collect()) == [0, 1, 2, 3, 4]
+    assert t.merge(spark, empty, "k") == 0
+
+
+def test_delete_keys_mor_key_list_equals_frame(spark, tmp_path):
+    """A key-list delete retires the same rows as the same keys passed as
+    a DataFrame, on a bloom table where only blooms prune."""
+    a = TransactionalTable(str(tmp_path / "list"), bloom_columns=("k",))
+    b = TransactionalTable(str(tmp_path / "frame"), bloom_columns=("k",))
+    keys = [3, 17, 250, 10**6]
+    for t in (a, b):
+        t.append(_keyed(spark, 0, 400, 4))
+    a.delete_keys_mor(spark, keys, "k")
+    b.delete_keys_mor(spark, spark.createDataFrame([(k,) for k in keys], "k long"), "k")
+    got = sorted(r.k for r in a.read(spark).collect())
+    assert got == sorted(r.k for r in b.read(spark).collect())
+    assert got == [k for k in range(400) if k not in keys]
 
 
 def test_delete_keys_mor_semi_join(spark, table):
@@ -940,9 +1018,9 @@ def test_merge_writes_one_vector_file(spark, tmp_path):
 
 @pytest.mark.parametrize("op", ["append", "delete_where"])
 def test_failed_commit_reclaims_staging(spark, tmp_path, monkeypatch, op):
-    """``append`` and copy-on-write ``delete_where`` whose commit fails
-    before landing leave no staged directory, no bloom sidecar and no
-    pending stats behind."""
+    """``append`` and ``delete_where_mor`` whose commit fails before
+    landing leave no staged directory, no bloom sidecar and no pending
+    stats behind."""
     import glob
 
     t = TransactionalTable(str(tmp_path / "leak"), bloom_columns=("k",))
@@ -957,7 +1035,7 @@ def test_failed_commit_reclaims_staging(spark, tmp_path, monkeypatch, op):
         if op == "append":
             t.append(_keyed(spark, 400, 500, 2))
         else:
-            t.delete_where(spark, "k % 3 = 0")
+            t.delete_where_mor(spark, "k % 3 = 0")
     monkeypatch.undo()
     assert t.latest_version() == v
     assert _unreferenced_staging(t) == []
