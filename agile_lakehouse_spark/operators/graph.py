@@ -101,7 +101,7 @@ def connected_components_blocked(
     :func:`connected_components` (equivalence-pinned in
     ``tests/test_graph.py``).  Blocks with more than ``max_block_pairs``
     edges fall back to the iterative engine (same split discipline as the
-    gram sieve's ``max_sieve_block``); components are block-contained, so
+    gram sieve's ``MAX_SIEVE_BLOCK``); components are block-contained, so
     stitching the two engines' outputs is a plain union.
 
     Scale: per-block cost is O(pairs α(n)) in one task; the shuffle moves

@@ -17,6 +17,8 @@ no Python UDF anywhere.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -28,14 +30,15 @@ from agile_lakehouse_spark.functions.portable import round4
 # The r12 driver artifact timed dq148 at 12.98 s against a same-round
 # sidecar of 5.72 s on untouched code; the named hypothesis was the gram
 # sieve silently taking the distributed pair-join fallback.  When a
-# harness sets SIEVE_PATH_LOG to a list, every sieve-enabled
-# embedding_near_dup / embedding_match call EAGERLY evaluates its
-# small/big block split (one tiny count+dim aggregate job) and appends a
-# record, so a bench artifact can prove WHICH physical path each timed
-# run took.  The split is a deterministic function of the data and the
-# caps — never of memory pressure — so a run-to-run flip would indict
-# the operator and a stable record exonerates it.  None (the default)
-# costs nothing: the split stays lazy inside the plan.
+# harness sets SIEVE_PATH_LOG to a list, every call of the gram-sieve
+# kernel (_sieve_pairs; op = embedding_near_dup, embedding_match or
+# incremental_pair_edges) EAGERLY evaluates its small/big block split
+# (one tiny count+dim aggregate job) and appends a record, so a bench
+# artifact can prove WHICH physical path each timed run took.  The split
+# is a deterministic function of the data and the MAX_SIEVE_BLOCK /
+# MAX_SIEVE_ELEMS caps — never of memory pressure — so a run-to-run flip
+# would indict the operator and a stable record exonerates it.  None
+# (the default) costs nothing: the split stays lazy inside the plan.
 SIEVE_PATH_LOG: list | None = None
 
 
@@ -280,156 +283,175 @@ def rp_lsh_near_dup(
     )
 
 
+# --- the gram-sieve pair kernel (round 8) -------------------------------------
+# Its knobs are module constants that :func:`_sieve_pairs` reads each time
+# it builds a pair frame, so a test reaches the join fallback by
+# monkeypatching the two caps: caps of 0 send every block there, which is
+# the pure block-join result the sieve must reproduce.
+SIEVE_MARGIN = 1e-6  # BLAS-vs-sequential-fold summation noise
+MAX_SIEVE_BLOCK = 65_536  # rows per block
+MAX_SIEVE_ELEMS = 16_000_000  # rows x dim per block: ~128 MB per float64 copy
+
+
+def _sieve_pairs(
+    op: str,
+    new_df: DataFrame,
+    corpus_df: DataFrame | None,
+    threshold: float,
+    block_col: str,
+    vec_col: str,
+    id_col: str,
+    within: bool,
+) -> DataFrame:
+    """(blk, id_a, id_b, cos) for every pair sharing a block whose
+    ``round4(cos) >= threshold``: cross pairs (``id_a`` new, ``id_b``
+    corpus) when ``corpus_df`` is given, within-new pairs (``id_a <
+    id_b``) when ``within``.  Ids must be disjoint across the two sides.
+    ``op`` labels the :data:`SIEVE_PATH_LOG` record.
+
+    Round 8 (the dq148 profile: the per-pair higher-order-function dot
+    is 60-80% of SemDeDup's wall clock, while CC is <2%): each block
+    first runs a BLAS gram SIEVE — one Arrow batch per block, ``new x
+    (corpus | new | new+corpus)`` in chunked numpy — that keeps only
+    pairs with ``np_cos >= threshold - 5e-5 - SIEVE_MARGIN``.  5e-5 is
+    half the round4 quantum: the exact pass keeps ``round4(cos) >=
+    threshold``, which admits raw cosines that far below, so the sieve
+    must prune no tighter.  The EXACT sequential-fold cosine
+    (:func:`vector.dot`, the op sequence the DuckDB oracle replays) is
+    then re-evaluated ONLY on the survivors, so the output is
+    bit-identical to the pure block join.  The margin (1e-6) exceeds any
+    float64 summation-order divergence by ~6 orders of magnitude at
+    realistic dims; its only cost is a few extra survivors.
+
+    Blocks over ``MAX_SIEVE_BLOCK`` rows or ``MAX_SIEVE_ELEMS`` elements
+    (rows x dim of both sides: the task materializes the block as an
+    n x d float64 matrix plus a normalized copy, so the row cap alone
+    under-counts wide embeddings — 65 k rows x 1024 dims is ~1 GB/copy)
+    keep the distributed pair join.  The size split is one tiny
+    per-block count+dim aggregate, broadcast into two semi-joins (the
+    lsh_candidate_pairs cap discipline).  Measured at sf0.1 (2 k vectors,
+    251 k candidate pairs, warm workers): pair stage 1.7 -> 1.1 s —
+    modest there because the sieve's fixed costs (size agg, Arrow
+    round-trip, verify joins) dominate tiny blocks; the ratio grows with
+    block size as interpreted O(n^2 d) lambda steps become one gemm.
+    """
+    import numpy as np
+    import pandas as pd
+
+    sides = [(new_df, 0)] + ([(corpus_df, 1)] if corpus_df is not None else [])
+    tag = len(sides) > 1  # rows carry their side only when there are two
+
+    def rows(df, side, i, v, n=None):
+        # Per-VECTOR norms before any pair join: an inline cosine would
+        # recompute both self-dots per pair (3x the flops — measured
+        # 5.6 s -> ~2 s on a 3M-candidate block); sqrt(fold) is the same
+        # op sequence, so cos is bit-identical and the oracle unchanged.
+        extra = [vector.norm(F.col(vec_col)).alias(n)] if n else []
+        if tag:
+            extra.append(F.lit(side).alias("_side"))
+        return df.select(
+            F.col(block_col).alias("blk"), F.col(id_col).alias(i),
+            F.col(vec_col).alias(v), *extra,
+        )
+
+    def union(frames):
+        return functools.reduce(DataFrame.unionByName, frames)
+
+    a = rows(new_df, 0, "id_a", "va", "na").drop("_side")
+    b = union([rows(df, s, "id_b", "vb", "nb") for df, s in sides[0 if within else 1 :]])
+    cos = vector.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+
+    def scored(pairs):
+        return pairs.select(
+            "blk", "id_a", "id_b", round4(cos).alias("cos")
+        ).filter(F.col("cos") >= threshold)
+
+    thr = threshold - 5e-5 - SIEVE_MARGIN
+
+    def _gram_sieve(pdf: pd.DataFrame) -> pd.DataFrame:
+        side = pdf["_side"].to_numpy() if tag else np.zeros(len(pdf), np.int8)
+        newm = side == 0
+        bm = np.ones_like(newm) if within else ~newm
+        if not newm.any() or not bm.any():
+            return pd.DataFrame({"blk": [], "id_a": [], "id_b": []})  # one-sided
+        ids = pdf["_id"].to_numpy()
+        V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
+        norms = np.sqrt((V * V).sum(axis=1))
+        norms[norms == 0.0] = 1.0  # zero vectors match nothing at thr>0
+        Vn = V / norms[:, None]
+        A, a_ids = Vn[newm], ids[newm]
+        B, b_ids, b_side = Vn[bm], ids[bm], side[bm]
+        out_a, out_b = [], []
+        step = max(1, 16_000_000 // len(b_ids))  # ~128 MB gram chunk
+        for s in range(0, len(a_ids), step):
+            ia, ib = np.nonzero(A[s : s + step] @ B.T >= thr)
+            ja, jb = a_ids[ia + s], b_ids[ib]
+            keep = (b_side[ib] == 1) | (ja < jb)  # id-value order, as the join
+            out_a.append(ja[keep])
+            out_b.append(jb[keep])
+        ja, jb = np.concatenate(out_a), np.concatenate(out_b)
+        blk = np.repeat(pdf["blk"].iloc[0], len(ja))
+        return pd.DataFrame({"blk": blk, "id_a": ja, "id_b": jb})
+
+    pop = union([rows(df, s, "_id", "_v") for df, s in sides])
+    sizes = pop.groupBy("blk").agg(
+        F.count(F.lit(1)).alias("_n"), F.max(F.size("_v")).alias("_d")
+    )
+    fits = (F.col("_n") <= MAX_SIEVE_BLOCK) & (
+        F.col("_n") * F.col("_d") <= MAX_SIEVE_ELEMS
+    )
+    _log_sieve_split(op, sizes, fits)
+    id_type = new_df.schema[id_col].dataType.simpleString()
+    blk_type = new_df.schema[block_col].dataType.simpleString()
+    cand = (
+        pop.join(F.broadcast(sizes.filter(fits)), "blk", "left_semi")
+        .groupBy("blk")
+        .applyInPandas(_gram_sieve, schema=f"blk {blk_type}, id_a {id_type}, id_b {id_type}")
+    )
+    exact = scored(
+        cand.join(a.select("id_a", "va", "na"), "id_a").join(
+            b.select("id_b", "vb", "nb"), "id_b"
+        )
+    )
+    big_blocks = F.broadcast(sizes.filter(~fits))
+    big = a.join(big_blocks, "blk", "left_semi").join(
+        b.join(big_blocks, "blk", "left_semi"), "blk"
+    )
+    if within:
+        keep = F.col("id_a") < F.col("id_b")
+        big = big.filter((F.col("_side") == 1) | keep if tag else keep)
+    return exact.unionByName(scored(big))
+
+
 def embedding_near_dup(
     df: DataFrame,
     threshold: float = 0.9,
     block_col: str = "label",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    sieve: bool = True,
-    sieve_margin: float = 1e-6,
-    max_sieve_block: int = 65_536,
-    max_sieve_elems: int = 16_000_000,
     emit_block: bool = False,
 ) -> DataFrame:
-    """Near-duplicate vector pairs (cosine >= threshold) within a blocking key.
+    """Near-duplicate vector pairs (id_a, id_b, cos), ``id_a < id_b``,
+    with cosine >= threshold within a blocking key.
+
+    The block column (label, or an IVF/LSH cell) keeps the self-join from
+    being all-pairs.  The pairs are the within-new pairs of the gram-sieve
+    kernel :func:`_sieve_pairs`: a per-block BLAS gram sieve plus an
+    exact verify, bit-identical to the plain block join, which blocks
+    over ``MAX_SIEVE_BLOCK`` rows or ``MAX_SIEVE_ELEMS`` elements keep.
 
     ``emit_block=True`` (round 13) prepends the pair's block value as a
     ``block_col``-named output column — free to produce (the block key is
     the join/group key of every internal path) and what
     :func:`graph.connected_components_blocked` keys on; the default
     output schema is unchanged for existing callers (dq22c's oracle).
-
-    The block column (label, or an IVF/LSH cell) keeps the self-join from
-    being all-pairs; the join shuffles both sides on the block key only.
-
-    Round 8 (the dq148 profile: the per-pair higher-order-function dot
-    is 60-80% of SemDeDup's wall clock — 251 k candidate pairs x dim
-    interpreted lambda steps, while CC is <2%): with ``sieve`` on, each
-    block first runs a BLAS gram-matrix SIEVE (one Arrow batch per
-    block, ``n_c x d @ d x n_c`` in chunked numpy) that keeps only pairs
-    with ``np_cos >= threshold - 5e-5 - sieve_margin`` (5e-5 = half the
-    round4 quantum — the exact pass keeps ``round4(cos) >= threshold``,
-    which admits raw cosines that far below); the EXACT sequential-
-    fold cosine (:func:`vector.dot`, the op sequence the DuckDB oracle
-    replays) is then re-evaluated ONLY on the surviving candidates, so
-    the output is bit-identical to the pure-join form.  The margin
-    (1e-6) exceeds any float64 summation-order divergence by ~6 orders
-    of magnitude at realistic dims; its only cost is a few extra
-    survivors entering the exact pass.  Blocks over ``max_sieve_block``
-    ROWS or ``max_sieve_elems`` ELEMENTS (rows x dim — the task
-    materializes the block as an n x d float64 matrix plus a normalized
-    copy, so the row cap alone under-counts wide embeddings: 65 k rows
-    x 1024 dims is ~1 GB/copy) keep the distributed pair join — the
-    size split is one tiny per-block count+dim aggregate, broadcast
-    into two semi-joins (the lsh_candidate_pairs cap discipline,
-    dedup.py:241).  The 16 M-element default bounds each copy at
-    ~128 MB.  Measured at
-    sf0.1 (2 k vectors, 251 k candidate pairs, warm workers): pair stage
-    1.7 -> 1.1 s — modest here because the sieve's fixed costs (size
-    agg, Arrow round-trip, verify joins) are a large share at tiny
-    blocks; the ratio grows with block size as interpreted O(n_c^2 d)
-    lambda steps become one BLAS gemm.
     """
-    a = df.select(
-        F.col(block_col).alias("blk"), F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"), vector.norm(F.col(vec_col)).alias("na"),
+    pairs = _sieve_pairs(
+        "embedding_near_dup", df, None, threshold, block_col, vec_col, id_col,
+        within=True,
     )
-    b = df.select(
-        F.col(block_col).alias("blk"), F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"), vector.norm(F.col(vec_col)).alias("nb"),
-    )
-
-    pair_cols = (["blk"] if emit_block else []) + ["id_a", "id_b"]
-
-    def _join_pairs(aa, bb):
-        # Per-VECTOR norms precomputed before the pair join: the inline
-        # cosine recomputes dot(a,a)/dot(b,b) per candidate pair (3x the
-        # flops — measured 5.6 s -> ~2 s on a 3M-candidate block).
-        # sqrt(fold) is the same op sequence as inline, so cos is
-        # bit-identical and the oracle unchanged.
-        pairs = aa.join(bb, "blk").filter(F.col("id_a") < F.col("id_b"))
-        cos = vector.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-        return (
-            pairs.select(*pair_cols, round4(cos).alias("cos"))
-            .filter(F.col("cos") >= threshold)
-        )
-
-    def _finish(out):
-        if emit_block:
-            out = out.withColumnRenamed("blk", block_col)
-        return out.orderBy("id_a", "id_b")
-
-    if not sieve:
-        return _finish(_join_pairs(a, b))
-
-    import numpy as np
-    import pandas as pd
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    # The exact pass keeps round4(cos) >= threshold, which (round
-    # half-up) admits RAW cosines down to threshold - 5e-5; the sieve
-    # must prune no tighter or pairs in [threshold-5e-5, threshold)
-    # that round up would be join-path-kept but sieve-dropped
-    # (round-8 advice, high).  5e-5 = the round4 quantum's half;
-    # sieve_margin covers BLAS-vs-sequential-fold summation noise.
-    thr = threshold - 5e-5 - sieve_margin
-
-    def _gram_sieve(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["_id"].to_numpy()
-        V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        n = len(ids)
-        norms = np.sqrt((V * V).sum(axis=1))
-        norms[norms == 0.0] = 1.0  # zero vectors match nothing at thr>0
-        Vn = V / norms[:, None]
-        out_a, out_b = [], []
-        step = max(1, 16_000_000 // max(n, 1))  # ~128 MB gram chunk
-        for s in range(0, n, step):
-            G = Vn[s : s + step] @ Vn.T
-            ia, ib = np.nonzero(G >= thr)
-            ia = ia + s
-            keep = ids[ia] < ids[ib]  # id-value order, as the join path
-            out_a.append(ids[ia][keep])
-            out_b.append(ids[ib][keep])
-        ja = np.concatenate(out_a) if out_a else np.array([], dtype=ids.dtype)
-        jb = np.concatenate(out_b) if out_b else np.array([], dtype=ids.dtype)
-        if emit_block:
-            blk = pdf["blk"].iloc[0] if len(pdf) else None
-            return pd.DataFrame({"blk": np.repeat(blk, len(ja)), "id_a": ja, "id_b": jb})
-        return pd.DataFrame({"id_a": ja, "id_b": jb})
-
-    sizes = df.groupBy(F.col(block_col).alias("blk")).agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.max(F.size(F.col(vec_col))).alias("_d"),
-    )
-    fits = (F.col("_n") <= max_sieve_block) & (
-        F.col("_n") * F.col("_d") <= max_sieve_elems
-    )
-    _log_sieve_split("embedding_near_dup", sizes, fits)
-    small_blocks = F.broadcast(sizes.filter(fits))
-    big_blocks = F.broadcast(sizes.filter(~fits))
-    small = df.select(
-        F.col(block_col).alias("blk"),
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-    ).join(small_blocks, "blk", "left_semi")
-    blk_type = df.schema[block_col].dataType.simpleString()
-    sieve_schema = (f"blk {blk_type}, " if emit_block else "") + (
-        f"id_a {id_type}, id_b {id_type}"
-    )
-    cand = small.groupBy("blk").applyInPandas(_gram_sieve, schema=sieve_schema)
-    # exact verify: re-evaluate the oracle-exact fold on survivors only
-    cos = vector.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    exact = (
-        cand.join(a.select("id_a", "va", "na"), "id_a")
-        .join(b.select("id_b", "vb", "nb"), "id_b")
-        .select(*pair_cols, round4(cos).alias("cos"))
-        .filter(F.col("cos") >= threshold)
-    )
-    big = _join_pairs(
-        a.join(big_blocks, "blk", "left_semi"), b.join(big_blocks, "blk", "left_semi")
-    )
-    return _finish(exact.unionByName(big))
+    lead = [F.col("blk").alias(block_col)] if emit_block else []
+    return pairs.select(*lead, "id_a", "id_b", "cos").orderBy("id_a", "id_b")
 
 
 def embedding_match(
@@ -439,10 +461,6 @@ def embedding_match(
     block_col: str = "cell",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    sieve: bool = True,
-    sieve_margin: float = 1e-6,
-    max_sieve_block: int = 65_536,
-    max_sieve_elems: int = 16_000_000,
     emit_block: bool = False,
 ) -> DataFrame:
     """BIPARTITE near-dup: (vec_id, match_id, cos) for every new-batch
@@ -455,243 +473,22 @@ def embedding_match(
     prunes to the batch's cells and the corpus-vs-corpus pair join never
     runs.
 
-    Same execution strategy as :func:`embedding_near_dup`: a per-block
-    RECTANGULAR gram sieve (new x old gemm at ``threshold -
-    sieve_margin``) with the exact sequential-fold cosine re-evaluated
-    on survivors (bit-identical to the plain block join, which remains
-    available via ``sieve=False`` and for blocks whose combined
-    population exceeds ``max_sieve_block`` rows or ``max_sieve_elems``
-    elements — the embedding_near_dup memory model).
+    The pairs are the cross pairs of the gram-sieve kernel
+    :func:`_sieve_pairs`: a per-block RECTANGULAR gram (new x corpus,
+    never new x new) with the exact sequential-fold cosine re-evaluated
+    on survivors, bit-identical to the plain block join, which blocks
+    whose combined population exceeds ``MAX_SIEVE_BLOCK`` rows or
+    ``MAX_SIEVE_ELEMS`` elements keep.  A block holding only one side
+    yields no pairs and skips the gram.
     """
-    a = new_df.select(
-        F.col(block_col).alias("blk"), F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"), vector.norm(F.col(vec_col)).alias("na"),
+    pairs = _sieve_pairs(
+        "embedding_match", new_df, corpus_df, threshold, block_col, vec_col, id_col,
+        within=False,
     )
-    b = corpus_df.select(
-        F.col(block_col).alias("blk"), F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"), vector.norm(F.col(vec_col)).alias("nb"),
-    )
-    cos = vector.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    pair_cols = (["blk"] if emit_block else []) + ["id_a", "id_b"]
-
-    def _join_pairs(aa, bb):
-        return (
-            aa.join(bb, "blk")
-            .select(*pair_cols, round4(cos).alias("cos"))
-            .filter(F.col("cos") >= threshold)
-        )
-
-    def _finish(out):
-        out_cols = ([F.col("blk").alias(block_col)] if emit_block else []) + [
-            F.col("id_a").alias(id_col), F.col("id_b").alias("match_id"), F.col("cos"),
-        ]
-        return out.select(*out_cols).orderBy(id_col, "match_id")
-
-    if not sieve:
-        return _finish(_join_pairs(a, b))
-
-    import numpy as np
-    import pandas as pd
-
-    id_type = new_df.schema[id_col].dataType.simpleString()
-    # The exact pass keeps round4(cos) >= threshold, which (round
-    # half-up) admits RAW cosines down to threshold - 5e-5; the sieve
-    # must prune no tighter or pairs in [threshold-5e-5, threshold)
-    # that round up would be join-path-kept but sieve-dropped
-    # (round-8 advice, high).  5e-5 = the round4 quantum's half;
-    # sieve_margin covers BLAS-vs-sequential-fold summation noise.
-    thr = threshold - 5e-5 - sieve_margin
-
-    def _gram_sieve(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = (["blk"] if emit_block else []) + ["id_a", "id_b"]
-        empty = pd.DataFrame({c: [] for c in cols})
-        newm = pdf["_side"].to_numpy() == 0
-        if not newm.any() or newm.all():
-            return empty  # one-sided block: no bipartite pairs
-        ids = pdf["_id"].to_numpy()
-        V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        norms = np.sqrt((V * V).sum(axis=1))
-        norms[norms == 0.0] = 1.0
-        Vn = V / norms[:, None]
-        A, B = Vn[newm], Vn[~newm]
-        ia_ids, ib_ids = ids[newm], ids[~newm]
-        out_a, out_b = [], []
-        step = max(1, 16_000_000 // max(len(ib_ids), 1))
-        for s in range(0, len(ia_ids), step):
-            G = A[s : s + step] @ B.T
-            ia, ib = np.nonzero(G >= thr)
-            out_a.append(ia_ids[ia + s])
-            out_b.append(ib_ids[ib])
-        if not out_a:
-            return empty
-        ja, jb = np.concatenate(out_a), np.concatenate(out_b)
-        if emit_block:
-            return pd.DataFrame(
-                {"blk": np.repeat(pdf["blk"].iloc[0], len(ja)), "id_a": ja, "id_b": jb}
-            )
-        return pd.DataFrame({"id_a": ja, "id_b": jb})
-
-    both = a.select("blk", F.col("id_a").alias("_id"), F.col("va").alias("_v"), F.lit(0).alias("_side")).unionByName(
-        b.select("blk", F.col("id_b").alias("_id"), F.col("vb").alias("_v"), F.lit(1).alias("_side"))
-    )
-    sizes = both.groupBy("blk").agg(
-        F.count(F.lit(1)).alias("_n"), F.max(F.size("_v")).alias("_d")
-    )
-    fits = (F.col("_n") <= max_sieve_block) & (
-        F.col("_n") * F.col("_d") <= max_sieve_elems
-    )
-    _log_sieve_split("embedding_match", sizes, fits)
-    small_blocks = F.broadcast(sizes.filter(fits))
-    big_blocks = F.broadcast(sizes.filter(~fits))
-    blk_type = new_df.schema[block_col].dataType.simpleString()
-    sieve_schema = (f"blk {blk_type}, " if emit_block else "") + (
-        f"id_a {id_type}, id_b {id_type}"
-    )
-    cand = (
-        both.join(small_blocks, "blk", "left_semi")
-        .groupBy("blk")
-        .applyInPandas(_gram_sieve, schema=sieve_schema)
-    )
-    exact = (
-        cand.join(a.select("id_a", "va", "na"), "id_a")
-        .join(b.select("id_b", "vb", "nb"), "id_b")
-        .select(*pair_cols, round4(cos).alias("cos"))
-        .filter(F.col("cos") >= threshold)
-    )
-    big = _join_pairs(
-        a.join(big_blocks, "blk", "left_semi"), b.join(big_blocks, "blk", "left_semi")
-    )
-    return _finish(exact.unionByName(big))
-
-
-# --- product quantization (IVF-PQ's compression half) -----------------------
-#
-def _incremental_pair_edges(
-    new_df: DataFrame,
-    corpus_df: DataFrame,
-    threshold: float,
-    block_col: str = "cell",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sieve: bool = True,
-    sieve_margin: float = 1e-6,
-    max_sieve_block: int = 65_536,
-    max_sieve_elems: int = 16_000_000,
-) -> DataFrame:
-    """FUSED per-batch edge kernel for :func:`semantic_dedup_update`
-    (round 13, guide §4 "cross the Python boundary once" / §2.3 "shuffle
-    fewer bytes"): one per-block gram sieve computes BOTH the bipartite
-    new-vs-corpus pairs (:func:`embedding_match`'s edge set) AND the
-    within-new pairs (:func:`embedding_near_dup`'s, ``id_a < id_b``) —
-    the union the incremental CC consumes.  Run separately, the batch's
-    vectors shuffled and crossed into Python twice (two sizes aggs, two
-    applyInPandas stages, four verify joins); fused, once.  The flop
-    count is identical (new x (new+corpus) == new x corpus + new x new),
-    and exactness is preserved the same way as both parents: the sieve
-    admits raw cosines down to ``threshold - 5e-5 - sieve_margin`` and
-    the oracle-exact sequential-fold cosine is re-evaluated on survivors
-    (equivalence pinned against the two parent operators in
-    ``tests/test_llm_ops.py``).  Ids must be disjoint across sides (the
-    :func:`embedding_match` contract).  Returns (block_col, id_a, id_b):
-    ``id_a`` is always a batch vector; ``id_b`` is a corpus vector (any
-    order) or a batch vector (then ``id_a < id_b``) — edge direction is
-    irrelevant to connected components.
-    """
-    import numpy as np
-    import pandas as pd
-
-    a = new_df.select(
-        F.col(block_col).alias("blk"), F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"), vector.norm(F.col(vec_col)).alias("na"),
-    )
-    ball = new_df.select(
-        F.col(block_col).alias("blk"), F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"), vector.norm(F.col(vec_col)).alias("nb"),
-        F.lit(0).alias("_side"),
-    ).unionByName(
-        corpus_df.select(
-            F.col(block_col).alias("blk"), F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("vb"), vector.norm(F.col(vec_col)).alias("nb"),
-            F.lit(1).alias("_side"),
-        )
-    )
-    cos = vector.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    keep = (F.col("_side") == 1) | (F.col("id_a") < F.col("id_b"))
-    out_cols = [F.col("blk").alias(block_col), "id_a", "id_b"]
-
-    def _join_pairs(aa, bb):
-        return (
-            aa.join(bb, "blk")
-            .filter(keep)
-            .select("blk", "id_a", "id_b", round4(cos).alias("cos"))
-            .filter(F.col("cos") >= threshold)
-            .drop("cos")
-        )
-
-    if not sieve:
-        return _join_pairs(a, ball).select(*out_cols)
-
-    id_type = new_df.schema[id_col].dataType.simpleString()
-    blk_type = new_df.schema[block_col].dataType.simpleString()
-    # same admission rule as both parents: exact pass keeps
-    # round4(cos) >= threshold, which admits raw cosines 5e-5 below
-    thr = threshold - 5e-5 - sieve_margin
-
-    def _gram(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"blk": [], "id_a": [], "id_b": []})
-        side = pdf["_side"].to_numpy()
-        newm = side == 0
-        if not newm.any():
-            return empty
-        ids = pdf["_id"].to_numpy()
-        V = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        norms = np.sqrt((V * V).sum(axis=1))
-        norms[norms == 0.0] = 1.0
-        Vn = V / norms[:, None]
-        A, a_ids = Vn[newm], ids[newm]
-        out_a, out_b = [], []
-        step = max(1, 16_000_000 // max(len(ids), 1))
-        for s in range(0, len(a_ids), step):
-            G = A[s : s + step] @ Vn.T
-            ia, ib = np.nonzero(G >= thr)
-            ja, jb, sb = a_ids[ia + s], ids[ib], side[ib]
-            m = (sb == 1) | (ja < jb)
-            out_a.append(ja[m])
-            out_b.append(jb[m])
-        ja = np.concatenate(out_a) if out_a else np.array([], dtype=ids.dtype)
-        jb = np.concatenate(out_b) if out_b else np.array([], dtype=ids.dtype)
-        return pd.DataFrame(
-            {"blk": np.repeat(pdf["blk"].iloc[0] if len(pdf) else None, len(ja)),
-             "id_a": ja, "id_b": jb}
-        )
-
-    sizes = ball.groupBy("blk").agg(
-        F.count(F.lit(1)).alias("_n"), F.max(F.size("vb")).alias("_d")
-    )
-    fits = (F.col("_n") <= max_sieve_block) & (
-        F.col("_n") * F.col("_d") <= max_sieve_elems
-    )
-    _log_sieve_split("incremental_pair_edges", sizes, fits)
-    small_blocks = F.broadcast(sizes.filter(fits))
-    big_blocks = F.broadcast(sizes.filter(~fits))
-    small = ball.select(
-        "blk", F.col("id_b").alias("_id"), F.col("vb").alias("_v"), "_side"
-    ).join(small_blocks, "blk", "left_semi")
-    cand = small.groupBy("blk").applyInPandas(
-        _gram, schema=f"blk {blk_type}, id_a {id_type}, id_b {id_type}"
-    )
-    exact = (
-        cand.join(a.select("id_a", "va", "na"), "id_a")
-        .join(ball.select("id_b", "vb", "nb"), "id_b")
-        .select("blk", "id_a", "id_b", round4(cos).alias("cos"))
-        .filter(F.col("cos") >= threshold)
-        .drop("cos")
-    )
-    big = _join_pairs(
-        a.join(big_blocks, "blk", "left_semi"),
-        ball.join(big_blocks, "blk", "left_semi"),
-    )
-    return exact.unionByName(big).select(*out_cols)
+    lead = [F.col("blk").alias(block_col)] if emit_block else []
+    return pairs.select(
+        *lead, F.col("id_a").alias(id_col), F.col("id_b").alias("match_id"), "cos"
+    ).orderBy(id_col, "match_id")
 
 
 def embedding_store_update(
@@ -798,6 +595,8 @@ def embedding_store_backed_update(
     )
 
 
+# --- product quantization (IVF-PQ's compression half) -----------------------
+#
 # PQ splits each D-dim vector into m subvectors and replaces every
 # subvector with the index of its nearest codeword in a per-subspace
 # codebook (ksub entries) — D floats become m small ints.  Queries score
@@ -1316,65 +1115,69 @@ def semantic_dedup(
     """
     from agile_lakehouse_spark.operators import graph
 
-    if centroids is None:
-        tagged = df
-        pairs = embedding_near_dup(
-            tagged, threshold, block_col="cell", vec_col=vec_col, id_col=id_col,
-            emit_block=True,
-        )
-        # pairs only form within a cell, so components are cell-contained:
-        # one shuffle + per-cell union-find replaces the O(diameter)
-        # label-propagation rounds (round 13; bit-identical, test-pinned)
-        comps = graph.connected_components_blocked(
-            pairs, block_col="cell", src="id_a", dst="id_b", id_col=id_col
-        )
-        rep = F.coalesce(F.col("component"), F.col(id_col))
-        return tagged.join(comps, id_col, "left").select(
-            F.col(id_col),
-            F.col("cell").cast("bigint").alias("cell"),
-            rep.cast("bigint").alias("grp"),
-            (rep == F.col(id_col)).alias("kept"),
-        )
+    tagged = df
+    if centroids is not None:
+        assigned = ivf_assign(df, centroids, vec_col, id_col)
+        if persist_cells:
+            # ``tagged`` feeds three plan branches (both sides of the
+            # within-cell pair join + the final output join), so the
+            # m-way centroid argmax would otherwise run ~3x over the full
+            # corpus.  The assignment is two columns per vector — persisting
+            # it (not embedding-sized ``tagged``) is the compute-once layout
+            # table a 100 TB ingest writes partitionBy(cell) anyway.  Same
+            # lifetime discipline as lm_fluency: pass ``caches`` to
+            # unpersist after materializing.
+            if caches is None:
+                import warnings
 
-    assigned = ivf_assign(df, centroids, vec_col, id_col)
-    if persist_cells:
-        # ``tagged`` feeds three plan branches (both sides of the
-        # within-cell pair join + the final output join), so the
-        # m-way centroid argmax would otherwise run ~3x over the full
-        # corpus.  The assignment is two columns per vector — persisting
-        # it (not embedding-sized ``tagged``) is the compute-once layout
-        # table a 100 TB ingest writes partitionBy(cell) anyway.  Same
-        # lifetime discipline as lm_fluency: pass ``caches`` to
-        # unpersist after materializing.
-        if caches is None:
-            import warnings
-
-            warnings.warn(
-                "semantic_dedup(persist_cells=True, caches=None) persists "
-                "a cell-assignment table it cannot unpersist (lazy "
-                "return); pass a caches= list and unpersist after "
-                "materializing, or persist_cells=False",
-                ResourceWarning,
-                stacklevel=2,
-            )
-        assigned = assigned.persist()
-        if caches is not None:
-            caches.append(assigned)
-    tagged = df.join(assigned, id_col)
+                warnings.warn(
+                    "semantic_dedup(persist_cells=True, caches=None) persists "
+                    "a cell-assignment table it cannot unpersist (lazy "
+                    "return); pass a caches= list and unpersist after "
+                    "materializing, or persist_cells=False",
+                    ResourceWarning,
+                    stacklevel=2,
+                )
+            assigned = assigned.persist()
+            if caches is not None:
+                caches.append(assigned)
+        tagged = df.join(assigned, id_col)
     pairs = embedding_near_dup(
         tagged, threshold, block_col="cell", vec_col=vec_col, id_col=id_col,
         emit_block=True,
     )
-    # cell-contained components -> one-shuffle blocked union-find (round 13)
+    # pairs only form within a cell, so components are cell-contained:
+    # one shuffle + per-cell union-find replaces the O(diameter)
+    # label-propagation rounds (round 13; bit-identical, test-pinned)
     comps = graph.connected_components_blocked(
         pairs, block_col="cell", src="id_a", dst="id_b", id_col=id_col
     )
+    return _group_rows(tagged, comps, id_col)
+
+
+def _group_rows(ids: DataFrame, comps: DataFrame, id_col: str) -> DataFrame:
+    """SemDeDup's (id, cell, grp, kept) rows: each id of ``ids`` (which
+    carries ``cell``) joined to its component, a singleton when no edge
+    touched it; ``kept`` marks the group's minimum id."""
     rep = F.coalesce(F.col("component"), F.col(id_col))
-    return tagged.join(comps, id_col, "left").select(
+    return ids.join(comps, id_col, "left").select(
         F.col(id_col),
         F.col("cell").cast("bigint").alias("cell"),
         rep.cast("bigint").alias("grp"),
         (rep == F.col(id_col)).alias("kept"),
+    )
+
+
+def _tag_cells(
+    new_df: DataFrame, centroids: DataFrame | None, vec_col: str, id_col: str
+) -> DataFrame:
+    """A batch as (cell bigint, id, vector): its own ``cell`` column when
+    ``centroids`` is None (pre-assigned mode, where frozen assignment is
+    the caller's discipline), else its :func:`ivf_assign` cell."""
+    if centroids is not None:
+        new_df = new_df.join(ivf_assign(new_df, centroids, vec_col, id_col), id_col)
+    return new_df.select(
+        F.col("cell").cast("bigint").alias("cell"), F.col(id_col), F.col(vec_col)
     )
 
 
@@ -1407,8 +1210,11 @@ def semantic_dedup_update(
     oracle SQL as dq148): pairs only form within a cell, so components
     are cell-contained, and a batch can only change components in the
     cells it touches (the DIRTY cells).  Per batch we re-solve exactly
-    those cells: edges = bipartite batch-vs-store pairs
-    (:func:`embedding_match`, gram-sieved), within-batch pairs, plus one
+    those cells: edges = the bipartite batch-vs-store pairs
+    (:func:`embedding_match`'s) and the within-batch pairs
+    (:func:`embedding_near_dup`'s), both from ONE call of the gram-sieve
+    kernel :func:`_sieve_pairs` (blocks over the ``MAX_SIEVE_BLOCK`` /
+    ``MAX_SIEVE_ELEMS`` caps take its pair join), plus one
     STRUCTURAL edge id→grp per old dirty-cell member — the star to its
     old representative preserves the old component's connectivity
     without re-scoring any old-old pair.  Min-label CC over that edge
@@ -1449,18 +1255,7 @@ def semantic_dedup_update(
             caches.append(df)
         return df
 
-    if centroids is None:
-        # pre-assigned mode (semantic_dedup's contract): the batch already
-        # carries its cell — frozen-assignment discipline is the caller's
-        tagged = new_df.select(
-            F.col("cell").cast("bigint").alias("cell"), F.col(id_col), F.col(vec_col)
-        )
-    else:
-        new_assigned = ivf_assign(new_df, centroids, vec_col, id_col)
-        tagged = new_df.join(new_assigned, id_col).select(
-            F.col("cell").cast("bigint").alias("cell"), F.col(id_col), F.col(vec_col)
-        )
-    tagged_new = _register(tagged)
+    tagged_new = _register(_tag_cells(new_df, centroids, vec_col, id_col))
 
     if state is None:
         assign = _register(
@@ -1476,14 +1271,16 @@ def semantic_dedup_update(
     store_dirty = vectors.join(F.broadcast(dirty), "cell")
     old_dirty = old_assign.join(F.broadcast(dirty), "cell")
 
-    # ONE fused per-cell sieve yields both the bipartite batch-vs-store
-    # pairs and the within-batch pairs (round 13: the batch's vectors
-    # cross the Python boundary once instead of twice; bit-identical
-    # edge set, pinned against the two parent operators in tests)
-    pair_edges = _incremental_pair_edges(
-        tagged_new, store_dirty, threshold,
-        block_col="cell", vec_col=vec_col, id_col=id_col,
-    ).select("cell", "id_a", "id_b")
+    # ONE call of the gram-sieve kernel yields both the bipartite
+    # batch-vs-store pairs and the within-batch pairs (round 13: the
+    # batch's vectors cross the Python boundary once, one gram per cell
+    # of new x (new+corpus); blocks over the MAX_SIEVE_BLOCK /
+    # MAX_SIEVE_ELEMS caps take the pair join; the edge set is pinned
+    # against embedding_match + embedding_near_dup in tests)
+    pair_edges = _sieve_pairs(
+        "incremental_pair_edges", tagged_new, store_dirty, threshold,
+        "cell", vec_col, id_col, within=True,
+    ).select(F.col("blk").alias("cell"), "id_a", "id_b")
     # the structural star edge stays inside its cell by construction, so
     # the whole edge set is cell-keyed and components stay cell-contained:
     # blocked union-find, one shuffle instead of O(diameter) rounds (r13)
@@ -1498,13 +1295,7 @@ def semantic_dedup_update(
     dirty_ids = old_dirty.select(id_col, "cell").unionByName(
         tagged_new.select(id_col, "cell")
     )
-    rep = F.coalesce(F.col("component"), F.col(id_col))
-    dirty_assign = dirty_ids.join(comps, id_col, "left").select(
-        F.col(id_col),
-        F.col("cell").cast("bigint").alias("cell"),
-        rep.cast("bigint").alias("grp"),
-        (rep == F.col(id_col)).alias("kept"),
-    )
+    dirty_assign = _group_rows(dirty_ids, comps, id_col)
     assign = _register(
         old_assign.join(F.broadcast(dirty), "cell", "left_anti").unionByName(dirty_assign)
     )
@@ -1558,16 +1349,7 @@ def semantic_dedup_store_update(
     vec = StateStore(f"{store_path}/vectors", caches=caches)
     asg_tbl = TransactionalTable(f"{store_path}/assign")
 
-    if centroids is None:
-        tagged = new_df.select(
-            F.col("cell").cast("bigint").alias("cell"), F.col(id_col), F.col(vec_col)
-        )
-    else:
-        assigned = ivf_assign(new_df, centroids, vec_col, id_col)
-        tagged = new_df.join(assigned, id_col).select(
-            F.col("cell").cast("bigint").alias("cell"), F.col(id_col), F.col(vec_col)
-        )
-    tagged = vec.keep(tagged)
+    tagged = vec.keep(_tag_cells(new_df, centroids, vec_col, id_col))
 
     dirty_vals, n_part = _dirty_cells(tagged, "cell", "semantic_dedup_store_update")
     rows = tagged.repartitionByRange(n_part, "cell")

@@ -1299,7 +1299,12 @@ class TransactionalTable:
 
         Returns the deleted data files, vectors and sidecars.  Destroys
         time travel beyond the kept window (same contract as Delta VACUUM).
+        ``keep_versions`` must be at least 1 — the newest version is
+        always kept — and a smaller value raises ``ValueError`` before
+        any file is touched.
         """
+        if keep_versions < 1:
+            raise ValueError(f"vacuum: keep_versions must be >= 1, got {keep_versions}")
         vs = self.versions()
         keep = set()
         for v in vs[-keep_versions:]:
@@ -1308,7 +1313,7 @@ class TransactionalTable:
             keep.update(m.get("deletes", []))
         removed = []
         dead_dirs = set()
-        for v in vs[:-keep_versions] if keep_versions else vs:
+        for v in vs[:-keep_versions]:
             m = self._read_manifest(v)
             for f in m["files"] + m.get("deletes", []):
                 if f in keep:

@@ -1,11 +1,13 @@
 """Optimization measurement pass: measure before changing anything.
 
 For every bench entry (or the names given on argv): capture the
-``explain("formatted")`` plan to DIR/<name>_before.txt (or _after),
-count Exchange / BatchEvalPython / ArrowEvalPython / SortMergeJoin /
-BroadcastHashJoin nodes, and time N warm noop-sink runs so per-entry work
-is attributable before anything is changed.  The per-entry results merge
-into DIR/profile_before.json (or _after).
+``explain("formatted")`` plan to DIR/<name>.txt, count Exchange /
+BatchEvalPython / ArrowEvalPython / SortMergeJoin / BroadcastHashJoin
+nodes, and time N warm noop-sink runs so per-entry work is attributable
+before anything is changed.  The per-entry results merge into
+DIR/profile_before.json (or _after).  Plans are written through
+:func:`normalize_plan` (``profile_store_phases.py --plans`` uses it too),
+so a plan-change check is ``diff -r BEFORE_DIR AFTER_DIR``.
 
 Usage:
     python scripts/profile_plans.py --out DIR [--after] [--reps N] [name ...]
@@ -17,6 +19,7 @@ import json
 import os
 import re
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -40,6 +43,31 @@ PLAN_NODES = (
     "TakeOrderedAndProject",
     "WholeStageCodegen",
 )
+
+
+# Expression ids, plan ids, lambda-variable and RDD ids, AQE query-stage
+# and codegen-stage ids, uuids, temp-dir names and part-file numbers
+# change from run to run without any change of plan.
+_NORMALIZE = [
+    (re.compile(r"#\d+L?"), "#N"),
+    (re.compile(r"(lambda \w+?)_\d+\b"), r"\1_N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    # executed AQE plans (a persisted frame that was already computed)
+    # number their query stages and codegen stages in completion order
+    (re.compile(r"\[codegen id : \d+\]"), "[codegen id : N]"),
+    (re.compile(r"(QueryStage\n(?:Output .*\n)?Arguments: )\d+"), r"\1N"),
+    (re.compile(r"\b(\w*RDD)\[\d+\]"), r"\1[N]"),
+    (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"), "UUID"),
+    (re.compile(r"[0-9a-f]{32}"), "UUID"),
+    (re.compile(r"part-\d{5}"), "part-N"),
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\s,\]]+"), "TMP"),
+]
+
+
+def normalize_plan(plan: str) -> str:
+    for pat, repl in _NORMALIZE:
+        plan = pat.sub(repl, plan)
+    return plan
 
 
 def plan_counts(plan: str) -> dict[str, int]:
@@ -102,8 +130,8 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        with open(os.path.join(out_dir, f"{name}{suffix}.txt"), "w") as fh:
-            fh.write(plan)
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
+            fh.write(normalize_plan(plan))
         t0 = time.time()
         bench.execute_fully(df)
         first_s = time.time() - t0

@@ -20,40 +20,19 @@ Usage: python scripts/profile_store_phases.py [--plans DIR] [dq21k|dq148d|...] [
 from __future__ import annotations
 
 import os
-import re
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, ".")
 
 from agile_lakehouse_spark import declared, get_session  # noqa: E402
 from agile_lakehouse_spark.plans import snapshots  # noqa: E402
+# scripts/ is sys.path[0] when this file runs as a script
+from profile_plans import normalize_plan  # noqa: E402
 
 PHASES: list[tuple[str, float]] = []
 # --plans: the entry whose warm-up run is being recorded, and its call count
 PLANS = {"dir": None, "entry": None, "n": 0}
-
-_NORMALIZE = [
-    (re.compile(r"#\d+L?"), "#N"),
-    (re.compile(r"(lambda \w+?)_\d+\b"), r"\1_N"),
-    (re.compile(r"plan_id=\d+"), "plan_id=N"),
-    # executed AQE plans (a persisted frame that was already computed)
-    # number their query stages and codegen stages in completion order
-    (re.compile(r"\[codegen id : \d+\]"), "[codegen id : N]"),
-    (re.compile(r"(QueryStage\n(?:Output .*\n)?Arguments: )\d+"), r"\1N"),
-    (re.compile(r"\b(\w*RDD)\[\d+\]"), r"\1[N]"),
-    (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"), "UUID"),
-    (re.compile(r"[0-9a-f]{32}"), "UUID"),
-    (re.compile(r"part-\d{5}"), "part-N"),
-    (re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\s,\]]+"), "TMP"),
-]
-
-
-def normalize_plan(plan: str) -> str:
-    for pat, repl in _NORMALIZE:
-        plan = pat.sub(repl, plan)
-    return plan
 
 
 def _record_plan(kind: str, df) -> None:

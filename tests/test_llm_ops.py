@@ -1316,11 +1316,26 @@ def test_gopher_quality_known_partitions_preserves_range_partitioning(spark):
     assert ids == sorted(ids)
 
 
-def test_embedding_near_dup_sieve_equals_join(spark):
+# Caps of 0 send every block of the gram-sieve kernel to its pair join:
+# the reference result the sieve path must reproduce bit for bit.
+JOIN_PATH = {"MAX_SIEVE_BLOCK": 0, "MAX_SIEVE_ELEMS": 0}
+
+
+def _capped(monkeypatch, build, **caps):
+    """Collect ``build()`` with the named gram-sieve cap constants of
+    ``similarity`` patched for the call (the kernel reads them when the
+    pair frame is built)."""
+    with monkeypatch.context() as m:
+        for name, value in caps.items():
+            m.setattr(similarity, name, value)
+        return build().collect()
+
+
+def test_embedding_near_dup_sieve_equals_join(spark, monkeypatch):
     """Round 8: the BLAS gram sieve + exact-verify path must return
     bit-identical (id_a, id_b, cos) rows to the pure distributed pair
     join at any block-size split — including thresholds landing within
-    sieve_margin of a true cosine, zero vectors, and the forced
+    SIEVE_MARGIN of a true cosine, zero vectors, and the forced
     big-block fallback."""
     import math
     import random
@@ -1343,17 +1358,18 @@ def test_embedding_near_dup_sieve_equals_join(spark):
         rows, "vec_id long, label int, embedding array<double>"
     ).repartition(5)
     for thr in (0.9, 0.999):
-        base = S.embedding_near_dup(df, thr, block_col="label", sieve=False).collect()
-        got = S.embedding_near_dup(df, thr, block_col="label").collect()
+        def build():
+            return S.embedding_near_dup(df, thr, block_col="label")
+
+        base = _capped(monkeypatch, build, **JOIN_PATH)
+        got = build().collect()
         assert got == base, f"sieve diverged at threshold {thr}"
-        forced = S.embedding_near_dup(
-            df, thr, block_col="label", max_sieve_block=2
-        ).collect()
+        forced = _capped(monkeypatch, build, MAX_SIEVE_BLOCK=2)
         assert forced == base, "forced big-block fallback diverged"
         assert len(base) >= 24  # the planted duplicates are actually found
 
 
-def test_sieve_keeps_round4_boundary_pairs(spark):
+def test_sieve_keeps_round4_boundary_pairs(spark, monkeypatch):
     """Round 9 (advice, high): the exact pass keeps round4(cos) >=
     threshold, admitting RAW cosines down to threshold - 5e-5; the sieve
     must prune no tighter.  A pair whose raw cosine sits in
@@ -1371,20 +1387,22 @@ def test_sieve_keeps_round4_boundary_pairs(spark):
         (2, 0, [math.cos(ang), math.sin(ang)]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, label int, embedding array<double>")
-    base = S.embedding_near_dup(df, thr, block_col="label", sieve=False).collect()
+    base = _capped(
+        monkeypatch, lambda: S.embedding_near_dup(df, thr, block_col="label"), **JOIN_PATH
+    )
     assert len(base) == 1 and base[0]["cos"] == 0.9  # join path keeps it
     got = S.embedding_near_dup(df, thr, block_col="label").collect()
     assert got == base, "sieve dropped a round4-boundary pair the join keeps"
     # bipartite form, same boundary
     new = df.filter("vec_id = 1").withColumnRenamed("label", "cell")
     old = df.filter("vec_id = 2").withColumnRenamed("label", "cell")
-    mbase = S.embedding_match(new, old, thr, sieve=False).collect()
+    mbase = _capped(monkeypatch, lambda: S.embedding_match(new, old, thr), **JOIN_PATH)
     mgot = S.embedding_match(new, old, thr).collect()
     assert len(mbase) == 1 and mgot == mbase
 
 
-def test_sieve_elem_cap_dimension_aware(spark):
-    """Round 9 (advice): max_sieve_elems caps rows x dim — a wide-vector
+def test_sieve_elem_cap_dimension_aware(spark, monkeypatch):
+    """Round 9 (advice): MAX_SIEVE_ELEMS caps rows x dim — a wide-vector
     block over the element cap must take the join fallback and still
     return identical rows."""
     import random
@@ -1396,16 +1414,22 @@ def test_sieve_elem_cap_dimension_aware(spark):
     rows = [(i, 0, [rnd.gauss(0, 1) for _ in range(dim)]) for i in range(40)]
     rows += [(i + 100, 0, [x * 1.5 for x in rows[i][2]]) for i in range(10)]
     df = spark.createDataFrame(rows, "vec_id long, label int, embedding array<double>")
-    base = S.embedding_near_dup(df, 0.9, block_col="label", sieve=False).collect()
+
+    def near_dup():
+        return S.embedding_near_dup(df, 0.9, block_col="label")
+
+    base = _capped(monkeypatch, near_dup, **JOIN_PATH)
     # 50 rows x 32 dims = 1600 elements > 512 -> join fallback despite row cap
-    capped = S.embedding_near_dup(
-        df, 0.9, block_col="label", max_sieve_elems=512
-    ).collect()
+    capped = _capped(monkeypatch, near_dup, MAX_SIEVE_ELEMS=512)
     assert capped == base
     new = df.filter("vec_id < 50").withColumnRenamed("label", "cell")
     old = df.filter("vec_id >= 100").withColumnRenamed("label", "cell")
-    mbase = S.embedding_match(new, old, 0.9, sieve=False).collect()
-    mcapped = S.embedding_match(new, old, 0.9, max_sieve_elems=512).collect()
+
+    def match():
+        return S.embedding_match(new, old, 0.9)
+
+    mbase = _capped(monkeypatch, match, **JOIN_PATH)
+    mcapped = _capped(monkeypatch, match, MAX_SIEVE_ELEMS=512)
     assert mcapped == mbase and len(mbase) >= 10
 
 
@@ -1715,7 +1739,7 @@ def test_state_pin_table_reuses_one_base_dir(spark, monkeypatch):
     assert os.path.dirname(bases.pop()) == tempfile.gettempdir()
 
 
-def test_embedding_match_sieve_equals_join(spark):
+def test_embedding_match_sieve_equals_join(spark, monkeypatch):
     """Bipartite matcher: gram-sieve path == plain block join, forced
     big-block fallback included; one-sided blocks yield no pairs."""
     import random
@@ -1734,9 +1758,13 @@ def test_embedding_match_sieve_equals_join(spark):
     df = spark.createDataFrame(rows, "vec_id long, cell int, embedding array<double>")
     new = df.filter("vec_id >= 500")
     old = df.filter("vec_id < 500")
-    base = S.embedding_match(new, old, 0.95, sieve=False).collect()
-    got = S.embedding_match(new, old, 0.95).collect()
-    forced = S.embedding_match(new, old, 0.95, max_sieve_block=2).collect()
+
+    def match():
+        return S.embedding_match(new, old, 0.95)
+
+    base = _capped(monkeypatch, match, **JOIN_PATH)
+    got = match().collect()
+    forced = _capped(monkeypatch, match, MAX_SIEVE_BLOCK=2)
     assert got == base and forced == base
     assert len(base) >= 10  # planted scaled copies are found (cos == 1.0)
     assert all(r.vec_id >= 500 and r.match_id < 500 for r in base)
@@ -1785,11 +1813,13 @@ def test_incremental_ops_plan_shapes(spark, sf_dir):
     [c.unpersist() for c in caches]
 
 
-def test_incremental_pair_edges_equals_parent_operators(spark):
-    """Round 13: the FUSED per-batch edge kernel must emit exactly the
-    union of embedding_match's (new, old) edges and embedding_near_dup's
-    within-new (id_a < id_b) edges — across the sieve path, the forced
-    big-block fallback, and sieve=False."""
+def test_incremental_pair_edges_equals_parent_operators(spark, monkeypatch):
+    """Round 13: the FUSED per-batch edges (one gram-sieve kernel call
+    with both pair kinds, as semantic_dedup_update makes it) must be
+    exactly the union of embedding_match's (new, old) edges and
+    embedding_near_dup's within-new (id_a < id_b) edges — across the
+    sieve path, the forced big-block fallback, and the join path for
+    every block (caps of 0)."""
     import random
 
     from agile_lakehouse_spark.operators import similarity as S
@@ -1819,9 +1849,52 @@ def test_incremental_pair_edges_equals_parent_operators(spark):
     assert expected, "fixture must plant both edge kinds"
     assert any(a >= 500 and b < 500 for _, a, b in expected)  # cross edges
     assert any(a >= 500 and b >= 500 for _, a, b in expected)  # within edges
-    for kw in ({}, {"max_sieve_block": 2}, {"sieve": False}):
-        got = sorted(
-            tuple(r)
-            for r in S._incremental_pair_edges(new, old, thr, **kw).collect()
-        )
+    def fused():
+        return S._sieve_pairs(
+            "incremental_pair_edges", new, old, thr, "cell", "embedding", "vec_id",
+            within=True,
+        ).select("blk", "id_a", "id_b")
+
+    for kw in ({}, {"MAX_SIEVE_BLOCK": 2}, JOIN_PATH):
+        got = sorted(tuple(r) for r in _capped(monkeypatch, fused, **kw))
         assert got == expected, f"fused kernel diverged under {kw}"
+
+
+def test_sieve_path_log_records_each_split(spark, monkeypatch):
+    """SIEVE_PATH_LOG (what bench.py writes to its sidecar as
+    ``sieve_paths``) gets one record per gram-sieve call, labelled with
+    the calling operator, counting the blocks on each side of the caps.
+    Cell 0 holds 6 new + 4 corpus vectors, cell 1 holds 2 + 1; a row cap
+    of 4 puts cell 0 over it for every caller."""
+    import random
+
+    from agile_lakehouse_spark.operators import similarity as S
+
+    rnd = random.Random(5)
+    rows = [(i, 0, [rnd.gauss(0, 1) for _ in range(8)]) for i in range(10)]
+    rows += [(i, 1, [rnd.gauss(0, 1) for _ in range(8)]) for i in range(10, 13)]
+    df = spark.createDataFrame(rows, "vec_id long, cell int, embedding array<double>")
+    new = df.filter("vec_id in (0, 1, 2, 3, 4, 5, 10, 11)")
+    old = df.filter("vec_id in (6, 7, 8, 9, 12)")
+    state = {
+        "vectors": old.select(F.col("cell").cast("bigint").alias("cell"), "vec_id", "embedding"),
+        "assign": old.select(
+            "vec_id", F.col("cell").cast("bigint").alias("cell"),
+            F.col("vec_id").alias("grp"), F.lit(True).alias("kept"),
+        ),
+    }
+    monkeypatch.setattr(S, "MAX_SIEVE_BLOCK", 4)
+    monkeypatch.setattr(S, "SIEVE_PATH_LOG", [])
+    caches: list = []
+    S.embedding_near_dup(new, 0.9, block_col="cell")
+    S.embedding_match(new, old, 0.9)
+    S.semantic_dedup_update(new, None, state, 0.9, caches=caches)
+    [c.unpersist() for c in caches]
+    got = [(r["op"], r["small_blocks"], r["big_blocks"]) for r in S.SIEVE_PATH_LOG]
+    assert got == [
+        ("embedding_near_dup", 1, 1),
+        ("embedding_match", 1, 1),
+        ("incremental_pair_edges", 1, 1),
+    ]
+    monkeypatch.undo()
+    assert S.SIEVE_PATH_LOG is None  # back to the zero-cost default

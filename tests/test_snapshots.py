@@ -67,6 +67,26 @@ def test_compact_and_vacuum(spark, table):
     assert table.read(spark).count() == 20  # newest snapshot intact
 
 
+@pytest.mark.parametrize("keep", [0, -1])
+def test_vacuum_rejects_keep_versions_below_one(spark, table, keep):
+    """``vs[-0:]`` is the whole version list, so a keep count of 0 would
+    keep every version and -1 all but the oldest: both must raise before
+    any file is deleted."""
+    import os
+
+    table.append(_df(spark, 0, 10))
+    table.overwrite(_df(spark, 100, 103))  # v0's files are unreachable from v1
+
+    def listing():
+        return sorted(os.path.join(d, f) for d, _, fs in os.walk(table.path) for f in fs)
+
+    before = listing()
+    with pytest.raises(ValueError, match="keep_versions"):
+        table.vacuum(keep_versions=keep)
+    assert listing() == before
+    assert table.read(spark, version=0).count() == 10
+
+
 def test_concurrent_commits_lose_nothing(spark, table):
     """N racing writers on the same base version: exactly one wins each
     version slot, no committed manifest is ever clobbered (the ADVICE.md
