@@ -3365,10 +3365,14 @@ def mor_delete_q(spark, sf_dir):
     """dq146: merge-on-read DELETE end-to-end under the value gate —
     load ``orders`` into a TransactionalTable, record deletion vectors
     for one status (data files untouched; kilobytes written), then
-    aggregate the LIVE view.  The read is one scan + one broadcast
-    anti-join on (file, row position) — the Iceberg-v2 positional-delete
-    shape.  Sums are exact integer cents (floor(price*100)) so the
-    oracle, which replays the delete relationally, matches bit-for-bit."""
+    aggregate the LIVE view.  The read applies the vector by (file, row
+    position) — the Iceberg-v2 positional-delete shape.  Its path
+    follows the vector's size: at sf0.01 the ~4.9 k retired rows exceed
+    ``_DV_INLINE_ROWS`` (1024), so the read is one scan + one broadcast
+    anti-join; at sf0.001 (~490 rows) it is one scan whose filter holds
+    the positions.  Sums are exact integer cents (floor(price*100)) so
+    the oracle, which replays the delete relationally, matches
+    bit-for-bit."""
     import shutil
     import tempfile
 

@@ -13,7 +13,7 @@ manifests listing immutable data files, made atomic by ``os.rename``
       _log/v00000001.json
       stage-<id>/part-....parquet           (immutable data files)
       stage-<id>/_part-....parquet.bloom    (immutable bloom sidecars)
-      deletes-<id>/part-....parquet         (deletion vectors)
+      deletes-<id>/part-00000.parquet       (one deletion vector)
 
 - Readers pick the highest committed version (or an explicit one — time
   travel) and read exactly its file list: consistent snapshots, no torn
@@ -52,10 +52,20 @@ Every row-level change is merge-on-read: ``delete_where_mor``,
 records the (file, row position) of every row they retire as a deletion
 vector and stages the rows they insert, both in ONE commit — no data
 file is rewritten, so an upsert writes about its own size.  A data file
-whose every row the new vector retires leaves the file list instead of
-being masked.  Reads carry the vectors until ``optimize``/``compact``
-rewrites the table; only ``overwrite``, ``compact`` and ``optimize``
-write data files that replace others.
+whose every row the snapshot's vectors and the new one retire leaves the
+file list instead of being masked.  Reads carry the vectors until
+``optimize``/``compact`` rewrites the table; only ``overwrite``,
+``compact`` and ``optimize`` write data files that replace others.
+
+A read applies its snapshot's vectors in one of two ways, chosen by the
+vector row count in their parquet footers (``TransactionalTable._live``):
+up to ``_DV_INLINE_ROWS`` (1024) rows, the driver reads them with
+pyarrow and the scan drops every row whose ``_metadata.file_path`` /
+``_metadata.row_index`` key is in one hash set of the vector's keys, so
+applying them starts no Spark job; above it, they leave through a
+broadcast anti-join against a schema-pinned read of the vectors, one job
+more (SCALE.md has the crossover).  Manifests hold absolute paths, which
+the driver matches to the vectors' file URIs by :func:`_localpath`.
 
 In production swap this for Delta/Iceberg; the engine's call sites are
 format-agnostic:
@@ -82,16 +92,20 @@ import shutil
 import time
 import uuid
 import zlib
+from collections import Counter
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
 
 
 def _localpath(p: str) -> str:
-    """file:///x, file:/x and /x all name the same local file."""
+    """file:///x, file:/x and /x all name the same local file, and a
+    relative x names it from the working directory, as Spark resolves
+    it; a URI's percent-escapes (a space is %20) are undone."""
     if p.startswith("file:"):
-        p = "/" + p[5:].lstrip("/")
-    return p
+        p = unquote("/" + p[5:].lstrip("/"))
+    return os.path.abspath(p)
 
 
 def _bytes(paths) -> int:
@@ -101,6 +115,50 @@ def _bytes(paths) -> int:
         with contextlib.suppress(FileNotFoundError):
             total += os.stat(p).st_size
     return total
+
+
+# Up to this many deletion-vector rows in a snapshot, a read applies them
+# as one row-position filter built on the driver; above it, through a
+# broadcast anti-join.  The filter costs driver time per position (Spark
+# analyses every literal), the join one Spark job; SCALE.md has where
+# they cross.  Not a knob: tests set it to 0 for the join path.
+_DV_INLINE_ROWS = 1024
+# Catalyst inlines an IN list of at most
+# spark.sql.optimizer.inSetConversionThreshold (10) literals into the
+# generated code; a longer list is a hash-set lookup whose code does not
+# change with its values.
+_INSET_MIN = 11
+
+
+def _retired(vector) -> Counter:
+    """Rows a vector table retires per data file, keyed by
+    :func:`_localpath`."""
+    hits = vector["file_path"].value_counts().to_pylist()
+    return Counter({_localpath(h["values"]): h["counts"] for h in hits})
+
+
+def _dv_keep(deletes: list[str]):
+    """The filter that drops the rows ``deletes`` retire: their
+    ``<file uri>#<row position>`` keys as one negated hash-set ``IN``,
+    matched against the same key of every scanned row.  The keys stay in
+    the URI form the vectors hold, which is the form the scan sees; a key
+    of a file the read skips matches nothing.
+
+    The list is padded with keys no row has (no ``#``) to at least
+    :data:`_INSET_MIN` literals, so it plans as a hash-set lookup and a
+    read whose positions changed reuses the compiled code of the last
+    one."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    t = pq.read_table(deletes, columns=["file_path", "row_index"])
+    keys = pc.binary_join_element_wise(t["file_path"], pc.cast(t["row_index"], pa.string()), "#")
+    keys = keys.to_pylist() + [str(-i) for i in range(1, _INSET_MIN - len(keys) + 1)]
+    # a SQL string literal: backslash and quote escaped
+    lits = ",".join("'" + k.replace("\\", "\\\\").replace("'", "\\'") + "'" for k in keys)
+    return F.expr(f"concat(_metadata.file_path, '#', _metadata.row_index) NOT IN ({lits})")
 
 
 class CommitConflict(RuntimeError):
@@ -118,8 +176,10 @@ class TransactionalTable:
         bloom_columns: tuple[str, ...] = (),
         bloom_bits: int | None = None,
     ):
-        self.path = path
-        self.log_dir = os.path.join(path, "_log")
+        # absolute, so manifest paths name the files Spark reports in
+        # _metadata.file_path whatever the working directory
+        self.path = os.path.abspath(path)
+        self.log_dir = os.path.join(self.path, "_log")
         os.makedirs(self.log_dir, exist_ok=True)
         # footer stats for files staged since the last commit, folded into
         # the next manifest (per-file min/max -> reader-side file skipping)
@@ -219,8 +279,8 @@ class TransactionalTable:
         if deletes is TransactionalTable._UNSET:
             # ops that don't touch deletion vectors carry the base's
             # forward; entries for files no longer in the manifest are
-            # dead weight (they anti-join against nothing) until a
-            # compact/overwrite clears them
+            # dead weight (they mask nothing) until a compact/overwrite
+            # clears them
             deletes = base.get("deletes", [])
         before = set(base.get("files", []))
         added = [f for f in files if f not in before]
@@ -675,22 +735,36 @@ class TransactionalTable:
         """Read ``files`` of snapshot ``m`` with its deletion vectors
         applied — the one deletion-vector path of every read and mutation.
 
-        Rows are tagged with their physical address (``_dv_file``,
-        ``_dv_pos``) from the parquet reader's hidden ``_metadata`` column
-        — Spark's native equivalent of Iceberg's (file, position) delete
-        key — and vector-masked rows leave through one BROADCAST anti-join
-        on that address: deletion vectors are tiny next to the data they
-        mask, so the read stays a single scan with a map-side filter,
-        never a shuffle.  Tagging happens BEFORE the join
-        (``input_file_name()`` refuses the join's second parquet source;
-        the metadata column binds to its scan regardless).  The tags are
-        kept only when ``tagged`` (mutations locate rows by them); a
-        snapshot with no vectors read untagged adds no metadata columns.
+        A vector row is a physical address (file, row position), matched
+        against the parquet reader's hidden ``_metadata.file_path`` /
+        ``_metadata.row_index`` — Spark's native equivalent of Iceberg's
+        positional delete key.  The path depends on the snapshot's vector
+        rows, counted from the vector files' parquet footers on the
+        driver (no data read):
+
+        - up to :data:`_DV_INLINE_ROWS`, the driver reads the vectors with
+          pyarrow and the scan carries them as one filter, a hash-set
+          lookup of each row's (file, position) key (:func:`_dv_keep`) —
+          no Spark job beyond the read's own;
+        - above it, masked rows leave through a BROADCAST anti-join on
+          the address against a schema-pinned read of the vectors: one
+          more job (the broadcast build), no schema inference, and the
+          only path that stays fast for vectors of 10 k rows and up.
+
+        Rows are tagged with their address (``_dv_file``, ``_dv_pos``)
+        before the join (``input_file_name()`` refuses the join's second
+        parquet source; the metadata column binds to its scan
+        regardless).  The tags are kept only when ``tagged`` (mutations
+        locate rows by them); an untagged read adds no columns.
         """
+        import pyarrow.parquet as pq
         from pyspark.sql import functions as F
 
         df = self._read_files(spark, files, m)
         deletes = m.get("deletes", [])
+        if deletes and sum(pq.read_metadata(d).num_rows for d in deletes) <= _DV_INLINE_ROWS:
+            df = df.filter(_dv_keep(deletes))
+            deletes = []
         if not (deletes or tagged):
             return df
         df = df.select(
@@ -699,7 +773,7 @@ class TransactionalTable:
             F.col("_metadata.row_index").alias("_dv_pos"),
         )
         if deletes:
-            dv = spark.read.parquet(*deletes).select("file_path", "row_index")
+            dv = spark.read.schema("file_path string, row_index bigint").parquet(*deletes)
             cond = (F.col("_dv_file") == F.col("file_path")) & (
                 F.col("_dv_pos") == F.col("row_index")
             )
@@ -716,8 +790,11 @@ class TransactionalTable:
         copy-on-write rewrite the whole table; merge-on-read writes
         kilobytes and defers the rewrite to :meth:`compact` / OPTIMIZE,
         which read through :meth:`read` (vectors applied) and commit with
-        an empty vector list — materializing the deletes.  Reads pay one
-        broadcast anti-join until then.  A file whose every row matches
+        an empty vector list — materializing the deletes.  Until then a
+        read filters the masked positions in its scan while the
+        snapshot's vectors hold at most ``_DV_INLINE_ROWS`` rows, and
+        pays one broadcast anti-join above that (:meth:`_live`).  A file
+        whose every row is retired, by this delete or with earlier ones,
         leaves the snapshot instead (see :meth:`_mutate`).
         """
         from pyspark.sql import functions as F
@@ -771,26 +848,29 @@ class TransactionalTable:
         inserts without the deletes.  No data file is rewritten — the
         rewrite is deferred to :meth:`compact` / :meth:`optimize`.
 
-        The vector is written through ``repartition(1)``, so a mutation
-        adds ONE vector file, not one per scan task, to every later
-        read's broadcast; the scan keeps its parallelism (``coalesce(1)``
-        would not).  The shuffle costs one extra Spark job per mutation
-        under adaptive execution, which runs its map stage as a job of
-        its own.  The driver then reads the vector's ``file_path`` column
-        with pyarrow (no Spark job): a data file it retires whole (its
-        count equals the footer ``rows`` in the manifest) leaves the
-        commit's file list instead of being masked, and a vector that
-        masks nothing else is not committed.  Emptiness of the inserted
-        rows comes from their staged parquet footers; when nothing is
-        retired or inserted, nothing is committed and ``m``'s version is
-        returned.  If staging or the commit fails, :meth:`_reclaiming`
-        removes the staged directories unless the version this commit
-        claimed references them.
+        The match scan writes its (file, row position) pairs one part
+        per task; the driver reads the parts with pyarrow and rewrites
+        them as the ONE vector file of the mutation's ``deletes-*``
+        directory, so later reads see one vector file per mutation, and
+        no shuffle job is spent to get there.  The driver also reads the
+        ``file_path`` column of the snapshot's existing vectors: a data
+        file whose retired rows, over the existing vectors and the new
+        one, number its footer ``rows`` in the manifest leaves the
+        commit's file list instead of being masked.  A vector, existing
+        or new, leaves (or is not committed) only when every file it
+        masks leaves with this commit: a file the driver cannot match to
+        a manifest path keeps its vectors.  Emptiness of the
+        inserted rows comes from their staged parquet footers; when
+        nothing is retired or inserted, nothing is committed and ``m``'s
+        version is returned.  If staging or the commit fails,
+        :meth:`_reclaiming` removes the staged directories unless the
+        version this commit claimed references them.
         """
         import pyarrow.parquet as pq
         from pyspark.sql import functions as F
 
         files = m["files"] if m else []
+        old = m.get("deletes", []) if m else []
         scan = files if scan is None else scan
         # checked before any job: an incompatible column type stages nothing
         schema = None if rows is None else self._evolved_schema(m, rows)
@@ -806,22 +886,29 @@ class TransactionalTable:
                 stage_dir = os.path.join(self.path, f"deletes-{uuid.uuid4().hex}")
                 dirs.append(stage_dir)
                 t0 = time.perf_counter()
-                matched.repartition(1).write.parquet(stage_dir)
-                vectors.extend(
+                matched.write.parquet(stage_dir)
+                parts = [
                     os.path.join(stage_dir, f)
                     for f in sorted(os.listdir(stage_dir))
                     if f.endswith(".parquet")
-                )
-                hits = pq.read_table(vectors, columns=["file_path"])["file_path"].value_counts()
-                # _metadata.file_path is a URI (file:/p); manifests store
-                # plain local paths
-                counts = {_localpath(h["values"]): h["counts"] for h in hits.to_pylist()}
+                ]
+                vector = pq.read_table(parts, columns=["file_path", "row_index"]) if parts else None
+                shutil.rmtree(stage_dir)
+                new = _retired(vector) if vector is not None else Counter()
+                # a row is retired once: a match scan reads live rows only
+                per_old = {d: _retired(pq.read_table(d, columns=["file_path"])) for d in old}
+                total = sum(per_old.values(), new)
                 stats = m.get("stats", {})
-                dead = {f for f, n in counts.items() if n == stats.get(f, {}).get("rows")}
-                if len(dead) == len(counts):  # empty, or masks only files that leave
-                    shutil.rmtree(stage_dir, ignore_errors=True)
-                    vectors.clear()
-                else:
+                dead = {
+                    f for f in files if total.get(_localpath(f)) == stats.get(f, {}).get("rows")
+                }
+                # a vector leaves only if every file it masks is seen to leave
+                gone = {_localpath(f) for f in dead}
+                old = [d for d in old if not per_old[d].keys() <= gone]
+                if not new.keys() <= gone:
+                    os.makedirs(stage_dir)
+                    vectors.append(os.path.join(stage_dir, "part-00000.parquet"))
+                    pq.write_table(vector, vectors[0])
                     self._pending_ms[stage_dir] = {"stage_ms": (time.perf_counter() - t0) * 1000.0}
             if rows is not None:
                 staged.extend(self._stage_nonempty(rows))
@@ -835,7 +922,7 @@ class TransactionalTable:
                 txn=txn,
                 base=m,
                 schema=schema if staged else None,
-                deletes=(m.get("deletes", []) if m else []) + vectors,
+                deletes=old + vectors,
             )
 
     @contextlib.contextmanager
@@ -893,7 +980,9 @@ class TransactionalTable:
         Keys whose latest change is D are deleted even if earlier changes
         in the same batch upserted them.  A batch that matches no live row
         and upserts nothing commits nothing.  Reads carry the vector until
-        :meth:`optimize` / :meth:`compact` rewrites the table.
+        :meth:`optimize` / :meth:`compact` rewrites the table, as a scan
+        filter or, above ``_DV_INLINE_ROWS`` vector rows, a broadcast
+        anti-join (:meth:`_live`).
         """
         from pyspark.sql import Window
         from pyspark.sql import functions as F
@@ -939,7 +1028,9 @@ class TransactionalTable:
         the commit writes the source plus kilobytes of vector, not the
         files the keys land in (Delta's copy-on-write MERGE cost, which
         deletion vectors remove).  Reads carry the vector until
-        :meth:`optimize` / :meth:`compact` rewrites the table.  A source
+        :meth:`optimize` / :meth:`compact` rewrites the table, as a scan
+        filter or, above ``_DV_INLINE_ROWS`` vector rows, a broadcast
+        anti-join (:meth:`_live`).  A source
         column the table lacks evolves its schema (:meth:`_evolved_schema`);
         ``txn`` records the streaming-sink marker
         (:meth:`last_txn_batch`).  On a fresh table the source is staged

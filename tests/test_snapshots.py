@@ -1,14 +1,29 @@
 """ACID snapshot layer: atomic commits, snapshot isolation, time travel."""
 
+import os
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
+from agile_lakehouse_spark.plans import snapshots
 from agile_lakehouse_spark.plans.snapshots import CommitConflict, TransactionalTable
 
 
 @pytest.fixture()
 def table(tmp_path):
     return TransactionalTable(str(tmp_path / "tbl"))
+
+
+def _dv_paths(monkeypatch, root, name=""):
+    """A fresh table under ``root`` for each deletion-vector read path,
+    with the module constant set for it: "filter" (vectors inlined into
+    the scan) and "join" (``_DV_INLINE_ROWS`` at 0: the broadcast
+    anti-join).  A test loops over both, so one test id covers both
+    paths."""
+    for path, rows in (("filter", snapshots._DV_INLINE_ROWS), ("join", 0)):
+        monkeypatch.setattr(snapshots, "_DV_INLINE_ROWS", rows)
+        yield TransactionalTable(os.path.join(root, path, name))
 
 
 def _df(spark, lo, hi):
@@ -516,21 +531,22 @@ def test_mor_delete_hides_rows_and_time_travels(spark, table):
     assert table.read(spark, version=0).count() == 100
 
 
-def test_mor_deletes_accumulate_and_scan_applies_them(spark, table):
-    table.append(_df(spark, 0, 50))
-    table.delete_where_mor(spark, "k < 10")
-    table.delete_where_mor(spark, "k >= 40")
-    assert table.read(spark).count() == 30
-    got = table.scan(spark, {"k": (0.0, 100.0)}).agg(F.count("*")).collect()[0][0]
-    assert got == 30
-    # point and key-set reads apply the vectors of the version they read
-    assert table.lookup(spark, "k", 5).count() == 0
-    assert [(r.k, r.v) for r in table.lookup(spark, "k", 25).collect()] == [(25, 50)]
-    assert [r.k for r in table.scan_in(spark, "k", [5, 25, 45]).collect()] == [25]
-    assert [(r.k, r.v) for r in table.lookup(spark, "k", 5, version=0).collect()] == [(5, 10)]
-    # no-match delete commits nothing new
-    v = table.latest_version()
-    assert table.delete_where_mor(spark, "k > 999") == v
+def test_mor_deletes_accumulate_and_scan_applies_them(spark, tmp_path, monkeypatch):
+    for table in _dv_paths(monkeypatch, tmp_path):
+        table.append(_df(spark, 0, 50))
+        table.delete_where_mor(spark, "k < 10")
+        table.delete_where_mor(spark, "k >= 40")
+        assert table.read(spark).count() == 30
+        got = table.scan(spark, {"k": (0.0, 100.0)}).agg(F.count("*")).collect()[0][0]
+        assert got == 30
+        # point and key-set reads apply the vectors of the version they read
+        assert table.lookup(spark, "k", 5).count() == 0
+        assert [(r.k, r.v) for r in table.lookup(spark, "k", 25).collect()] == [(25, 50)]
+        assert [r.k for r in table.scan_in(spark, "k", [5, 25, 45]).collect()] == [25]
+        assert [(r.k, r.v) for r in table.lookup(spark, "k", 5, version=0).collect()] == [(5, 10)]
+        # no-match delete commits nothing new
+        v = table.latest_version()
+        assert table.delete_where_mor(spark, "k > 999") == v
 
 
 def test_mor_then_cow_delete_no_resurrection(spark, table):
@@ -542,14 +558,15 @@ def test_mor_then_cow_delete_no_resurrection(spark, table):
     assert ks == list(range(10, 30))
 
 
-def test_mor_then_merge_no_resurrection(spark, table):
-    table.append(_df(spark, 0, 20))
-    table.delete_where_mor(spark, "k < 5")
-    src = spark.range(18, 25).select(F.col("id").alias("k"), F.lit(-1).cast("bigint").alias("v"))
-    table.merge(spark, src, key="k")
-    ks = sorted(r.k for r in table.read(spark).collect())
-    assert ks == list(range(5, 25))
-    assert table.read(spark).filter("k = 18").collect()[0].v == -1
+def test_mor_then_merge_no_resurrection(spark, tmp_path, monkeypatch):
+    for table in _dv_paths(monkeypatch, tmp_path):
+        table.append(_df(spark, 0, 20))
+        table.delete_where_mor(spark, "k < 5")
+        src = spark.range(18, 25).select(F.col("id").alias("k"), F.lit(-1).cast("bigint").alias("v"))
+        table.merge(spark, src, key="k")
+        ks = sorted(r.k for r in table.read(spark).collect())
+        assert ks == list(range(5, 25))
+        assert table.read(spark).filter("k = 18").collect()[0].v == -1
 
 
 def test_merge_rewrites_no_data_file(spark, table):
@@ -654,6 +671,38 @@ def test_mor_delete_of_every_row_drops_every_file(spark, table):
     assert sorted(r.k for r in table.read(spark).collect()) == [5, 6]
 
 
+def test_mor_deletes_across_mutations_drop_the_file(spark, table):
+    """A file whose rows two deletes retire between them leaves the file
+    list, and so does the earlier vector, which masked only that file."""
+    table.append(_df(spark, 0, 10).coalesce(1))
+    table.delete_where_mor(spark, "k < 5")
+    # five positions, padded so they still plan as a hash-set lookup
+    assert "INSET" in table.read(spark)._jdf.queryExecution().executedPlan().toString()
+    v = table.delete_where_mor(spark, "k >= 5")
+    m = table._read_manifest(v)
+    assert table.read(spark).count() == 0
+    assert m["files"] == [] and not m.get("deletes")
+
+
+@pytest.mark.parametrize("name", ["tbl", "t bl"])
+def test_mor_relative_table_path_keeps_rows_deleted(spark, tmp_path, monkeypatch, name):
+    """A table opened by a relative path, or by one Spark reports
+    percent-escaped (a space), still matches its vectors' file URIs to its
+    manifest: deletes and a merge after them keep every deleted row
+    deleted on both read paths."""
+    monkeypatch.chdir(tmp_path)
+    for table in _dv_paths(monkeypatch, ".", name):
+        table.append(_df(spark, 0, 20).repartition(2))
+        table.delete_where_mor(spark, "k < 5")
+        table.delete_where_mor(spark, "k >= 15")
+        src = spark.range(10, 12).select(F.col("id").alias("k"), F.lit(-1).cast("bigint").alias("v"))
+        table.merge(spark, src, key="k")
+        got = {r.k: r.v for r in table.read(spark).collect()}
+        assert sorted(got) == list(range(5, 15))
+        assert got[10] == -1 and got[9] == 18
+        assert len(table._read_manifest(table.latest_version())["deletes"]) == 3
+
+
 def test_merge_on_fresh_table(spark, tmp_path):
     """``merge`` on a table with no commit stages the source and commits
     its schema; an empty source commits nothing, as it does on an
@@ -694,8 +743,7 @@ def test_delete_keys_mor_semi_join(spark, table):
     assert ks == list(range(0, 5)) + list(range(12, 30))
 
 
-def test_apply_cdc_latest_change_wins(spark, table):
-    table.append(_df(spark, 0, 10))  # (k, v=2k)
+def test_apply_cdc_latest_change_wins(spark, tmp_path, monkeypatch):
     changes = spark.createDataFrame(
         [
             (3, 100, "U", 1),
@@ -706,13 +754,15 @@ def test_apply_cdc_latest_change_wins(spark, table):
         ],
         "k bigint, v bigint, op string, seq bigint",
     )
-    table.apply_cdc(spark, changes, key="k", seq_col="seq")
-    got = {r.k: r.v for r in table.read(spark).collect()}
-    assert 3 not in got
-    assert got[4] == 444
-    assert got[20] == 200
-    assert got[5] == 10  # untouched rows intact
-    assert len(got) == 10  # 10 - deleted 3 + new 20
+    for table in _dv_paths(monkeypatch, tmp_path):
+        table.append(_df(spark, 0, 10))  # (k, v=2k)
+        table.apply_cdc(spark, changes, key="k", seq_col="seq")
+        got = {r.k: r.v for r in table.read(spark).collect()}
+        assert 3 not in got
+        assert got[4] == 444
+        assert got[20] == 200
+        assert got[5] == 10  # untouched rows intact
+        assert len(got) == 10  # 10 - deleted 3 + new 20
 
 
 def test_apply_cdc_is_one_commit(spark, table):
@@ -1034,6 +1084,42 @@ def test_merge_writes_one_vector_file(spark, tmp_path):
     assert len(t.history()[-1]["deletes"]) == 1
     got = {r.k: r.v for r in t.read(spark).collect()}
     assert len(got) == 400 and got[7] == -1 and got[8] == 24
+
+
+def test_vector_reads_start_no_extra_job(spark, tmp_path, monkeypatch):
+    """``scan_in``, ``lookup`` and ``read`` of a version with a small
+    deletion vector start exactly as many Spark jobs as the same read of
+    the vector-free version before it: the vector is a scan filter built
+    on the driver.  With ``_DV_INLINE_ROWS`` at 0 they start one more,
+    the broadcast build of the anti-join; its schema-pinned vector read
+    starts no inference job."""
+    t = TransactionalTable(str(tmp_path / "jobs"), bloom_columns=("k",))
+    t.append(_keyed(spark, 0, 400, 4))
+    v = t.delete_where_mor(spark, "k % 7 = 0")
+    sc = spark.sparkContext
+    tracker, bus = sc.statusTracker(), sc._jsc.sc().listenerBus()
+    reads = {
+        "scan_in": lambda ver: t.scan_in(spark, "k", [8, 14, 15], version=ver),
+        "lookup": lambda ver: t.lookup(spark, "k", 8, version=ver),
+        "read": lambda ver: t.read(spark, version=ver),
+    }
+
+    def jobs(name, ver):
+        group = f"dv-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group, False)
+        try:
+            reads[name](ver).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        bus.waitUntilEmpty()  # the status tracker is listener-fed
+        return len(tracker.getJobIdsForGroup(group))
+
+    for name in reads:
+        jobs(name, v)  # warm: the first read of a shape may plan differently
+        assert jobs(name, v) == jobs(name, v - 1), name
+    monkeypatch.setattr(snapshots, "_DV_INLINE_ROWS", 0)
+    for name in reads:
+        assert jobs(name, v) == jobs(name, v - 1) + 1, name
 
 
 @pytest.mark.parametrize("op", ["append", "delete_where"])
