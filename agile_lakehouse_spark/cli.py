@@ -3,16 +3,16 @@
 partition pipeline from `pc-cli/examples/partition.rs`), so a reference
 user can run the same commands against the Spark engine:
 
-    python -m agile_lakehouse_spark.cli convert  -i in.parquet|in.las -o out/ [--importance] [--raw] [--compression zstd]
+    python -m agile_lakehouse_spark.cli convert  -i in.parquet|in.las|in.laz -o out/ [--importance] [--raw] [--compression zstd]
     python -m agile_lakehouse_spark.cli merge    <inputs...> <output> [--target-files N] [--compression zstd]
     python -m agile_lakehouse_spark.cli partition -i in.parquet -o out/ --mode grid|grid-importance|quadtree
     python -m agile_lakehouse_spark.cli benchmark <dir> [--runs N] [--sampling]
 
-Every subcommand is a thin argparse shell over the library (sources/las,
-plans/layout, operators/pointcloud) — the CLI owns no logic, exactly like
-the reference where pc-cli drives pc-format/pc-io.  On a cluster, the same
-entrypoints run under ``spark-submit`` unchanged (``get_session`` only
-fills in a master when none is configured).
+Every subcommand is a thin argparse shell over the library (the ``las``
+DataSource, plans/layout, operators/pointcloud) — the CLI owns no logic,
+exactly like the reference where pc-cli drives pc-format/pc-io.  On a
+cluster, the same entrypoints run under ``spark-submit`` unchanged
+(``get_session`` only fills in a master when none is configured).
 """
 
 from __future__ import annotations
@@ -30,13 +30,14 @@ def _session(app: str):
 
 
 def _read_points(spark, path: str, raw: bool = False):
-    """Parquet directly; .las/.laz via the chunk-parallel ingest
-    (laspy-gated — `sources/las.py`, ≙ LasDataSource
-    `pc-io/src/las/source.rs:49-138`)."""
+    """Parquet directly; .las/.laz through the ``las`` DataSource
+    (`sources/las_datasource.py`, ≙ LasDataSource
+    `pc-io/src/las/source.rs:49-138`), ``raw`` keeping grid coordinates."""
     if path.endswith((".las", ".laz")):
-        from agile_lakehouse_spark.sources.las import ingest_las
+        from agile_lakehouse_spark.sources.las_datasource import LasDataSource
 
-        return ingest_las(spark, path, raw=raw)
+        spark.dataSource.register(LasDataSource)
+        return spark.read.format("las").option("raw", raw).load(path)
     return spark.read.parquet(path)
 
 

@@ -5,8 +5,9 @@ The reference's entire ingest front door is LAS (``pc-io/src/las/source.rs:
 engine without laspy.  The LAS format is a public ASPRS spec: a fixed-width
 little-endian public header block followed by fixed-width point records, so
 uncompressed formats decode with one ``numpy.frombuffer`` per chunk — fully
-vectorized, no per-point Python.  LAZ (compressed) stays gated on laspy:
-the chunk-table arithmetic is identical, only the byte decode differs.
+vectorized, no per-point Python.  LAZ (compressed) files decode in
+``laz_native.py`` (vendored LASzip codec, point formats 0-3); the
+``las`` DataSource picks the decoder per file.
 
 Layout (LAS 1.2 header = 227 bytes, 1.3 = 235, 1.4 = 375):
 
@@ -191,7 +192,7 @@ def decode_points(
     """
     h = header or read_header(path)
     if h.compressed:
-        raise NotImplementedError("LAZ (compressed) decode needs laspy/lazrs")
+        raise NotImplementedError("LAZ (compressed) file: decode it with laz_native or the las DataSource")
     dt = _point_dtype(h.point_format, h.record_len)
     if count is None:
         count = h.n_points - offset

@@ -1,21 +1,29 @@
 """PLY reader/writer (reference S7/S8: ``pc-io/src/ply.rs``).
 
 ASCII **and binary** PLY are implemented dependency-free and round-trip
-tested: header parse -> schema, payload -> DataFrame (reader is
-driver-side — PLY files are small scene assets, not lake data).  Binary
-payloads (``binary_little_endian`` / ``binary_big_endian``, reference
-``pc-io/src/ply.rs:190-360``) are fixed-width records, so they decode with
-one ``numpy.frombuffer`` — the same no-dependency pattern as
-``las_native.py``.  The ascii writer streams partitions to text via native
-expressions + ``concat_ws``; the binary writer packs a structured array.
+tested.  The read side is one header parse (:func:`vertex_meta`: vertex
+properties, row count, format, offset of the vertex block) and one slice
+decoder per encoding, each returning numpy columns that become one Arrow
+batch typed to the Spark types of ``_PLY_TO_SPARK``.  :func:`read_ply`
+(eager, driver-side — PLY files are small scene assets, not lake data)
+and the ``ply`` DataSource (``ply_datasource.py``, one slice per task)
+both read through them.  Binary payloads (``binary_little_endian`` /
+``binary_big_endian``, reference ``pc-io/src/ply.rs:190-360``) are
+fixed-width records, so a slice decodes with one ``numpy.frombuffer`` —
+the same no-dependency pattern as ``las_native.py``.  The ascii writer
+streams partitions to text via native expressions + ``concat_ws``; the
+binary writer packs a structured array.
 
 Like LAS, PLY is an ingest/export boundary: convert once, query Parquet.
 """
 
 from __future__ import annotations
 
-import numpy as np
+import itertools
+from typing import NamedTuple
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 _PLY_TO_SPARK = {
@@ -49,104 +57,9 @@ _PLY_TO_NP = {
     "float": "f4", "float32": "f4",
     "double": "f8", "float64": "f8",
 }
+# numpy dtype of each Spark column type in a decoded batch
+_SPARK_TO_NP = {"float": "f4", "double": "f8", "int": "i4", "bigint": "i8", "smallint": "i2", "tinyint": "i1"}
 _INT_BOUNDS = {"int": (-(2**31), 2**31 - 1), "short": (-(2**15), 2**15 - 1), "char": (-128, 127)}
-
-
-def _parse_elements(lines: list[str]) -> tuple[list[tuple[str, int, list[tuple[str, str]]]], str]:
-    """Full header parse: every element with its count and scalar
-    properties (PLY type names), in file order — needed to compute binary
-    payload offsets when vertex is not the first element."""
-    if not lines or lines[0].strip() != "ply":
-        raise ValueError("not a PLY file")
-    elements: list[tuple[str, int, list[tuple[str, str]]]] = []
-    fmt = "ascii"
-    for line in lines[1:]:
-        parts = line.split()
-        if not parts:
-            continue
-        if parts[0] == "format":
-            fmt = parts[1]
-        elif parts[0] == "element":
-            elements.append((parts[1], int(parts[2]), []))
-        elif parts[0] == "property" and elements:
-            if parts[1] == "list":
-                elements[-1][2].append(("__list__", "list"))
-            else:
-                elements[-1][2].append((parts[2], parts[1]))
-        elif parts[0] == "end_header":
-            break
-    return elements, fmt
-
-
-def read_ply(spark: SparkSession, path: str) -> DataFrame:
-    """Read a PLY file (ascii or binary, either endianness) into a
-    DataFrame — driver-side parse, dependency-free.
-
-    The reference slices payloads at 524,288 rows (``ply.rs:44-220``);
-    here the DataFrame partitioning takes that role.
-    """
-    with open(path, "rb") as f:
-        head = f.read(65536)
-    marker = head.find(b"end_header")
-    if marker < 0:
-        raise ValueError("PLY header exceeds 64 KiB or missing end_header")
-    header_text = head[:marker].decode("ascii", "replace")
-    elements, fmt = _parse_elements(header_text.splitlines() + ["end_header"])
-    data_start = head.index(b"\n", marker) + 1
-
-    vertex = next((e for e in elements if e[0] == "vertex"), None)
-    if vertex is None:
-        raise ValueError("no vertex element")
-    _, n_rows, ply_props = vertex
-    if any(t == "list" for _, t in ply_props):
-        raise ValueError("list properties unsupported on vertex")
-    props = [(p, _PLY_TO_SPARK[t]) for p, t in ply_props]
-    schema = ", ".join(f"{n} {t}" for n, t in props)
-
-    if fmt in ("binary_little_endian", "binary_big_endian"):
-        order = "<" if fmt == "binary_little_endian" else ">"
-        # byte offset of the vertex block: preceding elements must be
-        # scalar-only (fixed width) to be skippable
-        offset = 0
-        for name, count, eprops in elements:
-            if name == "vertex":
-                break
-            if any(t == "list" for _, t in eprops):
-                raise ValueError(f"element {name!r} with list properties precedes vertex")
-            offset += count * sum(np.dtype(order + _PLY_TO_NP[t]).itemsize for _, t in eprops)
-        dt = np.dtype([(p, order + _PLY_TO_NP[t]) for p, t in ply_props])
-        with open(path, "rb") as f:
-            f.seek(data_start + offset)
-            buf = f.read(n_rows * dt.itemsize)
-        if len(buf) < n_rows * dt.itemsize:
-            raise ValueError(f"truncated PLY payload: {len(buf)} bytes for {n_rows} rows")
-        rec = np.frombuffer(buf, dtype=dt, count=n_rows)
-        floats = {"float", "double"}
-        rows = [
-            tuple(
-                float(rec[n][i]) if t in floats else int(rec[n][i])
-                for n, t in props
-            )
-            for i in range(n_rows)
-        ]
-        return spark.createDataFrame(rows, schema=schema)
-
-    if fmt != "ascii":
-        raise ValueError(f"unknown PLY format {fmt!r}")
-    with open(path, encoding="ascii") as f:
-        lines = f.read().splitlines()
-    body = lines[lines.index("end_header") + 1 :][:n_rows]
-    casts = {"float", "double"}
-    rows = []
-    for line in body:
-        vals = line.split()
-        rows.append(
-            tuple(
-                float(v) if t in casts else int(v)
-                for v, (_, t) in zip(vals, props)
-            )
-        )
-    return spark.createDataFrame(rows, schema=schema)
 
 
 def _ply_header(df: DataFrame, n_rows: int, fmt: str) -> tuple[list[tuple[str, str]], str]:
@@ -215,78 +128,109 @@ def write_ply(
             f.write(line + "\n")
 
 
-def vertex_meta(path: str) -> tuple[list[tuple[str, str]], int]:
-    """(props as (name, spark_type), n_rows) of the vertex element —
-    metadata-only header read, used by the ``ply`` DataSource planner."""
+class _Vertex(NamedTuple):
+    """The vertex element as the header describes it."""
+
+    props: list[tuple[str, str]]  # (name, PLY type)
+    n_rows: int
+    fmt: str
+    payload: int  # byte offset of the first payload byte (after end_header)
+    skip: int  # elements before the vertex block: bytes (binary) or lines (ascii)
+
+    @property
+    def columns(self) -> list[tuple[str, str]]:
+        """(name, Spark type) of each vertex property."""
+        return [(p, _PLY_TO_SPARK[t]) for p, t in self.props]
+
+
+def vertex_meta(path: str) -> _Vertex:
+    """Parse the header once: vertex properties, row count, format and
+    the offset of the vertex block — metadata only, no payload read.
+    Every element before the vertex block is skipped, which in a binary
+    file needs it to be scalar-only (fixed width)."""
     with open(path, "rb") as f:
         head = f.read(65536)
     marker = head.find(b"end_header")
     if marker < 0:
         raise ValueError("PLY header exceeds 64 KiB or missing end_header")
-    header_text = head[:marker].decode("ascii", "replace")
-    elements, _fmt = _parse_elements(header_text.splitlines() + ["end_header"])
-    vertex = next((e for e in elements if e[0] == "vertex"), None)
-    if vertex is None:
-        raise ValueError("no vertex element")
-    _, n_rows, ply_props = vertex
-    if any(t == "list" for _, t in ply_props):
-        raise ValueError("list properties unsupported on vertex")
-    return [(p, _PLY_TO_SPARK[t]) for p, t in ply_props], n_rows
-
-
-def read_vertex_slice(path: str, start: int, count: int) -> list[tuple]:
-    """Decode vertex rows [start, start+count) — the executor-side read
-    unit of the ``ply`` DataSource.  Binary slices seek directly
-    (fixed-width records: offset arithmetic, no scan); ascii slices skip
-    lines.  Same dependency-free decode paths as :func:`read_ply`."""
-    with open(path, "rb") as f:
-        head = f.read(65536)
-    marker = head.find(b"end_header")
-    if marker < 0:
-        raise ValueError("PLY header exceeds 64 KiB or missing end_header")
-    header_text = head[:marker].decode("ascii", "replace")
-    elements, fmt = _parse_elements(header_text.splitlines() + ["end_header"])
-    data_start = head.index(b"\n", marker) + 1
-    vertex = next(e for e in elements if e[0] == "vertex")
-    _, n_rows, ply_props = vertex
-    props = [(p, _PLY_TO_SPARK[t]) for p, t in ply_props]
-    count = max(0, min(count, n_rows - start))
-    floats = {"float", "double"}
-
-    if fmt in ("binary_little_endian", "binary_big_endian"):
-        order = "<" if fmt == "binary_little_endian" else ">"
-        offset = 0
-        for name, ecount, eprops in elements:
-            if name == "vertex":
-                break
-            if any(t == "list" for _, t in eprops):
-                raise ValueError(f"element {name!r} with list properties precedes vertex")
-            offset += ecount * sum(np.dtype(order + _PLY_TO_NP[t]).itemsize for _, t in eprops)
-        dt = np.dtype([(p, order + _PLY_TO_NP[t]) for p, t in ply_props])
-        with open(path, "rb") as f:
-            f.seek(data_start + offset + start * dt.itemsize)
-            buf = f.read(count * dt.itemsize)
-        if len(buf) < count * dt.itemsize:
-            raise ValueError("truncated PLY payload slice")
-        rec = np.frombuffer(buf, dtype=dt, count=count)
-        return [
-            tuple(float(rec[n][i]) if t in floats else int(rec[n][i]) for n, t in props)
-            for i in range(count)
-        ]
-
-    if fmt != "ascii":
+    lines = head[:marker].decode("ascii", "replace").splitlines()
+    if not lines or lines[0].strip() != "ply":
+        raise ValueError("not a PLY file")
+    elements: list[tuple[str, int, list[tuple[str, str]]]] = []
+    fmt = "ascii"
+    for parts in map(str.split, lines[1:]):
+        if parts[:1] == ["format"]:
+            fmt = parts[1]
+        elif parts[:1] == ["element"]:
+            elements.append((parts[1], int(parts[2]), []))
+        elif parts[:1] == ["property"] and elements:
+            elements[-1][2].append((parts[-1], parts[1]))  # a list property has type "list"
+    if fmt not in ("ascii", "binary_little_endian", "binary_big_endian"):
         raise ValueError(f"unknown PLY format {fmt!r}")
-    # stream: skip header + `start` rows with islice, never materializing
-    # the whole file — a full read().splitlines() per slice would make the
-    # DataSource O(file_size x n_slices) on ascii inputs
-    import itertools
+    names = [e[0] for e in elements]
+    if "vertex" not in names:
+        raise ValueError("no vertex element")
+    _, n_rows, props = elements[names.index("vertex")]
+    if any(t == "list" for _, t in props):
+        raise ValueError("list properties unsupported on vertex")
+    skip = 0
+    for name, count, eprops in elements[: names.index("vertex")]:
+        if fmt == "ascii":
+            skip += count
+        elif any(t == "list" for _, t in eprops):
+            raise ValueError(f"element {name!r} with list properties precedes vertex")
+        else:
+            skip += count * sum(np.dtype(_PLY_TO_NP[t]).itemsize for _, t in eprops)
+    return _Vertex(props, n_rows, fmt, head.index(b"\n", marker) + 1, skip)
 
-    with open(path, encoding="ascii") as f:
-        for line in f:
-            if line.strip() == "end_header":
-                break
-        body = itertools.islice(f, start, start + count)
-        return [
-            tuple(float(v) if t in floats else int(v) for v, (_, t) in zip(line.split(), props))
-            for line in body
-        ]
+
+def _binary_slice(f, v: _Vertex, start: int, count: int) -> list[np.ndarray]:
+    """Fixed-width records: seek by offset arithmetic, one frombuffer."""
+    order = "<" if v.fmt == "binary_little_endian" else ">"
+    dt = np.dtype([(p, order + _PLY_TO_NP[t]) for p, t in v.props])
+    f.seek(v.payload + v.skip + start * dt.itemsize)
+    buf = f.read(count * dt.itemsize)
+    if len(buf) < count * dt.itemsize:
+        raise ValueError(f"truncated PLY payload: {len(buf)} bytes for {count} rows")
+    rec = np.frombuffer(buf, dtype=dt, count=count)
+    return [rec[p] for p, _ in v.props]
+
+
+def _ascii_slice(f, v: _Vertex, start: int, count: int) -> list[np.ndarray]:
+    """One row per line: skip lines with islice, never reading the whole
+    file (a full read per slice would make the DataSource O(file size x
+    slices)).  Values parse as f64, exact for every PLY integer type."""
+    f.seek(v.payload)
+    body = itertools.islice(f, v.skip + start, v.skip + start + count)
+    return list(np.array([line.split() for line in body], dtype=np.float64).reshape(-1, len(v.props)).T)
+
+
+def _decode(path: str, v: _Vertex, start: int, count: int) -> pa.RecordBatch:
+    count = max(0, min(count, v.n_rows - start))
+    with open(path, "rb") as f:
+        cols = (_ascii_slice if v.fmt == "ascii" else _binary_slice)(f, v, start, count)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c.astype(_SPARK_TO_NP[t])) for c, (_, t) in zip(cols, v.columns)],
+        names=[p for p, _ in v.props],
+    )
+
+
+def read_vertex_slice(path: str, start: int, count: int) -> pa.RecordBatch:
+    """Vertex rows [start, start+count) as one Arrow batch typed to the
+    Spark types of the header — the executor-side read unit of the
+    ``ply`` DataSource.  A slice past the last row is empty."""
+    return _decode(path, vertex_meta(path), start, count)
+
+
+def read_ply(spark: SparkSession, path: str) -> DataFrame:
+    """Read a PLY file (ascii or binary, either endianness) into a
+    DataFrame — eager driver-side decode into one Arrow table, so a
+    malformed file raises here, at the call.
+
+    The reference slices payloads at 524,288 rows (``ply.rs:44-220``);
+    here the DataFrame partitioning takes that role.
+    """
+    v = vertex_meta(path)
+    return spark.createDataFrame(pa.Table.from_batches([_decode(path, v, 0, v.n_rows)]))
+
+

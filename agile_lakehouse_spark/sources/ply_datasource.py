@@ -1,13 +1,15 @@
 """PLY as a native Spark data source (Python DataSource API, Spark 4).
 
-``sources/ply.py`` reads driver-side (scene assets); this module makes
-PLY a first-class ``spark.read.format("ply")`` source with EXECUTOR-side
-decode: one ``InputPartition`` per (file, row-slice), mirroring the
-reference's 524,288-row payload slicing (``pc-io/src/ply.rs:44-220``) and
-the ``las`` DataSource's chunk-table discipline.  Binary slices seek by
-offset arithmetic (fixed-width records); all files must share the first
-file's vertex schema, as the reference enforces for multi-file LAS
-(``pc-io/src/las/source.rs:112-134``).
+``sources/ply.read_ply`` reads eagerly on the driver (scene assets); this
+module makes PLY a first-class ``spark.read.format("ply")`` source with
+EXECUTOR-side decode: one ``InputPartition`` per (file, row slice),
+mirroring the reference's 524,288-row payload slicing
+(``pc-io/src/ply.rs:44-220``) and the ``las`` DataSource's chunk-table
+discipline.  Both go through ``ply.py``'s one header parse and slice
+decoders, and ``read()`` yields each slice as one Arrow batch.  Binary
+slices seek by offset arithmetic (fixed-width records); all files must
+share the first file's vertex schema, as the reference enforces for
+multi-file LAS (``pc-io/src/las/source.rs:112-134``).
 """
 
 from __future__ import annotations
@@ -57,21 +59,17 @@ class PlyDataSourceReader(DataSourceReader):
 
     def partitions(self):
         files = self._files()
-        ref_props, _ = _ply.vertex_meta(files[0])
+        metas = [_ply.vertex_meta(f) for f in files]
         parts = []
-        for f in files:
-            props, n_rows = _ply.vertex_meta(f)
-            if props != ref_props:
+        for f, v in zip(files, metas):
+            if v.columns != metas[0].columns:
                 raise ValueError(f"{f}: vertex schema differs from {files[0]}")
-            start = 0
-            while start < n_rows:
-                n = min(self.slice_rows, n_rows - start)
-                parts.append(PlySlicePartition(f, start, n))
-                start += n
+            for start in range(0, v.n_rows, self.slice_rows):
+                parts.append(PlySlicePartition(f, start, min(self.slice_rows, v.n_rows - start)))
         return parts or [PlySlicePartition(files[0], 0, 0)]
 
     def read(self, partition: PlySlicePartition):
-        yield from _ply.read_vertex_slice(partition.path, partition.start, partition.count)
+        yield _ply.read_vertex_slice(partition.path, partition.start, partition.count)
 
 
 class PlyDataSource(DataSource):
@@ -83,15 +81,7 @@ class PlyDataSource(DataSource):
         return "ply"
 
     def schema(self):
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("ply source requires a path")
-        if os.path.isdir(path):
-            cands = sorted(f for f in os.listdir(path) if f.endswith(".ply"))
-            if not cands:
-                raise ValueError(f"no .ply files in {path!r}")
-            path = os.path.join(path, cands[0])
-        props, _ = _ply.vertex_meta(path)
+        path = PlyDataSourceReader(self.options)._files()[0]
         # build the StructType directly: _parse_datatype_string needs an
         # active JVM session, which is absent when the pickled DataSource
         # re-derives its schema inside an executor worker
@@ -103,7 +93,7 @@ class PlyDataSource(DataSource):
             "smallint": ShortType(),
             "tinyint": ByteType(),
         }
-        return StructType([StructField(n, types[t], False) for n, t in props])
+        return StructType([StructField(n, types[t], False) for n, t in _ply.vertex_meta(path).columns])
 
     def reader(self, schema) -> DataSourceReader:
         return PlyDataSourceReader(self.options)

@@ -33,6 +33,32 @@ def test_cli_convert_and_partition_and_merge(spark, sf_dir, tmp_path, capsys):
     assert r["rows"] == 2 * n_src
 
 
+def test_cli_convert_las_scaled_and_raw(spark, tmp_path, capsys):
+    """`convert -i t.las` reads through the ``las`` DataSource; ``--raw``
+    keeps the integer grid, which maps back to the scaled coordinates."""
+    import numpy as np
+
+    from agile_lakehouse_spark.sources.las_native import write_las
+
+    rng = np.random.default_rng(5)
+    x, y, z = rng.uniform(0.0, 500.0, (3, 700))
+    src = str(tmp_path / "t.las")
+    write_las(src, x, y, z, scales=(0.01, 0.01, 0.01), offsets=(100.0, -20.0, 0.0))
+
+    outs = {}
+    for raw in (False, True):
+        out = str(tmp_path / f"out_raw{raw}")
+        r = _run(capsys, ["convert", "-i", src, "-o", out] + (["--raw"] if raw else []))
+        assert r["rows"] == 700
+        outs[raw] = spark.read.parquet(out).orderBy("x", "y").collect()
+    scaled = [(r.x, r.y, r.z) for r in outs[False]]
+    from_raw = [(r.x * 0.01 + 100.0, r.y * 0.01 - 20.0, r.z * 0.01) for r in outs[True]]
+    assert all(r.x == round(r.x) for r in outs[True])
+    assert np.allclose(from_raw, scaled, rtol=0, atol=1e-9)
+    on_grid = sorted(zip(x, y, z), key=lambda p: (round((p[0] - 100.0) / 0.01), round((p[1] + 20.0) / 0.01)))
+    assert np.allclose(scaled, on_grid, rtol=0, atol=0.005 + 1e-9)
+
+
 def test_cli_benchmark_runs(sf_dir, capsys, monkeypatch):
     r = _run(capsys, ["benchmark", sf_dir, "--runs", "1"])
     assert r["runs"] == 1

@@ -2,8 +2,8 @@
 
 A genuine ``.las`` byte stream — written by our own dependency-free
 writer, parsed back by the same public-spec layout laspy implements — is
-decoded through the executor path (``ingest_las`` RDD tasks AND
-``spark.read.format("las")``), then checked for point count + AABB parity
+decoded through the executor path (``spark.read.format("las")``, one
+Arrow batch per chunk), then checked for point count + AABB parity
 against the header, the reference's own integration-test shape
 (``pc-io/src/las/mod.rs:22-126``).
 """
@@ -11,7 +11,8 @@ against the header, the reference's own integration-test shape
 import numpy as np
 import pytest
 
-from agile_lakehouse_spark.sources import las, las_native
+from agile_lakehouse_spark.sources import las_native
+from agile_lakehouse_spark.sources.las_datasource import LasDataSource, LasDataSourceReader
 
 
 def _sample(n=1000, seed=7):
@@ -116,9 +117,10 @@ def test_ingest_las_end_to_end(spark, tmp_path):
     p = str(tmp_path / "cloud.las")
     hdr = las_native.write_las(p, x, y, z, intensity=inten, classification=cls)
 
-    plans = las.plan_chunks_for_file(p, chunk_points=512)
+    plans = LasDataSourceReader({"path": p, "chunk_points": "512"}).partitions()
     assert [c.count for c in plans] == [512, 512, 512, 464]
-    df = las.ingest_las(spark, plans)  # default decoder: native
+    spark.dataSource.register(LasDataSource)
+    df = spark.read.format("las").option("chunk_points", 512).load(p)
     assert df.rdd.getNumPartitions() == 4
     row = df.agg(
         F.count(F.lit(1)).alias("n"),
@@ -134,8 +136,6 @@ def test_ingest_las_end_to_end(spark, tmp_path):
 def test_las_datasource_real_file(spark, tmp_path):
     """spark.read.format('las') over a real .las file: chunked partitions,
     native executor decode, value parity with the local decode."""
-    from agile_lakehouse_spark.sources.las_datasource import LasDataSource, LasDataSourceReader
-
     x, y, z, inten, cls = _sample(900, seed=13)
     p = str(tmp_path / "ds.las")
     hdr = las_native.write_las(p, x, y, z, intensity=inten, classification=cls)
@@ -152,22 +152,29 @@ def test_las_datasource_real_file(spark, tmp_path):
     assert got == want
 
 
-def test_ingest_las_raw_mode(spark, tmp_path):
-    """Reference --raw mode through the executor path: integer grid
-    coordinates survive ingest and reconstruct the real coordinates."""
-    import functools
+def test_las_datasource_empty_dir_raises_clear_error(tmp_path):
+    """A directory without a .las/.laz file is a clear error at planning,
+    not an IndexError."""
+    empty = tmp_path / "none"
+    empty.mkdir()
+    (empty / "notes.txt").write_text("no points here")
+    with pytest.raises(ValueError, match="no .las/.laz files"):
+        LasDataSourceReader({"path": str(empty)}).partitions()
 
+
+def test_ingest_las_raw_mode(spark, tmp_path):
+    """Reference --raw mode through the executor path (the ``raw``
+    option): integer grid coordinates survive ingest and reconstruct the
+    real coordinates."""
     from pyspark.sql import functions as F
 
     x, y, z, inten, cls = _sample(600, seed=17)
     p = str(tmp_path / "rawmode.las")
     las_native.write_las(p, x, y, z, intensity=inten, classification=cls,
                          scales=(0.01, 0.01, 0.01), offsets=(100.0, -40.0, 0.0))
-    plans = las.plan_chunks_for_file(p, chunk_points=200)
-    raw_df = las.ingest_las(
-        spark, plans, decoder=functools.partial(las.decode_chunk_native, raw=True)
-    )
-    real_df = las.ingest_las(spark, plans)
+    spark.dataSource.register(LasDataSource)
+    raw_df = spark.read.format("las").option("chunk_points", 200).option("raw", True).load(p)
+    real_df = spark.read.format("las").option("chunk_points", 200).load(p)
     recon = raw_df.select(
         (F.col("x") * 0.01 + 100.0).alias("x"),
         (F.col("y") * 0.01 - 40.0).alias("y"),
@@ -232,8 +239,6 @@ def test_modern_format_datasource_scan(tmp_path, spark):
         gps_time=np.linspace(0, 1, 800),
         rgb=(np.zeros(800, np.uint16),) * 3, point_format=7,
     )
-    from agile_lakehouse_spark.sources.las_datasource import LasDataSource
-
     spark.dataSource.register(LasDataSource)
     df = spark.read.format("las").load(str(tmp_path))
     assert df.count() == 800

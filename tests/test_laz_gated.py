@@ -1,11 +1,12 @@
 """LAZ integration — auto-skips without laspy (absent in this container),
-but any environment WITH laspy exercises the full chunk-table ingest and
-DataSource paths on a real compressed file (round-4 verdict item 7).
+but any environment WITH laspy exercises the native LASzip decode and the
+``las`` DataSource on genuinely compressed files that laspy's backend
+wrote (round-4 verdict item 7).
 
-The chunk planning (``plan_chunks`` / ``LasDataSourceReader.partitions``)
-is shared with the native ``.las`` path and is tested dependency-free in
-``test_las_native.py``; what this file adds is the laspy byte decode and
-the LAZ header walk on genuinely compressed payloads.
+The chunk planning (``LasDataSourceReader.partitions``) is shared with
+the native ``.las`` path and is tested dependency-free in
+``test_las_native.py`` and ``test_laz_native.py``; what this file adds is
+cross-decoder parity with laspy.
 Reference: ``pc-io/src/las/source.rs:49-208`` (LAZ chunk table + decode).
 
 Foreign-encoded cross-validation status (recorded round 8): this
@@ -13,11 +14,11 @@ container has no laspy/lazrs wheel and no externally-encoded ``.laz``
 fixture, and none can be fetched. The hand-derived per-item golden
 vectors in ``test_laz_native.py`` (FastAC coder + POINT10/GPSTIME11/
 RGB12 v2 codecs pinned symbol-by-symbol against the LASzip spec) are
-therefore the CEILING of obtainable decode-parity evidence here. If an
-environment ever gains laspy (this file auto-activates) or a known-good
-foreign ``.laz``, add a decode-parity case below comparing
-``las_native``'s native decode of that file against the laspy decode
-column-for-column — that is the one remaining inch of evidence.
+therefore the CEILING of obtainable decode-parity evidence here.
+:func:`test_laz_datasource_matches_laspy_decode` is the decode-parity
+case that closes the gap wherever laspy exists: the DataSource read of a
+laspy-written POINT10 ``.laz`` compared column for column with laspy's
+own decode, scaled and raw.
 """
 
 import numpy as np
@@ -26,7 +27,6 @@ import pytest
 laspy = pytest.importorskip("laspy")
 
 from agile_lakehouse_spark.sources import las_native  # noqa: E402
-from agile_lakehouse_spark.sources.las import ChunkPlan, ingest_las, plan_chunks  # noqa: E402
 
 
 def _write_laz(path, n=1000, seed=11):
@@ -55,25 +55,24 @@ def test_laz_header_parses_with_compressed_flag(tmp_path):
     assert hdr.point_format == 0
 
 
-def test_laz_chunked_ingest_matches_laspy_full_read(spark, tmp_path):
-    path = str(tmp_path / "pts.laz")
-    src = _write_laz(path)
-    plans = plan_chunks(path, 1000, chunk_points=250)
-    assert len(plans) == 4 and plans[-1] == ChunkPlan(path, 750, 250)
-    # explicit laspy decoder: this test pins the laspy byte-decode path
-    # (fixed 250-point plans don't align with the real LAZ chunk table,
-    # which the auto-selected native codec requires)
-    from agile_lakehouse_spark.sources.las import decode_chunk_laspy
+def test_laz_datasource_matches_laspy_decode(spark, tmp_path):
+    """Cross-decoder parity: the ``las`` DataSource (native LASzip codec)
+    reads a laspy-written POINT10 .laz column for column as laspy does,
+    with scaled and with raw (grid) coordinates."""
+    from agile_lakehouse_spark.sources.las_datasource import LasDataSource
 
-    df = ingest_las(spark, plans, decoder=decode_chunk_laspy)
-    rows = df.collect()
-    assert len(rows) == 1000
-    got = sorted((round(r.x, 2), round(r.y, 2), round(r.z, 2), r.intensity) for r in rows)
-    want = sorted(
-        (round(float(x), 2), round(float(y), 2), round(float(z), 2), int(i))
-        for x, y, z, i in zip(src.x, src.y, src.z, src.intensity)
-    )
-    assert got == want
+    path = str(tmp_path / "pts.laz")
+    _write_laz(path)
+    with laspy.open(path) as rd:
+        want = rd.read()
+    spark.dataSource.register(LasDataSource)
+    for raw, xyz in ((False, ("x", "y", "z")), (True, ("X", "Y", "Z"))):
+        got = spark.read.format("las").option("raw", raw).load(path).toPandas()
+        assert len(got) == 1000
+        for ours, theirs in zip("xyz", xyz):
+            assert np.array_equal(got[ours].to_numpy(), np.asarray(want[theirs], dtype=np.float64))
+        for c in ("intensity", "classification"):
+            assert np.array_equal(got[c].to_numpy(), np.asarray(want[c], dtype=np.int64))
 
 
 def test_laz_datasource_scan(spark, tmp_path):

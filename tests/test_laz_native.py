@@ -170,22 +170,21 @@ def test_laz_header_and_vlr_layout(tmp_path):
 
 
 def test_laz_spark_ingest_and_datasource(spark, tmp_path):
-    from agile_lakehouse_spark.sources.las import ingest_las, plan_chunks_for_file
-    from agile_lakehouse_spark.sources.las_datasource import LasDataSource
+    from agile_lakehouse_spark.sources.las_datasource import LasDataSource, LasDataSourceReader
 
     cols = _cloud(4000, seed=8)
     path = str(tmp_path / "s.laz")
     laz_native.write_laz(path, cols, chunk_size=1500)
-    plans = plan_chunks_for_file(path)
+    plans = LasDataSourceReader({"path": path}).partitions()
     assert [(p.offset, p.count) for p in plans] == [(0, 1500), (1500, 1500), (3000, 1000)]
-    df = ingest_las(spark, plans)  # auto-selects the native LAZ decoder
+    spark.dataSource.register(LasDataSource)
+    df = spark.read.format("las").load(path)  # native LAZ decoder, one task per chunk
     assert df.count() == 4000
     got = sorted(round(r.x, 3) for r in df.collect())
     info = laz_native.read_laz_info(path)
     want = sorted(np.round(_grid(cols["x"], info.scales[0], info.offsets[0]) * info.scales[0], 3))
     assert got == [float(w) for w in want]
 
-    spark.dataSource.register(LasDataSource)
     back = spark.read.format("las").load(path)
     assert back.rdd.getNumPartitions() == 3  # REAL chunk table fan-out
     assert back.count() == 4000

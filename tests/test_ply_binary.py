@@ -76,6 +76,19 @@ def test_binary_vertex_after_scalar_element(spark, tmp_path):
     assert got == [(4.5, 3), (5.5, 200)]
 
 
+def test_ascii_vertex_after_element(spark, tmp_path):
+    # ascii: the vertex block starts after the other element's lines
+    p = tmp_path / "multi_ascii.ply"
+    p.write_text(
+        "ply\nformat ascii 1.0\n"
+        "element camera 1\nproperty double cx\n"
+        "element vertex 2\nproperty float x\nproperty uchar c\n"
+        "end_header\n9.0\n4.5 3\n5.5 200\n"
+    )
+    got = sorted((r.x, r.c) for r in ply.read_ply(spark, str(p)).collect())
+    assert got == [(4.5, 3), (5.5, 200)]
+
+
 def test_binary_truncated_payload_raises(spark, tmp_path):
     header = (
         "ply\nformat binary_little_endian 1.0\n"
@@ -141,17 +154,18 @@ def test_ply_datasource_matches_driver_reader(spark, tmp_path):
 
 def test_ply_ascii_slice_streams_correct_rows(spark, tmp_path):
     """ascii read_vertex_slice skips rows with islice (no full-file read);
-    slices tile the file exactly, including the ragged tail."""
+    slices tile the file exactly, including the ragged tail, and each is
+    one Arrow batch of the header's types."""
     df = spark.range(100).selectExpr("CAST(id AS double) AS x", "CAST(id AS float) AS y")
     path = str(tmp_path / "a.ply")
     ply.write_ply(df, path)
     got = []
     for start in range(0, 100, 33):
-        got += ply.read_vertex_slice(path, start, 33)
-    assert len(got) == 100
-    assert sorted(r[0] for r in got) == [float(i) for i in range(100)]
+        got += ply.read_vertex_slice(path, start, 33).to_pylist()
+    assert got == [{"x": float(i), "y": float(i)} for i in range(100)]
+    assert str(ply.read_vertex_slice(path, 0, 1).schema.field("y").type) == "float"
     # out-of-range slice is empty, not an error
-    assert ply.read_vertex_slice(path, 100, 33) == []
+    assert ply.read_vertex_slice(path, 100, 33).to_pylist() == []
 
 
 def test_ply_datasource_empty_dir_raises_clear_error(spark, tmp_path):

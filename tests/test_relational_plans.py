@@ -66,18 +66,19 @@ def test_ply_roundtrip(spark, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
 
-def test_las_ingest_plumbing(spark):
-    from agile_lakehouse_spark.sources import las
+def test_las_ingest_plumbing(spark, tmp_path):
+    import numpy as np
 
-    plans = las.plan_chunks("fake.las", total_points=10, chunk_points=4)
+    from agile_lakehouse_spark.sources.las_datasource import LasDataSource, LasDataSourceReader
+    from agile_lakehouse_spark.sources.las_native import write_las
+
+    path = str(tmp_path / "ten.las")
+    write_las(path, np.arange(10.0), np.zeros(10), np.ones(10), intensity=np.arange(10), classification=np.full(10, 2))
+    plans = LasDataSourceReader({"path": path, "chunk_points": "4"}).partitions()
     assert [(p.offset, p.count) for p in plans] == [(0, 4), (4, 4), (8, 2)]
 
-    def fake_decoder(plan):
-        return [
-            (float(plan.offset + j), 0.0, 1.0, j, 2) for j in range(plan.count)
-        ]
-
-    df = las.ingest_las(spark, plans, decoder=fake_decoder)
+    spark.dataSource.register(LasDataSource)
+    df = spark.read.format("las").option("chunk_points", 4).load(path)
     assert df.count() == 10
     assert df.columns == ["x", "y", "z", "intensity", "classification"]
     assert df.agg({"x": "max"}).collect()[0][0] == 9.0
@@ -234,10 +235,16 @@ def test_las_python_datasource(spark, tmp_path):
     executor-side decode through the Python DataSource API."""
     from agile_lakehouse_spark.sources.las_datasource import LasDataSource, LasDataSourceReader
 
+    import numpy as np
+
+    from agile_lakehouse_spark.sources.las_native import write_las
+
     d = tmp_path / "lasdir"
     d.mkdir()
-    (d / "a.fakelas").write_text("700")
-    (d / "b.fakelas").write_text("300")
+    for name, n in (("a.las", 700), ("b.las", 300)):
+        idx = np.arange(n)
+        write_las(str(d / name), idx * 0.5, idx % 1000.0, idx % 97.0,
+                  intensity=idx % 65536, classification=idx % 32)
     spark.dataSource.register(LasDataSource)
     df = (
         spark.read.format("las")
@@ -249,7 +256,7 @@ def test_las_python_datasource(spark, tmp_path):
     # partition planning: ceil(700/256) + ceil(300/256) = 3 + 2 chunks
     reader = LasDataSourceReader({"path": str(d), "chunk_points": "256"})
     assert len(reader.partitions()) == 5
-    # spot-check decoded values are the deterministic synthetic rows
+    # spot-check decoded values are the rows each file was written with
     row = df.filter("intensity = 10 and x = 5.0").collect()
     assert len(row) == 2  # idx 10 exists in both files
 
