@@ -19,7 +19,8 @@ manifests listing immutable data files, made atomic by ``os.rename``
   travel) and read exactly its file list: consistent snapshots, no torn
   reads of half-written data.
 - Writers stage data files first, then commit the manifest; a failed write
-  leaves orphan files but never a corrupt table.
+  removes its staging unless a committed version references it, and never
+  leaves a corrupt table.
 - Concurrency: optimistic — the commit point is an atomic put-if-absent
   (``os.link``, which raises ``FileExistsError`` if the target exists);
   a writer that loses the race gets :class:`CommitConflict` and retries
@@ -128,6 +129,10 @@ _DV_INLINE_ROWS = 1024
 # generated code; a longer list is a hash-set lookup whose code does not
 # change with its values.
 _INSET_MIN = 11
+# scan_in collects at most this many distinct keys of a DataFrame key set
+# to prune the manifest with; a larger set reads every file through a
+# broadcast semi-join.  Not a knob: tests lower it for the fallback.
+_MAX_PRUNE_KEYS = 100_000
 
 
 def _retired(vector) -> Counter:
@@ -137,12 +142,49 @@ def _retired(vector) -> Counter:
     return Counter({_localpath(h["values"]): h["counts"] for h in hits})
 
 
+def _in_list(expr: str, vals: list):
+    """``expr IN (vals)`` for the SQL expression ``expr``, built as ONE
+    parsed SQL expression.
+
+    ``isin(vals)`` makes a py4j round trip PER literal — measured 1.9-2.2 s
+    of pure driver time at 2716 probe keys (guide §5: the driver should do
+    almost no work), while parsing the same list as one SQL string costs
+    ~0.1 s and yields the identical Catalyst ``In``/``InSet`` predicate.
+    The SQL form covers string, int and bool values (the
+    :attr:`TransactionalTable._BLOOM_TYPES` domain); anything else falls
+    back to ``isin``, as do strings under the legacy parser
+    (``spark.sql.parser.escapedStringLiterals=true``), where the
+    backslash escapes below would stay in the literal and match nothing.
+    """
+    from pyspark.sql import functions as F
+
+    if not vals:
+        return F.lit(False)
+    if all(isinstance(v, str) for v in vals):
+        spark = SparkSession.getActiveSession()
+        if (
+            spark is not None
+            and spark.conf.get("spark.sql.parser.escapedStringLiterals", "false") == "true"
+        ):
+            return F.expr(expr).isin(list(vals))
+        lits = ",".join("'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in vals)
+    elif all(isinstance(v, bool) for v in vals):
+        lits = ",".join("true" if v else "false" for v in vals)
+    elif all(
+        isinstance(v, int) and not isinstance(v, bool) and -(2**63) <= v < 2**63 for v in vals
+    ):
+        lits = ",".join(str(v) for v in vals)
+    else:
+        return F.expr(expr).isin(list(vals))
+    return F.expr(f"{expr} IN ({lits})")
+
+
 def _dv_keep(deletes: list[str]):
-    """The filter that drops the rows ``deletes`` retire: their
-    ``<file uri>#<row position>`` keys as one negated hash-set ``IN``,
-    matched against the same key of every scanned row.  The keys stay in
-    the URI form the vectors hold, which is the form the scan sees; a key
-    of a file the read skips matches nothing.
+    """The filter that drops the rows ``deletes`` retire: the negated
+    :func:`_in_list` of their ``<file uri>#<row position>`` keys, matched
+    against the same key of every scanned row.  The keys stay in the URI
+    form the vectors hold, which is the form the scan sees; a key of a
+    file the read skips matches nothing.
 
     The list is padded with keys no row has (no ``#``) to at least
     :data:`_INSET_MIN` literals, so it plans as a hash-set lookup and a
@@ -151,14 +193,11 @@ def _dv_keep(deletes: list[str]):
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
 
     t = pq.read_table(deletes, columns=["file_path", "row_index"])
     keys = pc.binary_join_element_wise(t["file_path"], pc.cast(t["row_index"], pa.string()), "#")
     keys = keys.to_pylist() + [str(-i) for i in range(1, _INSET_MIN - len(keys) + 1)]
-    # a SQL string literal: backslash and quote escaped
-    lits = ",".join("'" + k.replace("\\", "\\\\").replace("'", "\\'") + "'" for k in keys)
-    return F.expr(f"concat(_metadata.file_path, '#', _metadata.row_index) NOT IN ({lits})")
+    return ~_in_list("concat(_metadata.file_path, '#', _metadata.row_index)", keys)
 
 
 class CommitConflict(RuntimeError):
@@ -181,12 +220,6 @@ class TransactionalTable:
         self.path = os.path.abspath(path)
         self.log_dir = os.path.join(self.path, "_log")
         os.makedirs(self.log_dir, exist_ok=True)
-        # footer stats for files staged since the last commit, folded into
-        # the next manifest (per-file min/max -> reader-side file skipping)
-        self._pending_stats: dict[str, dict] = {}
-        # staging and bloom time of each staged directory, folded into the
-        # operationMetrics of the commit that lands its files
-        self._pending_ms: dict[str, dict[str, float]] = {}
         # columns to build per-file bloom filters for at commit time
         # (point-lookup file skipping; min/max stats only help range scans)
         self.bloom_columns = tuple(bloom_columns)
@@ -244,16 +277,15 @@ class TransactionalTable:
             raise FileNotFoundError(f"no committed version in {self.path}")
         return m
 
-    _UNSET = object()
-
     def _commit(
         self,
         files: list[str],
         op: str,
-        txn: tuple[str, int] | None = None,
-        base: dict | None | object = _UNSET,
+        base: dict | None,
+        staged: list[dict] = (),
         schema: StructType | None = None,
-        deletes: list[str] | object = _UNSET,
+        deletes: list[str] | None = None,
+        txn: tuple[str, int] | None = None,
     ) -> int:
         """Commit ``files`` as the snapshot SUCCEEDING manifest ``base``.
 
@@ -267,16 +299,21 @@ class TransactionalTable:
         claim different version numbers).  If that version was already
         claimed, the hard link fails atomically and the writer must
         re-read and retry.
+
+        ``staged`` holds the :meth:`_stage` records of the files this
+        commit adds: their footer stats join the base's, and their staging
+        and bloom times become the commit's.  ``deletes`` (default: the
+        base's) is the new deletion-vector list.
         """
-        if base is TransactionalTable._UNSET:
-            base = self._manifest()
         version = 0 if base is None else base["version"] + 1
         base = base or {}
         # stats carry forward for retained files; newly staged files bring
-        # their own footer stats from _pending_stats
-        known = {**base.get("stats", {}), **self._pending_stats}
+        # their own footer stats in their staging record
+        known = dict(base.get("stats", {}))
+        for r in staged:
+            known.update(r["stats"])
         stats = {f: known[f] for f in files if f in known}
-        if deletes is TransactionalTable._UNSET:
+        if deletes is None:
             # ops that don't touch deletion vectors carry the base's
             # forward; entries for files no longer in the manifest are
             # dead weight (they mask nothing) until a compact/overwrite
@@ -288,9 +325,6 @@ class TransactionalTable:
         old_vectors = set(base.get("deletes", []))
         vectors = [d for d in deletes if d not in old_vectors]
         dropped = old_vectors - set(deletes)
-        timings = [
-            self._pending_ms.get(d, {}) for d in {os.path.dirname(p) for p in added + vectors}
-        ]
         manifest = {
             "version": version,
             "op": op,
@@ -306,8 +340,8 @@ class TransactionalTable:
                 "files_removed": len(removed),
                 "bytes_removed": _bytes(removed | dropped),
                 "vectors_added": len(vectors),
-                "stage_ms": round(sum(t.get("stage_ms", 0.0) for t in timings), 3),
-                "bloom_ms": round(sum(t.get("bloom_ms", 0.0) for t in timings), 3),
+                "stage_ms": round(sum(r["stage_ms"] for r in staged), 3),
+                "bloom_ms": round(sum(r["bloom_ms"] for r in staged), 3),
             },
         }
         if deletes:
@@ -343,67 +377,58 @@ class TransactionalTable:
             raise CommitConflict(f"version {version} already committed")
         finally:
             os.unlink(tmp)
-        # drop only the stats we just committed — a concurrent thread may
-        # have staged files for its own upcoming commit
-        for f in files:
-            self._pending_stats.pop(f, None)
-        for p in added + vectors:
-            self._pending_ms.pop(os.path.dirname(p), None)
         return version
-
-    def _stats(self, version: int) -> dict:
-        """Per-file column min/max recorded at commit time (may be absent
-        for files staged by older versions of this module)."""
-        return self._read_manifest(version).get("stats", {})
 
     # -- write paths --------------------------------------------------------
 
-    def _stage(self, df: DataFrame) -> list[str]:
-        """Write immutable data files into a staging subdir, return paths."""
-        stage_dir = os.path.join(self.path, f"stage-{uuid.uuid4().hex}")
+    def _staging(self, prefix: str, staged: list[dict]) -> dict:
+        """A new staging record for the directory ``<prefix>-<id>``,
+        added to ``staged`` before anything is written into it."""
+        rec = {
+            "dir": os.path.join(self.path, f"{prefix}-{uuid.uuid4().hex}"),
+            "stats": {},
+            "stage_ms": 0.0,
+            "bloom_ms": 0.0,
+        }
+        staged.append(rec)
+        return rec
+
+    def _stage(self, df: DataFrame, staged: list[dict]) -> list[str]:
+        """Write ``df`` as immutable data files into a fresh staging
+        directory and return their paths, or ``[]`` if it holds no row.
+
+        The staging record ``{dir, stats, stage_ms, bloom_ms}`` is
+        appended to ``staged`` BEFORE the write starts, so
+        :meth:`_reclaiming` removes a directory whose write fails part-way
+        too.  The record then gets the files' footer stats, each file's
+        bloom entry (one Spark job, skipped when no row was written) and
+        the two timings, which :meth:`_commit` folds into the manifest.
+        An all-empty staging is removed and leaves ``staged`` again:
+        emptiness falls out of the footers the write already produces, so
+        no probe job recomputes the rows first.
+        """
+        rec = self._staging("stage", staged)
         t0 = time.perf_counter()
-        df.write.mode("overwrite").parquet(stage_dir)
+        df.write.mode("overwrite").parquet(rec["dir"])
         paths = [
-            os.path.join(stage_dir, f)
-            for f in os.listdir(stage_dir)
+            os.path.join(rec["dir"], f)
+            for f in sorted(os.listdir(rec["dir"]))
             if f.endswith(".parquet")
         ]
-        stats = self._collect_stats(paths)
-        self._pending_stats.update(stats)
+        rec["stats"] = self._collect_stats(paths)
+        if not any(st["rows"] for st in rec["stats"].values()):
+            shutil.rmtree(rec["dir"], ignore_errors=True)
+            staged.remove(rec)
+            return []
         t1 = time.perf_counter()
-        # bloom build is a Spark job (one column-pruned scan of the new
-        # files); an all-empty staging has no keys to index, so skip it
-        # (round 14 — empty files contribute no bloom words)
-        if self.bloom_columns and any(s["rows"] for s in stats.values()):
-            for p, blooms in self._build_blooms(
-                df.sparkSession, stage_dir, schema=df.schema
-            ).items():
-                self._pending_stats.setdefault(p, {})["bloom"] = self._write_blooms(p, blooms)
-        self._pending_ms[stage_dir] = {
-            "stage_ms": (t1 - t0) * 1000.0,
-            "bloom_ms": (time.perf_counter() - t1) * 1000.0,
-        }
+        # the bloom build is one Spark job: a column-pruned scan of the
+        # new files
+        if self.bloom_columns:
+            for p, blooms in self._build_blooms(df.sparkSession, rec["dir"], schema=df.schema).items():
+                rec["stats"].setdefault(p, {})["bloom"] = self._write_blooms(p, blooms)
+        rec["stage_ms"] = (t1 - t0) * 1000.0
+        rec["bloom_ms"] = (time.perf_counter() - t1) * 1000.0
         return paths
-
-    def _stage_nonempty(self, df: DataFrame) -> list[str]:
-        """Stage ``df`` and return its file paths, or ``[]`` if it produced
-        zero rows (the staged dir is removed and its stats dropped).
-
-        How :meth:`_mutate` stages the rows it inserts: emptiness falls
-        out of the parquet footers the write already produces
-        (``_collect_stats`` is a driver-side metadata read), so no
-        ``limit(1).count()`` probe job recomputes the rows first, and
-        ``_stage`` skips the bloom job for an all-empty staging.
-        """
-        paths = self._stage(df)
-        if any(self._pending_stats.get(p, {}).get("rows") for p in paths):
-            return paths
-        for p in paths:
-            self._pending_stats.pop(p, None)
-        if paths:
-            self._pending_ms.pop(os.path.dirname(paths[0]), None)
-            shutil.rmtree(os.path.dirname(paths[0]), ignore_errors=True)
-        return []
 
     # default bloom size: an 8 KB bitmap per column per file, kept small
     # because a point probe reads the sidecar of every file min/max
@@ -578,8 +603,8 @@ class TransactionalTable:
         )
         per_file: dict[tuple[str, str], int] = {}
         for r in words:
-            path = r["__f"].removeprefix("file://")
-            key = (path, r["__c"])
+            # input_file_name() is a URI: a space in the path is %20
+            key = (_localpath(r["__f"]), r["__c"])
             # Java's long is signed: bit 63 comes back negative — mask
             per_file.setdefault(key, 0)
             per_file[key] |= (r["__m"] & ((1 << 64) - 1)) << (64 * r["__w"])
@@ -662,28 +687,32 @@ class TransactionalTable:
 
         The committed schema is the additive merge of the table's and the
         DataFrame's (see :func:`_evolved_schema`) — appending a frame with
-        a new column widens the table; old rows read NULL for it.
+        a new column widens the table; old rows read NULL for it.  An
+        empty frame commits its version and schema but adds no file.
         """
-        new_files = self._stage(df)
-        base = self._manifest()
-        with self._reclaiming(base, new_files):
+        staged: list[dict] = []
+        with self._reclaiming(self.latest_version(), staged):
+            new_files = self._stage(df, staged)
+            # read after staging: a concurrent commit landing meanwhile
+            # is built on, not conflicted with
+            base = self._manifest()
             prev = base["files"] if base is not None else []
             schema = self._evolved_schema(base, df)
-            return self._commit(prev + new_files, "append", txn=txn, base=base, schema=schema)
+            return self._commit(prev + new_files, "append", base, staged, schema, txn=txn)
 
     def overwrite(self, df: DataFrame, txn: tuple[str, int] | None = None) -> int:
         """ACID overwrite: new snapshot references only the new files.
 
         Old files stay on disk for time travel until :func:`vacuum`.
         The schema is replaced wholesale (overwrite = new table contents);
-        time travel still reads each old version under ITS schema.
+        time travel still reads each old version under ITS schema.  An
+        empty frame commits an empty snapshot under its schema.
         """
         base = self._manifest()
-        new_files = self._stage(df)
-        with self._reclaiming(base, new_files):
-            return self._commit(
-                new_files, "overwrite", txn=txn, base=base, schema=df.schema, deletes=[]
-            )
+        staged: list[dict] = []
+        with self._reclaiming(None if base is None else base["version"], staged):
+            new_files = self._stage(df, staged)
+            return self._commit(new_files, "overwrite", base, staged, df.schema, [], txn)
 
     def added_files(self, since_version: int | None, version: int | None = None) -> list[str]:
         """Data files present in ``version`` but not in ``since_version``
@@ -848,23 +877,21 @@ class TransactionalTable:
         inserts without the deletes.  No data file is rewritten — the
         rewrite is deferred to :meth:`compact` / :meth:`optimize`.
 
-        The match scan writes its (file, row position) pairs one part
-        per task; the driver reads the parts with pyarrow and rewrites
-        them as the ONE vector file of the mutation's ``deletes-*``
-        directory, so later reads see one vector file per mutation, and
-        no shuffle job is spent to get there.  The driver also reads the
-        ``file_path`` column of the snapshot's existing vectors: a data
-        file whose retired rows, over the existing vectors and the new
-        one, number its footer ``rows`` in the manifest leaves the
-        commit's file list instead of being masked.  A vector, existing
-        or new, leaves (or is not committed) only when every file it
-        masks leaves with this commit: a file the driver cannot match to
-        a manifest path keeps its vectors.  Emptiness of the
-        inserted rows comes from their staged parquet footers; when
-        nothing is retired or inserted, nothing is committed and ``m``'s
-        version is returned.  If staging or the commit fails,
-        :meth:`_reclaiming` removes the staged directories unless the
-        version this commit claimed references them.
+        The match scan's (file, row position) pairs are collected to the
+        driver as one Arrow table (``toArrow``, one Spark job) and written
+        as the ONE vector file of the mutation's ``deletes-*`` directory.
+        The driver also reads the ``file_path`` column of the snapshot's
+        existing vectors: a data file whose retired rows, over the existing
+        vectors and the new one, number its footer ``rows`` in the manifest
+        leaves the commit's file list instead of being masked.  A vector,
+        existing or new, leaves (or is not written) only when every file it
+        masks leaves with this commit: a file the driver cannot match to a
+        manifest path keeps its vectors.  Emptiness of the inserted rows
+        comes from their staged parquet footers; when nothing is retired
+        or inserted, nothing is committed and ``m``'s version is returned.
+        If the match scan, staging or the commit fails,
+        :meth:`_reclaiming` removes the vector and row stagings unless a
+        version committed since ``m`` references them.
         """
         import pyarrow.parquet as pq
         from pyspark.sql import functions as F
@@ -874,27 +901,19 @@ class TransactionalTable:
         scan = files if scan is None else scan
         # checked before any job: an incompatible column type stages nothing
         schema = None if rows is None else self._evolved_schema(m, rows)
-        dirs: list[str] = []
+        staged: list[dict] = []
         vectors: list[str] = []
-        staged: list[str] = []
+        new_files: list[str] = []
         dead: set[str] = set()
-        with self._reclaiming(m, vectors, staged, dirs=dirs):
+        with self._reclaiming(None if m is None else m["version"], staged):
             if scan:
-                matched = match(self._live(spark, scan, m, tagged=True)).select(
-                    F.col("_dv_file").alias("file_path"), F.col("_dv_pos").alias("row_index")
-                )
-                stage_dir = os.path.join(self.path, f"deletes-{uuid.uuid4().hex}")
-                dirs.append(stage_dir)
                 t0 = time.perf_counter()
-                matched.write.parquet(stage_dir)
-                parts = [
-                    os.path.join(stage_dir, f)
-                    for f in sorted(os.listdir(stage_dir))
-                    if f.endswith(".parquet")
-                ]
-                vector = pq.read_table(parts, columns=["file_path", "row_index"]) if parts else None
-                shutil.rmtree(stage_dir)
-                new = _retired(vector) if vector is not None else Counter()
+                vector = (
+                    match(self._live(spark, scan, m, tagged=True))
+                    .select(F.col("_dv_file").alias("file_path"), F.col("_dv_pos").alias("row_index"))
+                    .toArrow()
+                )
+                new = _retired(vector)
                 # a row is retired once: a match scan reads live rows only
                 per_old = {d: _retired(pq.read_table(d, columns=["file_path"])) for d in old}
                 total = sum(per_old.values(), new)
@@ -906,58 +925,61 @@ class TransactionalTable:
                 gone = {_localpath(f) for f in dead}
                 old = [d for d in old if not per_old[d].keys() <= gone]
                 if not new.keys() <= gone:
-                    os.makedirs(stage_dir)
-                    vectors.append(os.path.join(stage_dir, "part-00000.parquet"))
+                    rec = self._staging("deletes", staged)
+                    os.makedirs(rec["dir"])
+                    vectors.append(os.path.join(rec["dir"], "part-00000.parquet"))
                     pq.write_table(vector, vectors[0])
-                    self._pending_ms[stage_dir] = {"stage_ms": (time.perf_counter() - t0) * 1000.0}
+                    rec["stage_ms"] = (time.perf_counter() - t0) * 1000.0
             if rows is not None:
-                staged.extend(self._stage_nonempty(rows))
-            if not (vectors or staged or dead):
+                new_files = self._stage(rows, staged)
+            if not (vectors or new_files or dead):
                 return m["version"] if m else None
             # the schema evolves only when rows land (a delete-only batch
             # keeps the table's schema whatever columns its frame carries)
             return self._commit(
-                [f for f in files if f not in dead] + staged,
+                [f for f in files if f not in dead] + new_files,
                 op,
-                txn=txn,
-                base=m,
-                schema=schema if staged else None,
-                deletes=old + vectors,
+                m,
+                staged,
+                schema if new_files else None,
+                old + vectors,
+                txn,
             )
 
     @contextlib.contextmanager
-    def _reclaiming(self, m: dict | None, *staged: list[str], dirs: list[str] = ()):
-        """Run a body that stages files and commits them on top of ``m``
-        (every write path commits inside one).  If it raises, undo the
-        staging: remove ``dirs`` and the directories of the ``staged``
-        paths (data files, bloom sidecars, vectors) and drop those paths'
-        pending stats and timings.  The lists are read only then, so a
-        body may fill them as it stages.
+    def _reclaiming(self, since: int | None, staged: list[dict]):
+        """Run a body that stages files and commits them on top of
+        version ``since`` (None: no version yet); every write path commits
+        inside one.  If it raises, remove the ``dir`` of every record in
+        ``staged`` (data files, bloom sidecars, vectors).  The list is read
+        only then, so a body may fill it as it stages, and a record is
+        added before its write starts: a write that fails part-way is
+        removed too.
 
-        Nothing is removed if the version the commit claimed references
-        a staged path: ``_commit``'s ``os.link`` can succeed (the version
+        A directory is kept if a version committed after ``since``
+        references it: ``_commit``'s ``os.link`` can succeed (the version
         is durable and points at these files) and still raise afterwards;
-        deleting then would corrupt the committed version.  A manifest
-        that cannot be read proves nothing, so the files are kept."""
+        deleting then would corrupt the committed version.  Every later
+        version is checked, not only ``since + 1``: ``append`` reads its
+        base after staging, so its commit can land further on.  A manifest
+        that cannot be read proves nothing, so everything is kept."""
         try:
             yield
         except Exception:
             # Exception, not BaseException: an interrupt between the link
             # and the return must not trigger cleanup either
-            paths = [p for ps in staged for p in ps]
             try:
-                landed = self._read_manifest(0 if m is None else m["version"] + 1)
-                refs = set(landed.get("files", [])) | set(landed.get("deletes", []))
-            except FileNotFoundError:
                 refs = set()
+                for v in self.versions():
+                    if since is None or v > since:
+                        landed = self._read_manifest(v)
+                        refs |= {os.path.dirname(p) for p in landed["files"] + landed.get("deletes", [])}
             except (OSError, ValueError):
                 refs = None
-            if refs is not None and refs.isdisjoint(paths):
-                for p in paths:
-                    self._pending_stats.pop(p, None)
-                for d in set(dirs) | {os.path.dirname(p) for p in paths}:
-                    self._pending_ms.pop(d, None)
-                    shutil.rmtree(d, ignore_errors=True)
+            if refs is not None:
+                for r in staged:
+                    if r["dir"] not in refs:
+                        shutil.rmtree(r["dir"], ignore_errors=True)
             raise
 
     def apply_cdc(
@@ -1190,45 +1212,8 @@ class TransactionalTable:
 
     @staticmethod
     def _in_filter(col: str, vals: list):
-        """IN-list predicate built as ONE parsed SQL expression.
-
-        ``F.col(col).isin(vals)`` makes a py4j round trip PER literal —
-        measured 1.9-2.2 s of pure driver time at 2716 probe keys
-        (guide §5: the driver should do almost no work), while parsing
-        the same list as one SQL string costs ~0.1 s and yields the
-        identical Catalyst ``In``/``InSet`` predicate.  The SQL fast
-        path covers the manifest-key types (string/int/bool — the
-        :attr:`_BLOOM_TYPES` domain); anything else falls back to isin.
-        """
-        from pyspark.sql import functions as F
-
-        if not vals:
-            return F.lit(False)
-        spark = SparkSession.getActiveSession()
-        if all(isinstance(v, str) for v in vals):
-            # backslash escaping assumes the DEFAULT parser
-            # (spark.sql.parser.escapedStringLiterals=false); under the
-            # legacy setting '\\' round-trips differently, so fall back
-            # to isin there (ADVICE r13)
-            if (
-                spark is not None
-                and spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-                == "true"
-            ):
-                return F.col(col).isin(list(vals))
-            lits = ",".join(
-                "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in vals
-            )
-        elif all(isinstance(v, bool) for v in vals):
-            lits = ",".join("true" if v else "false" for v in vals)
-        elif all(
-            isinstance(v, int) and not isinstance(v, bool) and -(2**63) <= v < 2**63
-            for v in vals
-        ):
-            lits = ",".join(str(v) for v in vals)
-        else:
-            return F.col(col).isin(list(vals))
-        return F.expr(f"`{col.replace('`', '``')}` IN ({lits})")
+        """``col IN (vals)`` for the column named ``col`` (:func:`_in_list`)."""
+        return _in_list(f"`{col.replace('`', '``')}`", vals)
 
     def scan_in(
         self,
@@ -1236,7 +1221,6 @@ class TransactionalTable:
         col: str,
         keys,
         version: int | None = None,
-        max_prune_keys: int = 100_000,
     ) -> DataFrame:
         """Snapshot read of ``col IN (keys)`` where ``keys`` may be a
         Python iterable OR a single-column DataFrame — the 100 TB shape,
@@ -1245,7 +1229,7 @@ class TransactionalTable:
         minhash_store_backed_update` escape hatch).  The only key-set read:
         :meth:`lookup` is its one-key form.
 
-        DataFrame keys are taken up to ``max_prune_keys``: at or under
+        DataFrame keys are taken up to :data:`_MAX_PRUNE_KEYS`: at or under
         the cap the distinct key list drives manifest pruning — min/max
         range stats AND blooms, intersected (each is a no-false-negative
         filter, so their intersection is too) — plus an exact IN-list
@@ -1261,8 +1245,8 @@ class TransactionalTable:
         m = self._snapshot(version)
         if isinstance(keys, DataFrame):
             kdf = keys.select(F.col(keys.columns[0]).alias(col)).distinct()
-            head = kdf.take(max_prune_keys + 1)
-            if len(head) > max_prune_keys:
+            head = kdf.take(_MAX_PRUNE_KEYS + 1)
+            if len(head) > _MAX_PRUNE_KEYS:
                 return self._read(spark, m).join(F.broadcast(kdf), col, "left_semi")
             vals = [r[0] for r in head]
         else:
@@ -1480,23 +1464,3 @@ class StateStore:
             result = result.localCheckpoint(eager=True)
         self._table.append(rows)
         return result
-
-
-def commit_with_retry(fn, retries: int = 5):
-    """Run a commit-producing callable under optimistic concurrency.
-
-    The commit log's put-if-absent link makes every version race safe but
-    LOSABLE: a concurrent writer claiming the version first raises
-    :class:`CommitConflict`.  Writers whose change is derived from the
-    latest snapshot must re-derive and retry — this helper is that loop
-    (Delta-style optimistic concurrency control).  ``fn`` must re-READ the
-    table state on each call; retrying a closure over a stale DataFrame
-    would silently resurrect the lost race.
-    """
-    last: CommitConflict | None = None
-    for _ in range(retries):
-        try:
-            return fn()
-        except CommitConflict as e:
-            last = e
-    raise last

@@ -991,14 +991,20 @@ class LazInfo:
 
 def read_laz_info(path: str) -> LazInfo:
     """Parse header + LASzip VLR + REAL chunk table -> per-chunk read
-    units (the reference's parallel unit, ``source.rs:159-208``)."""
+    units (the reference's parallel unit, ``source.rs:159-208``).
+
+    Reads only the bytes up to the chunk-table offset (header, VLRs and
+    the offset itself) and, once the VLR names a supported variant, the
+    chunk table at the end of the file, never the compressed points
+    between them.  An unsupported variant, or a chunk-table offset of -1,
+    raises ``NotImplementedError`` so the caller can fall back to laspy."""
     from agile_lakehouse_spark.sources import las_native
 
     hdr = las_native.read_header(path)
     if not hdr.compressed:
         raise ValueError(f"{path} is not compressed LAS (use las_native)")
     with open(path, "rb") as f:
-        raw = f.read()
+        raw = f.read(hdr.offset_to_points + 8)
     # walk VLRs between header end and offset_to_points
     hdr_size = struct.unpack_from("<H", raw, 94)[0]
     n_vlrs = struct.unpack_from("<I", raw, 100)[0]
@@ -1025,7 +1031,11 @@ def read_laz_info(path: str) -> LazInfo:
             f"items={vlr_info['items']} need laspy"
         )
     table_off = struct.unpack_from("<q", raw, hdr.offset_to_points)[0]
-    sizes = read_chunk_table(raw, table_off)
+    if table_off < 0:  # the writer could not seek back to stamp it
+        raise NotImplementedError(f"{path}: chunk table offset {table_off} needs laspy")
+    with open(path, "rb") as f:
+        f.seek(table_off)
+        sizes = read_chunk_table(f.read())
     chunk_size = vlr_info["chunk_size"]
     offs, counts = [], []
     cur = hdr.offset_to_points + 8

@@ -30,7 +30,7 @@ whose pair set must xor-match the in-memory incremental over the union:
 `--bigprobe` (round 13, VERDICT r12 item 8) proves the scan_in
 broadcast-semi-join FALLBACK at the scale it exists for: fold the corpus
 in THREE batches, then match a batch of 30 k mostly-novel docs whose
-~120 k distinct band keys exceed scan_in's 100 k `max_prune_keys` cap —
+~120 k distinct band keys exceed scan_in's 100 k `_MAX_PRUNE_KEYS` cap —
 the probe then degrades from manifest pruning to a broadcast semi-join
 over the full file list (by construction: the cap check happens before
 any collect completes), and the pair set must still xor-match the

@@ -112,6 +112,70 @@ def test_laz_chunk_decode_matches_full(tmp_path):
         off += cnt
 
 
+def test_laz_info_reads_header_and_chunk_table_only(tmp_path, monkeypatch):
+    """``read_laz_info`` runs once per chunk in the ``las`` DataSource, so
+    it must read the header, VLRs and chunk table, not the compressed
+    points: a counting ``open`` sees a small share of the file per call."""
+    import builtins
+    import os
+
+    cols = _cloud(8000, seed=11)
+    path = str(tmp_path / "many.laz")
+    laz_native.write_laz(path, cols, chunk_size=1000)  # 8 chunks
+    want = laz_native.read_laz_info(path)
+    seen = []
+
+    class Counting:
+        def __init__(self, f):
+            self._f = f
+
+        def read(self, *a):
+            data = self._f.read(*a)
+            seen.append(len(data))
+            return data
+
+        def __getattr__(self, name):
+            return getattr(self._f, name)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            return self._f.__exit__(*exc)
+
+    monkeypatch.setattr(laz_native, "open", lambda *a, **k: Counting(builtins.open(*a, **k)), raising=False)
+    info = laz_native.read_laz_info(path)
+    assert info == want and len(info.chunk_offsets) == 8
+    assert 0 < sum(seen) < os.path.getsize(path) // 10
+
+
+def test_laz_info_unsupported_layouts_fall_back(tmp_path):
+    """A pointwise LAZ (compressor 1: no chunk table, so the 8 bytes after
+    the VLRs are compressed points) and a chunked one whose writer left the
+    chunk-table offset at -1 both raise ``NotImplementedError`` before any
+    chunk-table read, so the ``las`` DataSource routes them to laspy."""
+    from agile_lakehouse_spark.sources import las_datasource
+
+    path = str(tmp_path / "base.laz")
+    laz_native.write_laz(path, _cloud(3000, seed=5), chunk_size=1000)
+    with open(path, "rb") as f:
+        data = f.read()
+    hdr_size = struct.unpack_from("<H", data, 94)[0]
+    to_points = struct.unpack_from("<I", data, 96)[0]
+    assert laz_native.read_laz_info(path).chunk_offsets[0] == to_points + 8
+    pointwise = bytearray(data)
+    struct.pack_into("<H", pointwise, hdr_size + 54, 1)  # the VLR's compressor
+    struct.pack_into("<q", pointwise, to_points, -(2**40))  # point bytes, not an offset
+    unseeked = bytearray(data)
+    struct.pack_into("<q", unseeked, to_points, -1)
+    for name, blob in (("pointwise", pointwise), ("unseeked", unseeked)):
+        p = tmp_path / f"{name}.laz"
+        p.write_bytes(bytes(blob))
+        with pytest.raises(NotImplementedError):
+            laz_native.read_laz_info(str(p))
+        assert las_datasource._laz_info(str(p)) is None
+
+
 def test_laz_adversarial_payloads(tmp_path):
     # constant cloud, single point, extreme grid values, empty
     p = str(tmp_path / "a.laz")

@@ -64,7 +64,7 @@ def test_store_update_folds_and_never_opens_clean_files(spark, tmp_path):
     # keep every file that holds cell 5
     assert clean_files, "repartitionByRange(cell) should yield >=1 prunable file"
     assert dirty_files, "cell-5 files must be kept"
-    stats = vec_tbl._stats(v)
+    stats = vec_tbl._read_manifest(v)["stats"]
     for f in clean_files:
         # destructive proof: if batch 2 opens any clean file, the footer
         # parse throws and the fold below fails

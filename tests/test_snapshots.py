@@ -56,18 +56,18 @@ def test_snapshot_isolation_under_new_commits(spark, table):
     assert snap.count() == 10
 
 
-def test_commit_conflict(spark, table, monkeypatch):
+def test_commit_conflict(spark, table):
     table.append(_df(spark, 0, 5))
-    files = table._read_manifest(0)["files"]
-    # simulate the race: this writer computed next=1 from a stale latest=0,
+    base = table._read_manifest(0)
+    files = base["files"]
+    # simulate the race: this writer derived its commit from version 0,
     # but a concurrent writer commits version 1 in the meantime
     import json
 
     with open(table._manifest_path(1), "w") as f:
         json.dump({"version": 1, "op": "append", "files": files, "committed_at": 0}, f)
-    monkeypatch.setattr(table, "latest_version", lambda: 0)
     with pytest.raises(CommitConflict):
-        table._commit(files, "append")
+        table._commit(files, "append", base)
 
 
 def test_compact_and_vacuum(spark, table):
@@ -109,27 +109,23 @@ def test_concurrent_commits_lose_nothing(spark, table):
     import threading
 
     table.append(_df(spark, 0, 5))
-    files = table._read_manifest(0)["files"]
+    base = table._read_manifest(0)
+    files = base["files"]
     outcomes = []
 
     def racer():
-        # every racer believes latest=0 -> all target version 1
+        # every racer read version 0 -> all target version 1
         try:
-            v = table._commit(files, "append")
+            v = table._commit(files, "append", base)
             outcomes.append(("ok", v))
         except CommitConflict:
             outcomes.append(("conflict", None))
 
-    orig = table.latest_version
-    table.latest_version = lambda: 0
-    try:
-        threads = [threading.Thread(target=racer) for _ in range(8)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-    finally:
-        table.latest_version = orig
+    threads = [threading.Thread(target=racer) for _ in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
     wins = [o for o in outcomes if o[0] == "ok"]
     assert len(wins) == 1 and wins[0][1] == 1
     assert len(outcomes) == 8
@@ -306,11 +302,12 @@ def test_read_changes_is_row_delta_for_appends(spark, tmp_path):
 
 
 def test_commit_with_retry_under_contention(spark, tmp_path):
-    """8 threads append concurrently with retry; every append lands exactly
-    once and the final row count proves no lost updates."""
+    """8 threads append concurrently, each retrying on CommitConflict;
+    every append lands exactly once, the final row count proves no lost
+    updates, and no losing attempt leaves its staging behind."""
     import threading
 
-    from agile_lakehouse_spark.plans.snapshots import TransactionalTable, commit_with_retry
+    from agile_lakehouse_spark.plans.snapshots import TransactionalTable
 
     t = TransactionalTable(str(tmp_path / "occ"))
     t.append(spark.range(0, 1).selectExpr("id AS k"))
@@ -318,10 +315,13 @@ def test_commit_with_retry_under_contention(spark, tmp_path):
 
     def writer(i):
         try:
-            commit_with_retry(
-                lambda: t.append(spark.range(i * 100, i * 100 + 10).selectExpr("id AS k")),
-                retries=20,
-            )
+            for _ in range(20):
+                try:
+                    t.append(spark.range(i * 100, i * 100 + 10).selectExpr("id AS k"))
+                    return
+                except CommitConflict:
+                    continue
+            raise CommitConflict(f"writer {i} lost 20 races")
         except Exception as e:  # noqa: BLE001 — recorded for the assert
             errs.append(e)
 
@@ -333,6 +333,7 @@ def test_commit_with_retry_under_contention(spark, tmp_path):
     assert not errs, errs
     assert t.read(spark).count() == 1 + 8 * 10
     assert t.latest_version() == 8  # exactly one version per successful append
+    assert _unreferenced_staging(t) == []
 
 
 def _df_lang(spark, lo, hi):
@@ -470,7 +471,7 @@ def test_bloom_rebuilt_through_optimize(spark, tmp_path):
     # the rewrite staged NEW files; every one must carry a fresh bloom,
     # and point lookups stay exact + pruned after the layout change
     assert all(
-        "bloom" in (t._stats(t.latest_version()).get(f) or {}) for f in files
+        "bloom" in (t._read_manifest(t.latest_version())["stats"].get(f) or {}) for f in files
     )
     got = t.lookup(spark, "k", 777).collect()
     assert [r.k for r in got] == [777]
@@ -720,6 +721,31 @@ def test_merge_on_fresh_table(spark, tmp_path):
     assert t.merge(spark, empty, "k") == 0
 
 
+def test_empty_append_commits_schema_without_a_file(spark, tmp_path):
+    """An empty ``append`` commits its version and its frame's schema but
+    stages no data file: a fresh table then lists no file and reads back
+    0 rows under that schema, and an empty append on an existing table
+    adds no file to it."""
+    from pyspark.sql.types import StructType
+
+    t = TransactionalTable(str(tmp_path / "empty"))
+    empty = spark.createDataFrame([], "k long, v string")
+    assert t.append(empty) == 0
+    m = t._read_manifest(0)
+    assert m["files"] == [] and m["operationMetrics"]["files_added"] == 0
+    assert StructType.fromJson(m["schema"]) == empty.schema
+    got = t.read(spark)
+    assert got.count() == 0 and got.schema == empty.schema
+    assert os.listdir(t.path) == ["_log"]
+    t.append(spark.createDataFrame([(1, "a"), (2, "b")], empty.schema))
+    files = t._read_manifest(1)["files"]
+    assert t.append(empty) == 2
+    m = t._read_manifest(2)
+    assert m["files"] == files and m["operationMetrics"]["files_added"] == 0
+    assert _unreferenced_staging(t) == []
+    assert sorted(r.k for r in t.read(spark).collect()) == [1, 2]
+
+
 def test_delete_keys_mor_key_list_equals_frame(spark, tmp_path):
     """A key-list delete retires the same rows as the same keys passed as
     a DataFrame, on a bloom table where only blooms prune."""
@@ -876,8 +902,8 @@ def _unreferenced_staging(table):
 
 def test_merge_commit_crash_before_link_reclaims_stage(spark, table, monkeypatch):
     """A MERGE whose commit fails BEFORE landing reclaims both its staged
-    source rows and its staged deletion vector, drops their pending
-    stats, and leaves the version unchanged."""
+    source rows and its staged deletion vector, and leaves the version
+    unchanged."""
     table.append(_df(spark, 0, 20))
     v = table.latest_version()
 
@@ -891,7 +917,6 @@ def test_merge_commit_crash_before_link_reclaims_stage(spark, table, monkeypatch
     monkeypatch.undo()
     assert table.latest_version() == v
     assert _unreferenced_staging(table) == []
-    assert table._pending_stats == {}
     assert table.read(spark).count() == 20
 
 
@@ -1086,6 +1111,38 @@ def test_merge_writes_one_vector_file(spark, tmp_path):
     assert len(got) == 400 and got[7] == -1 and got[8] == 24
 
 
+def test_vector_filter_under_legacy_string_parser(spark, tmp_path):
+    """Under ``spark.sql.parser.escapedStringLiterals=true`` a backslash
+    escape stays in the literal, so the vector filter of a table whose
+    path holds a quote must not escape its keys itself: the deleted rows
+    stay deleted for ``read`` and ``scan_in`` alike."""
+    t = TransactionalTable(str(tmp_path / "bob's lake"))
+    t.append(spark.range(0, 100).select(F.col("id").alias("k")))
+    t.delete_where_mor(spark, "k < 10")
+    key = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(key, "true")
+    try:
+        assert t.read(spark).count() == 90
+        assert sorted(r.k for r in t.scan_in(spark, "k", [3, 50]).collect()) == [50]
+    finally:
+        spark.conf.unset(key)
+    assert t.read(spark).count() == 90
+
+
+def test_bloom_table_under_escaped_path(spark, tmp_path):
+    """A bloom table whose path holds a space and a quote stages: each
+    file's sidecar lands beside it (the bloom job reports its files as
+    percent-escaped URIs), and a lookup prunes by it."""
+    import os
+
+    t = TransactionalTable(str(tmp_path / "bob's lake"), bloom_columns=("k",))
+    t.append(_keyed(spark, 0, 400, 4))
+    files = t.history()[-1]["files"]
+    assert all(os.path.exists(t._sidecar(f)) for f in files)
+    assert len(t.prune_files_by_keys("k", [7])) < len(files)
+    assert [r.v for r in t.lookup(spark, "k", 7).collect()] == [21]
+
+
 def test_vector_reads_start_no_extra_job(spark, tmp_path, monkeypatch):
     """``scan_in``, ``lookup`` and ``read`` of a version with a small
     deletion vector start exactly as many Spark jobs as the same read of
@@ -1122,30 +1179,58 @@ def test_vector_reads_start_no_extra_job(spark, tmp_path, monkeypatch):
         assert jobs(name, v) == jobs(name, v - 1) + 1, name
 
 
-@pytest.mark.parametrize("op", ["append", "delete_where"])
-def test_failed_commit_reclaims_staging(spark, tmp_path, monkeypatch, op):
-    """``append`` and ``delete_where_mor`` whose commit fails before
-    landing leave no staged directory, no bloom sidecar and no pending
-    stats behind."""
+@pytest.mark.parametrize(
+    "op,point",
+    [
+        pytest.param(op, point, id=op if point == "commit" else f"{op}-{point}")
+        for point in ("commit", "write")
+        for op in ("append", "overwrite", "merge", "apply_cdc", "delete_where")
+    ],
+)
+def test_failed_commit_reclaims_staging(spark, tmp_path, monkeypatch, op, point):
+    """A write whose commit fails before landing ("commit"), or whose
+    Spark job fails while its frame is staged ("write": one row hits
+    ``raise_error``), raises, leaves the version as it was, and leaves no
+    staged directory and no bloom sidecar behind.  A merge's vector is
+    staged before its rows, so its write failure must reclaim both."""
     import glob
 
     t = TransactionalTable(str(tmp_path / "leak"), bloom_columns=("k",))
     t.append(_keyed(spark, 0, 400, 4))
     v = t.latest_version()
+    rows = _keyed(spark, 350, 450, 2)
+    if point == "write":
+        rows = rows.withColumn(
+            "v", F.when(F.col("k") == 420, F.raise_error(F.lit("boom"))).otherwise(F.col("v"))
+        )
+    else:
 
-    def failing(self, *a, **k):
-        raise CommitConflict("simulated pre-link failure")
+        def failing(self, *a, **k):
+            raise CommitConflict("simulated pre-link failure")
 
-    monkeypatch.setattr(TransactionalTable, "_commit", failing)
-    with pytest.raises(CommitConflict):
+        monkeypatch.setattr(TransactionalTable, "_commit", failing)
+    # the commit point raises the simulated conflict itself; the write
+    # point raises the Spark job error carrying the ``raise_error`` message
+    if point == "commit":
+        expected = pytest.raises(CommitConflict, match="simulated")
+    else:
+        expected = pytest.raises(Exception, match="boom")
+    with expected:
         if op == "append":
-            t.append(_keyed(spark, 400, 500, 2))
+            t.append(rows)
+        elif op == "overwrite":
+            t.overwrite(rows)
+        elif op == "merge":
+            t.merge(spark, rows, "k")
+        elif op == "apply_cdc":
+            t.apply_cdc(spark, rows.withColumn("seq", F.lit(1)).withColumn("op", F.lit("U")), "k", "seq")
+        elif point == "write":
+            t.delete_where_mor(spark, "if(k = 7, raise_error('boom'), k % 3 = 0)")
         else:
             t.delete_where_mor(spark, "k % 3 = 0")
     monkeypatch.undo()
     assert t.latest_version() == v
     assert _unreferenced_staging(t) == []
-    assert t._pending_stats == {} and t._pending_ms == {}
     live = {t._sidecar(f) for f in t.history()[-1]["files"]}
     assert set(glob.glob(f"{t.path}/*/_*.bloom")) == live
     assert t.read(spark).count() == 400

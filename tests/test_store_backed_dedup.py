@@ -349,11 +349,13 @@ def test_prune_files_by_keys_bloom_semantics(spark, tmp_path):
     assert tbl.prune_files_by_keys("v", [3]) == files
 
 
-def test_scan_in_list_dataframe_and_overcap_fallback(spark, tmp_path):
+def test_scan_in_list_dataframe_and_overcap_fallback(spark, tmp_path, monkeypatch):
     """scan_in: iterable keys and small DataFrame keys drive manifest
     pruning (range stats AND blooms intersected); a DataFrame past
-    max_prune_keys degrades to a broadcast semi-join over the full file
+    _MAX_PRUNE_KEYS degrades to a broadcast semi-join over the full file
     list — same rows either way."""
+    from agile_lakehouse_spark.plans import snapshots
+
     tbl = TransactionalTable(str(tmp_path / "scanin"), bloom_columns=("k",))
     df = spark.createDataFrame(
         [(k, k * 10) for k in range(16)], "k long, v long"
@@ -364,7 +366,8 @@ def test_scan_in_list_dataframe_and_overcap_fallback(spark, tmp_path):
     kdf = spark.createDataFrame([(3,), (9,)], "k long")
     assert sorted(tuple(r) for r in tbl.scan_in(spark, "k", kdf).collect()) == want
     # over the cap: semi-join fallback, identical rows
-    got = tbl.scan_in(spark, "k", kdf, max_prune_keys=1)
+    monkeypatch.setattr(snapshots, "_MAX_PRUNE_KEYS", 1)
+    got = tbl.scan_in(spark, "k", kdf)
     assert sorted(tuple(r) for r in got.collect()) == want
     # pruning actually intersects: a value outside every file range reads 0 files
     assert tbl.scan_in(spark, "k", [99]).count() == 0
