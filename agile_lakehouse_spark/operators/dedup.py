@@ -7,12 +7,21 @@ DuckDB-oracle-verifiable:
 - :func:`exact_dedup`          — hash group-by, keep lowest id per text
 - :func:`ngram_jaccard_pairs`  — exact character-shingle Jaccard (the slow
                                   truth; at scale, run only on candidates)
-- :func:`minhash_signatures` / :func:`minhash_near_dup` — MinHash + LSH
-  banding: shingle -> 60-bit hash -> per-perm min (single agg pass) ->
-  band-bucket self-join -> signature-similarity estimate
-- :func:`simhash` / :func:`simhash_near_dup` — 32-bit SimHash with
-  pigeonhole chunk blocking (exact for the hamming radius, no O(n²) pass)
+- :func:`minhash_signatures` / :func:`minhash_near_dup` /
+  :func:`minhash_incremental_pairs` — MinHash + LSH banding: shingle ->
+  60-bit hash -> per-perm min (one narrow map) -> band-bucket self-join
+  -> signature-similarity estimate; batch, or a new batch against a
+  stored signature table
+- :func:`simhash` / :func:`simhash_near_dup` — SimHash (one BIGINT up to
+  60 bits, auto-sized or wider as chunk words) with pigeonhole chunk
+  blocking (exact for the hamming radius, no O(n²) pass)
 - embedding near-dup lives in operators/similarity.py
+
+The MinHash and SimHash pair operators are thin calls into one kernel,
+:func:`_signature_pairs`: distinct signatures -> bucket keys (LSH bands
+or pigeonhole chunks) -> bucket self-join (and new x corpus join) ->
+verify the signature pairs -> expand to doc pairs, plus the pairs of
+identical signatures.
 
 Scale shape (100 TB): every step is shuffle-on-key + map-side combine; the
 only self-joins are on LSH band buckets / simhash chunks, never all-pairs.
@@ -21,6 +30,7 @@ Skewed buckets (boilerplate shingles) are AQE-skew-split.
 
 from __future__ import annotations
 
+import functools
 import re
 
 from pyspark.sql import Column, DataFrame
@@ -528,6 +538,24 @@ def minhash_signatures(
     return base.select(id_col, *cols)
 
 
+def _buckets(df: DataFrame, key_col: str, keys: list[Column]) -> DataFrame:
+    """(key_col, band, key) bucket membership: one row per entry of
+    ``keys``, the signature's bucket keys in band order."""
+    entries = [F.struct(F.lit(band).alias("band"), k.alias("key")) for band, k in enumerate(keys)]
+    return df.select(F.col(key_col), F.explode(F.array(*entries)).alias("bk")).select(
+        key_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    )
+
+
+def _band_keys(mh, bands: int, rows_per_band: int) -> list[Column]:
+    """LSH band keys: each band's ``rows_per_band`` minima (``mh(j)`` is
+    the j-th) as strings joined by ``_``."""
+    return [
+        F.concat_ws("_", *[mh(band * rows_per_band + r).cast("string") for r in range(rows_per_band)])
+        for band in range(bands)
+    ]
+
+
 def _lsh_buckets(
     sigs: DataFrame,
     bands: int,
@@ -535,13 +563,54 @@ def _lsh_buckets(
     id_col: str,
 ) -> DataFrame:
     """(id, band, key) bucket membership — one row per (doc, band)."""
-    entries = []
-    for band in range(bands):
-        cols = [F.col(f"mh{band * rows_per_band + r}").cast("string") for r in range(rows_per_band)]
-        entries.append(F.struct(F.lit(band).alias("band"), F.concat_ws("_", *cols).alias("key")))
-    return sigs.select(F.col(id_col), F.explode(F.array(*entries)).alias("bk")).select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    return _buckets(sigs, id_col, _band_keys(lambda j: F.col(f"mh{j}"), bands, rows_per_band))
+
+
+def _bucket_pairs(
+    new_b: DataFrame,
+    corpus_b: DataFrame | None,
+    key_col: str,
+    max_bucket_size: int | None,
+    population: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """The candidate step: ``(id_a, id_b)`` pairs of ``key_col`` values
+    sharing a (band, key) bucket — within ``new_b`` (``id_a < id_b``) and,
+    when ``corpus_b`` is given, new against corpus (``id_a != id_b``, the
+    new side first; ``None`` otherwise).  ``max_bucket_size`` drops every
+    bucket whose ``population`` (default ``new_b``) has more members —
+    see :func:`lsh_candidate_pairs`."""
+    if max_bucket_size is not None:
+        ok = (
+            (new_b if population is None else population)
+            .groupBy("band", "key")
+            .agg(F.count(F.lit(1)).alias("_bsz"))
+            .filter(F.col("_bsz") <= max_bucket_size)
+            .select("band", "key")
+        )
+        new_b = new_b.join(ok, ["band", "key"], "left_semi")
+        if corpus_b is not None:
+            corpus_b = corpus_b.join(ok, ["band", "key"], "left_semi")
+    a, b = new_b.alias("a"), new_b.alias("b")
+    within = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col(f"a.{key_col}") < F.col(f"b.{key_col}")),
+        )
+        .select(F.col(f"a.{key_col}").alias("id_a"), F.col(f"b.{key_col}").alias("id_b"))
+        .distinct()
     )
+    if corpus_b is None:
+        return within, None
+    cross = (
+        new_b.select(F.col(key_col).alias("id_a"), "band", "key")
+        .join(corpus_b.select(F.col(key_col).alias("id_b"), "band", "key"), ["band", "key"])
+        .filter(F.col("id_a") != F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    return within, cross
 
 
 def lsh_candidate_pairs(
@@ -554,7 +623,8 @@ def lsh_candidate_pairs(
     """LSH banding: docs sharing any identical band become a candidate pair.
 
     Band key = the band's row values concatenated; self-join is per
-    (band, key) bucket — never all-pairs.
+    (band, key) bucket — never all-pairs.  This is the candidate step of
+    every signature-pair operator (:func:`_signature_pairs`).
 
     ``max_bucket_size`` bounds the self-join fan-out: a bucket of n
     members emits n(n-1)/2 pairs, so ONE hot bucket (a viral doc
@@ -572,25 +642,118 @@ def lsh_candidate_pairs(
     a cap drops before committing to it.  Default None = uncapped
     (small-corpus / declared-oracle behavior, bit-identical results).
     """
-    bucketed = _lsh_buckets(sigs, bands, rows_per_band, id_col)
-    if max_bucket_size is not None:
-        ok = (
-            bucketed.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("_bsz"))
-            .filter(F.col("_bsz") <= max_bucket_size)
-            .select("band", "key")
+    return _bucket_pairs(
+        _lsh_buckets(sigs, bands, rows_per_band, id_col), None, id_col, max_bucket_size
+    )[0]
+
+
+def _signature_pairs(
+    new_sigs: DataFrame,
+    corpus_sigs: DataFrame | None,
+    sig: Column,
+    keys,
+    name: str,
+    score,
+    keep,
+    ident,
+    id_col: str,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """The one signature-pair kernel of the MinHash and SimHash near-dup
+    family: block -> verify -> expand over DISTINCT signatures.
+
+    ``sig`` is the signature as a column of ``new_sigs`` (and
+    ``corpus_sigs``): a MinHash ``struct(mh0..)``, a narrow SimHash
+    ``bigint`` or a wide SimHash ``array<bigint>``.  ``keys(s)`` lists its
+    bucket keys (LSH bands, pigeonhole chunks); ``score(a, b)`` is the
+    pair's similarity, kept where ``keep(score)`` holds; ``ident`` is the
+    score of two identical signatures (``keep`` must accept it as a
+    number too).  Returns ``(id_a, id_b, <name>)`` with ``id_a < id_b``,
+    ordered — every pair within ``new_sigs`` and, when ``corpus_sigs`` is
+    given, every new x corpus pair (the old-old pairs are never formed).
+
+    The score depends only on the SIGNATURES, so the quadratic stage (the
+    bucket self-join) runs over distinct signatures and doc pairs are
+    expanded afterwards by two signature-equality joins.  Exact
+    duplicates share one signature: a doc-level bucket join would
+    enumerate every intra-cluster pair per bucket, the distinct one is
+    bounded by content diversity, not corpus size.  Identical signatures
+    never pair in the bucket join; their doc pairs come from one equality
+    join each, with score ``ident``.  ``max_bucket_size`` caps buckets by
+    their distinct-signature population over new UNION corpus, the one
+    the batch operator sees, so incremental == batch under the cap too.
+
+    Precondition: doc ids are unique across ``new_sigs`` and
+    ``corpus_sigs``.  A repeated id would carry several signature rows,
+    so it could pair with itself or yield one pair several times.  It is
+    not checked: a check costs a distinct-count job per call, and
+    :func:`simhash` groups by the id, so a repeated id there already
+    arrives as one signature.
+    """
+    def docs(df, tag):
+        return df.select(F.col(id_col).alias(f"_id_{tag}"), sig.alias(f"_sig_{tag}"))
+
+    def buckets(df):
+        return _buckets(df, "_sig", keys(F.col("_sig")))
+
+    new = new_sigs.select(sig.alias("_sig")).distinct()
+    sides = [new_sigs]
+    corpus_b = population = None
+    if corpus_sigs is not None:
+        old = corpus_sigs.select(sig.alias("_sig")).distinct()
+        corpus_b, population = buckets(old), buckets(new.unionByName(old).distinct())
+        sides.append(corpus_sigs)
+    cands = _bucket_pairs(buckets(new), corpus_b, "_sig", max_bucket_size, population)
+    pair = [F.least("_id_a", "_id_b").alias("id_a"), F.greatest("_id_a", "_id_b").alias("id_b")]
+    parts = []
+    for cand, right in zip(cands, sides):
+        verified = (
+            cand.select(F.col("id_a").alias("_sig_a"), F.col("id_b").alias("_sig_b"))
+            .withColumn(name, score(F.col("_sig_a"), F.col("_sig_b")))
+            .filter(keep(F.col(name)))
         )
-        bucketed = bucketed.join(ok, ["band", "key"], "left_semi")
-    a, b = bucketed.alias("a"), bucketed.alias("b")
+        parts.append(
+            verified.join(docs(new_sigs, "a"), "_sig_a")
+            .join(docs(right, "b"), "_sig_b")
+            .select(*pair, name)
+        )
+    if keep(ident):
+        same = F.lit(ident).cast(parts[0].schema[name].dataType).alias(name)
+        for i, right in enumerate(sides):
+            eq = docs(new_sigs, "a").join(docs(right, "b"), F.col("_sig_a") == F.col("_sig_b"))
+            parts.append((eq if i else eq.filter(F.col("_id_a") < F.col("_id_b"))).select(*pair, same))
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
+        functools.reduce(DataFrame.unionByName, parts)
+        .select(F.col("id_a").cast("bigint"), F.col("id_b").cast("bigint"), name)
+        .orderBy("id_a", "id_b")
+    )
+
+
+def _minhash_pairs(
+    new_sigs: DataFrame,
+    corpus_sigs: DataFrame | None,
+    num_perms: int,
+    bands: int,
+    rows_per_band: int,
+    threshold: float,
+    id_col: str,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """:func:`_signature_pairs` over MinHash signatures: LSH band keys,
+    est_jaccard = the rounded fraction of matching minima."""
+    mh = [f"mh{j}" for j in range(num_perms)]
+    return _signature_pairs(
+        new_sigs, corpus_sigs, F.struct(*mh),
+        lambda s: _band_keys(lambda j: s.getField(f"mh{j}"), bands, rows_per_band),
+        "est_jaccard",
+        lambda a, b: round4(
+            sum(F.when(a.getField(c) == b.getField(c), 1).otherwise(0) for c in mh)
+            / F.lit(num_perms)
+        ),
+        lambda est: est >= threshold,
+        1.0,
+        id_col,
+        max_bucket_size,
     )
 
 
@@ -619,7 +782,8 @@ def minhash_incremental_pairs(
     ``corpus_sigs`` is exactly what :func:`minhash_signatures` returns
     (``id, mh0..mh{n-1}``) — the checkpointed signature table a
     production pipeline maintains.  Ids must be disjoint from the
-    batch's.  Returns (id_a, id_b, est_jaccard) pairs with AT LEAST ONE
+    batch's and unique (the :func:`_signature_pairs` precondition).
+    Returns (id_a, id_b, est_jaccard) pairs with AT LEAST ONE
     side in the new batch, bit-identical to
     ``minhash_near_dup(old_docs UNION new_docs)`` filtered to pairs
     touching a new id (equivalence-tested; the dq21h oracle replays the
@@ -631,14 +795,15 @@ def minhash_incremental_pairs(
     self-join (the O(corpus) part) never happens; cost is
     O(new x bucket-collisions), independent of corpus size except for
     the band-key join against the (already materialized, bucketable)
-    old signature stream.  Same distinct-signature decomposition,
-    same ``max_bucket_size`` hot-bucket cap, same est_jaccard
-    arithmetic as the batch operator.
+    old signature stream.  It is the batch operator's kernel with a
+    corpus side: same distinct-signature decomposition, same
+    ``max_bucket_size`` hot-bucket cap, same est_jaccard arithmetic.
 
     ``new_sigs``: pass the batch's precomputed :func:`minhash_signatures`
     frame to skip re-shingling — the caller that also maintains the
     store (:func:`minhash_store_update`) computes signatures exactly
-    once per batch.
+    once per batch.  ``persist_sigs`` persists the batch signatures the
+    kernel reads several times, registered in ``caches``.
     """
     if new_sigs is None:
         new_sigs = minhash_signatures(new_df, k, num_perms, text_col, id_col, seed)
@@ -657,105 +822,9 @@ def minhash_incremental_pairs(
             )
         else:
             caches.append(new_sigs)
-    mh_cols = [f"mh{j}" for j in range(num_perms)]
-    sig = F.struct(*mh_cols)
-
-    # keep the flat mh columns: _lsh_buckets builds band keys from them,
-    # the struct is the signature's identity (minhash_near_dup's shape)
-    usig_new = new_sigs.select(*mh_cols).distinct().withColumn("_sig", sig)
-    usig_old = corpus_sigs.select(*mh_cols).distinct().withColumn("_sig", sig)
-    bn = _lsh_buckets(usig_new, bands, rows_per_band, "_sig")
-    bo = _lsh_buckets(usig_old, bands, rows_per_band, "_sig")
-    if max_bucket_size is not None:
-        # cap on the bucket population the BATCH op would see: the
-        # union's DISTINCT signatures (a signature present in both old
-        # and new counts once, exactly as in minhash_near_dup's usig)
-        sizes = (
-            _lsh_buckets(
-                usig_new.unionByName(usig_old).distinct(), bands, rows_per_band, "_sig"
-            )
-            .groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("_bsz"))
-            .filter(F.col("_bsz") <= max_bucket_size)
-            .select("band", "key")
-        )
-        bn = bn.join(sizes, ["band", "key"], "left_semi")
-        bo = bo.join(sizes, ["band", "key"], "left_semi")
-    # new-vs-old: probe ONLY buckets holding a new signature (never the
-    # old-old self-join); identical signatures are excluded here and
-    # handled exactly by the equality joins below (est 1.0), mirroring
-    # the batch op's within_group/cross_group split
-    cross = (
-        bn.select(F.col("_sig").alias("_sig_a"), "band", "key")
-        .join(bo.select(F.col("_sig").alias("_sig_b"), "band", "key"), ["band", "key"])
-        .filter(F.col("_sig_a") != F.col("_sig_b"))
-        .select("_sig_a", "_sig_b")
-        .distinct()
-    )
-    # new-vs-new: the ordinary banding self-join over the (small) batch
-    # — on bn, which already carries the COMBINED-population cap above,
-    # so a bucket over cap drops its new-new pairs exactly as batch does
-    bna, bnb = bn.alias("a"), bn.alias("b")
-    newnew = (
-        bna.join(
-            bnb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a._sig") < F.col("b._sig")),
-        )
-        .select(F.col("a._sig").alias("_sig_a"), F.col("b._sig").alias("_sig_b"))
-        .distinct()
-    )
-
-    matches = sum(
-        F.when(F.col("_sig_a").getField(c) == F.col("_sig_b").getField(c), 1).otherwise(0)
-        for c in mh_cols
-    )
-    est = round4(matches / F.lit(num_perms))
-    na = new_sigs.select(F.col(id_col).alias("id_x"), sig.alias("_sig_a"))
-    nb = new_sigs.select(F.col(id_col).alias("id_y"), sig.alias("_sig_b"))
-    oa = corpus_sigs.select(F.col(id_col).alias("id_x"), sig.alias("_sig_a"))
-    ob = corpus_sigs.select(F.col(id_col).alias("id_y"), sig.alias("_sig_b"))
-
-    def expand(sig_pairs, left, right):
-        return (
-            sig_pairs.join(left, "_sig_a")
-            .join(right, "_sig_b")
-            .select(
-                F.least("id_x", "id_y").alias("id_a"),
-                F.greatest("id_x", "id_y").alias("id_b"),
-                "est_jaccard",
-            )
-        )
-
-    cross_sig = cross.withColumn("est_jaccard", est).filter(F.col("est_jaccard") >= threshold)
-    nn_sig = newnew.withColumn("est_jaccard", est).filter(F.col("est_jaccard") >= threshold)
-    parts = [expand(cross_sig, na, ob), expand(nn_sig, na, nb)]
-    if 1.0 >= threshold:
-        ident = round4(F.lit(1.0))
-        eq_cross = (
-            new_sigs.select(F.col(id_col).alias("id_x"), sig.alias("_s"))
-            .join(corpus_sigs.select(F.col(id_col).alias("id_y"), sig.alias("_s")), "_s")
-            .select(
-                F.least("id_x", "id_y").alias("id_a"),
-                F.greatest("id_x", "id_y").alias("id_b"),
-                ident.alias("est_jaccard"),
-            )
-        )
-        ga = new_sigs.select(F.col(id_col).alias("id_a"), sig.alias("_s"))
-        gb = new_sigs.select(F.col(id_col).alias("id_b"), sig.alias("_s"))
-        eq_within = (
-            ga.join(gb, "_s")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", ident.alias("est_jaccard"))
-        )
-        parts += [eq_cross, eq_within]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return (
-        out.select(F.col("id_a").cast("bigint"), F.col("id_b").cast("bigint"), "est_jaccard")
-        .orderBy("id_a", "id_b")
+    return _minhash_pairs(
+        new_sigs, corpus_sigs, num_perms, bands, rows_per_band, threshold, id_col,
+        max_bucket_size,
     )
 
 
@@ -796,83 +865,35 @@ def minhash_near_dup(
     text_col: str = "text",
     id_col: str = "doc_id",
     seed: int = 7,
-    persist_sigs: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline -> (id_a, id_b, est_jaccard).
 
     est_jaccard = fraction of matching signature positions on LSH candidate
-    pairs only.  ``max_bucket_size`` forwards to
-    :func:`lsh_candidate_pairs` — NOTE it caps DISTINCT-SIGNATURE
-    buckets (exact duplicates already collapse before banding here), so
-    it guards against near-identical-but-distinct mass clusters.
+    pairs only.  Doc ids must be unique (the :func:`_signature_pairs`
+    precondition).  ``max_bucket_size`` is :func:`lsh_candidate_pairs`'
+    cap — NOTE it caps DISTINCT-SIGNATURE buckets (exact duplicates
+    already collapse before banding here), so it guards against
+    near-identical-but-distinct mass clusters.
 
-    ``persist_sigs``: the signature table feeds FOUR plan branches (both
-    sides of the bucket self-join + both sides of the similarity join);
-    without persistence Spark recomputes the shingle-explode+agg — the
-    expensive stage — once per branch.  Persist is the compute-once
-    pattern you'd use at 100 TB too (or a checkpoint to a signature
-    table); measured 2-3x on the bench suite.
+    The signature table is persisted: it feeds five plan branches (the
+    distinct signatures and both sides of each expansion join); without
+    it Spark recomputes the shingle hashing — the expensive stage — once
+    per branch (measured 2-3x on the bench suite).
     """
-    sigs = minhash_signatures(df, k, num_perms, text_col, id_col, seed)
-    if persist_sigs:
-        sigs = sigs.persist()
-    mh_cols = [f"mh{j}" for j in range(num_perms)]
-
-    # Same decomposition as simhash_near_dup: est_jaccard depends only on
-    # the SIGNATURES, so candidate generation runs over distinct signatures
-    # (struct-typed — Spark structs compare/join lexicographically) and doc
-    # pairs expand afterwards.  Exact duplicates share full signatures, so
-    # a doc-level band join would enumerate every intra-cluster pair per
-    # band; the distinct-signature join is bounded by content diversity,
-    # not corpus size.
-    usig = sigs.select(*mh_cols).distinct()
-    cands = lsh_candidate_pairs(
-        usig.withColumn("_sig", F.struct(*mh_cols)),
-        bands,
-        rows_per_band,
-        "_sig",
-        max_bucket_size=max_bucket_size,
-    )
-    matches = sum(
-        F.when(F.col(f"_sig_a.mh{j}") == F.col(f"_sig_b.mh{j}"), 1).otherwise(0)
-        for j in range(num_perms)
-    )
-    sig_pairs = (
-        cands.select(F.col("id_a").alias("_sig_a"), F.col("id_b").alias("_sig_b"))
-        .withColumn("est_jaccard", round4(matches / F.lit(num_perms)))
-        .filter(F.col("est_jaccard") >= threshold)
-    )
-    sa = sigs.select(F.col(id_col).alias("id_x"), F.struct(*mh_cols).alias("_sig_a"))
-    sb = sigs.select(F.col(id_col).alias("id_y"), F.struct(*mh_cols).alias("_sig_b"))
-    cross_group = (
-        sig_pairs.join(sa, "_sig_a")
-        .join(sb, "_sig_b")
-        .select(
-            F.least("id_x", "id_y").alias("id_a"),
-            F.greatest("id_x", "id_y").alias("id_b"),
-            "est_jaccard",
-        )
-    )
-    ident = round4(F.lit(1.0))
-    ga = sigs.select(F.col(id_col).alias("id_a"), F.struct(*mh_cols).alias("_sig"))
-    gb = sigs.select(F.col(id_col).alias("id_b"), F.struct(*mh_cols).alias("_sig"))
-    within_group = (
-        ga.join(gb, "_sig")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", ident.alias("est_jaccard"))
-    )
-    out = cross_group.unionByName(within_group) if 1.0 >= threshold else cross_group
-    return (
-        out.select(F.col("id_a").cast("bigint"), F.col("id_b").cast("bigint"), "est_jaccard")
-        .orderBy("id_a", "id_b")
+    sigs = minhash_signatures(df, k, num_perms, text_col, id_col, seed).persist()
+    return _minhash_pairs(
+        sigs, None, num_perms, bands, rows_per_band, threshold, id_col, max_bucket_size
     )
 
 
-def simhash(df: DataFrame, bits: int = 32, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-doc SimHash over whitespace tokens -> (id, simhash BIGINT).
-
-    Bit k of the hash = sign of Σ_tokens (±1 by bit k of the token hash).
+def _simhash_words(
+    df: DataFrame, token_hashes: list[str], width: int, text_col: str, id_col: str
+) -> DataFrame:
+    """The one SimHash signature builder -> (id, w0..w{n-1} BIGINT): word c
+    is the ``width``-bit SimHash under token hash ``token_hashes[c]`` (an
+    md5 argument over ``tok``).  Bit k of a word = sign of
+    Σ_tokens (±1 by bit k of the token hash).
 
     Occurrences collapse to DISTINCT (doc, token) pairs first and the
     bit-sums weight by the count — Σ_occurrences ±1 ≡ Σ_distinct ±count,
@@ -897,29 +918,47 @@ def simhash(df: DataFrame, bits: int = 32, text_col: str = "text", id_col: str =
     # persist is cheap, unlike minhash_signatures where the same trick
     # loses).  No broadcast hint: AQE broadcasts the dictionary when small
     # and falls back to a shuffle join on huge vocabularies — scale-safe.
-    dic = (
-        pairs.select("tok")
-        .distinct()
-        .withColumn("m", F.md5("tok"))
-        .select("tok", F.expr(portable.hexfold_spark("m")).alias("h"))
+    dic = pairs.select("tok").distinct().select(
+        "tok",
+        *[F.expr(portable.hexfold_spark(f"md5({t})")).alias(f"h{c}") for c, t in enumerate(token_hashes)],
     )
-    toks = pairs.join(dic, "tok")
+    words = range(len(token_hashes))
     bit_sums = [
         F.sum(
             F.when(
-                F.shiftright(F.col("h"), kk).bitwiseAND(F.lit(1)) == 1, F.col("cnt")
+                F.shiftright(F.col(f"h{c}"), kk).bitwiseAND(F.lit(1)) == 1, F.col("cnt")
             ).otherwise(-F.col("cnt"))
-        ).alias(f"s{kk}")
-        for kk in range(bits)
+        ).alias(f"s{c}_{kk}")
+        for c in words
+        for kk in range(width)
     ]
-    agg = toks.groupBy(id_col).agg(*bit_sums)
-    sim = sum(F.when(F.col(f"s{kk}") > 0, F.lit(2**kk)).otherwise(F.lit(0)) for kk in range(bits))
-    return agg.select(F.col(id_col), sim.cast("bigint").alias("simhash"))
+    agg = pairs.join(dic, "tok").groupBy(id_col).agg(*bit_sums)
+    return agg.select(
+        F.col(id_col),
+        *[
+            sum(F.when(F.col(f"s{c}_{kk}") > 0, F.lit(2**kk)).otherwise(F.lit(0)) for kk in range(width))
+            .cast("bigint")
+            .alias(f"w{c}")
+            for c in words
+        ],
+    )
 
 
-def auto_simhash_bits(
-    n_docs: int, chunks: int = 4, target_occupancy: float = 2.0, min_chunk_bits: int = 8
-) -> int:
+def simhash(df: DataFrame, bits: int = 32, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """Per-doc SimHash over whitespace tokens -> (id, simhash BIGINT): one
+    ``bits``-wide word of :func:`_simhash_words` under ``md5(tok)``."""
+    return _simhash_words(df, ["tok"], bits, text_col, id_col).select(
+        id_col, F.col("w0").alias("simhash")
+    )
+
+
+# auto_simhash_bits: distinct signatures per pigeonhole bucket it aims at,
+# and the narrowest chunk it picks
+SIMHASH_OCCUPANCY = 2.0
+SIMHASH_MIN_CHUNK_BITS = 8
+
+
+def auto_simhash_bits(n_docs: int, chunks: int = 4) -> int:
     """Signature width from a cheap corpus count (round-4 verdict item 4).
 
     Pigeonhole blocking joins per-chunk buckets; with ``w = bits/chunks``
@@ -927,13 +966,14 @@ def auto_simhash_bits(
     grows with (distinct signatures / 2^w)² per bucket.  The saturation
     the ladder measured (32-bit fine at 20 k docs, dead at 500 k) is
     exactly this occupancy crossing 1 — so derive ``w`` from the count:
-    ``w = ceil(log2(n / target_occupancy))``, floored at ``min_chunk_bits``.
-    Deterministic: the same corpus size always picks the same width, so
-    auto mode stays oracle-stable at any fixed fixture.
+    ``w = ceil(log2(n / SIMHASH_OCCUPANCY))``, floored at
+    ``SIMHASH_MIN_CHUNK_BITS``.  Deterministic: the same corpus size
+    always picks the same width, so auto mode stays oracle-stable at any
+    fixed fixture.
     """
     import math
 
-    w = max(min_chunk_bits, math.ceil(math.log2(max(n_docs, 2) / target_occupancy)))
+    w = max(SIMHASH_MIN_CHUNK_BITS, math.ceil(math.log2(max(n_docs, 2) / SIMHASH_OCCUPANCY)))
     return w * chunks
 
 
@@ -946,108 +986,11 @@ def _simhash_chunk_words(
     hash yields 60 bits), so each chunk becomes its OWN ``chunk_bits``-wide
     simhash from a per-chunk SALTED token hash — the concatenation is a
     valid simhash of ``chunks * chunk_bits`` bits whose chunk extraction
-    is just ``element_at``.  Same occurrences->distinct-pairs collapse and
-    global token dictionary as :func:`simhash`.
+    is just ``element_at``.
     """
-    pairs = (
-        spread(df)
-        .select(F.col(id_col), F.explode(F.expr(portable.tokens_spark(text_col))).alias("tok"))
-        .groupBy(id_col, "tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
-    )
-    hash_cols = [
-        F.expr(portable.hexfold_spark(f"md5(concat(tok, '#w{c}'))")).alias(f"h{c}")
-        for c in range(chunks)
-    ]
-    dic = pairs.select("tok").distinct().select("tok", *hash_cols)
-    toks = pairs.join(dic, "tok")
-    bit_sums = [
-        F.sum(
-            F.when(
-                F.shiftright(F.col(f"h{c}"), kk).bitwiseAND(F.lit(1)) == 1, F.col("cnt")
-            ).otherwise(-F.col("cnt"))
-        ).alias(f"s{c}_{kk}")
-        for c in range(chunks)
-        for kk in range(chunk_bits)
-    ]
-    agg = toks.groupBy(id_col).agg(*bit_sums)
-    words = [
-        sum(
-            F.when(F.col(f"s{c}_{kk}") > 0, F.lit(2**kk)).otherwise(F.lit(0))
-            for kk in range(chunk_bits)
-        ).cast("bigint")
-        for c in range(chunks)
-    ]
-    return agg.select(F.col(id_col), F.array(*words).alias("sims"))
-
-
-def _simhash_wide_pairs(
-    df: DataFrame,
-    max_hamming: int,
-    chunks: int,
-    chunk_bits: int,
-    text_col: str,
-    id_col: str,
-    persist_sigs: bool,
-) -> DataFrame:
-    """Pigeonhole blocking over array-of-words signatures (bits > 60 path);
-    same distinct-signature discipline and output as the narrow path."""
-    sims = _simhash_chunk_words(df, chunks, chunk_bits, text_col, id_col)
-    if persist_sigs:
-        sims = sims.persist()
-    hashes = sims.select("sims").distinct()
-    blocked = hashes.select(
-        "sims",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(c).alias("chunk"), F.element_at("sims", c + 1).alias("val"))
-                    for c in range(chunks)
-                ]
-            )
-        ).alias("ck"),
-    ).select("sims", F.col("ck.chunk").alias("chunk"), F.col("ck.val").alias("val"))
-    ha, hb = blocked.alias("ha"), blocked.alias("hb")
-    hamming = sum(
-        F.bit_count(F.element_at("sh_a", c + 1).bitwiseXOR(F.element_at("sh_b", c + 1)))
-        for c in range(chunks)
-    )
-    hash_pairs = (
-        ha.join(
-            hb,
-            (F.col("ha.chunk") == F.col("hb.chunk"))
-            & (F.col("ha.val") == F.col("hb.val"))
-            & (F.col("ha.sims") < F.col("hb.sims")),
-        )
-        .select(F.col("ha.sims").alias("sh_a"), F.col("hb.sims").alias("sh_b"))
-        .distinct()
-        .withColumn("hamming", hamming.cast("bigint"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    sa = sims.select(F.col(id_col).alias("id_x"), F.col("sims").alias("sh_a"))
-    sb = sims.select(F.col(id_col).alias("id_y"), F.col("sims").alias("sh_b"))
-    cross_group = (
-        hash_pairs.join(sa, "sh_a")
-        .join(sb, "sh_b")
-        .select(
-            F.least("id_x", "id_y").alias("id_a"),
-            F.greatest("id_x", "id_y").alias("id_b"),
-            "hamming",
-        )
-    )
-    ga = sims.select(F.col(id_col).alias("id_a"), "sims")
-    gb = sims.select(F.col(id_col).alias("id_b"), "sims")
-    within_group = (
-        ga.join(gb, "sims")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.lit(0).cast("bigint").alias("hamming"))
-    )
-    return (
-        cross_group.unionByName(within_group)
-        .select(F.col("id_a").cast("bigint"), F.col("id_b").cast("bigint"), "hamming")
-        .orderBy("id_a", "id_b")
-    )
+    salted = [f"concat(tok, '#w{c}')" for c in range(chunks)]
+    words = _simhash_words(df, salted, chunk_bits, text_col, id_col)
+    return words.select(id_col, F.array(*[f"w{c}" for c in range(chunks)]).alias("sims"))
 
 
 def simhash_near_dup(
@@ -1057,98 +1000,52 @@ def simhash_near_dup(
     chunks: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persist_sigs: bool = True,
-    target_occupancy: float = 2.0,
 ) -> DataFrame:
     """SimHash near-dup pairs with pigeonhole blocking — exact, not all-pairs.
 
     Hamming distance <= ``chunks - 1`` guarantees at least one of ``chunks``
     equal bit-chunks, so candidates come from per-chunk bucket joins; the
-    hamming check then verifies.  (``max_hamming`` must be < ``chunks``.)
+    hamming check then verifies.  (``max_hamming`` must be in
+    ``[0, chunks)``.)  Doc ids should be unique (the
+    :func:`_signature_pairs` precondition; :func:`simhash` merges the
+    rows of a repeated id into one signature).
 
     ``bits="auto"`` sizes the signature from one cheap ``count()`` via
     :func:`auto_simhash_bits` — the knob the round-3 ladder showed must
     track corpus size (32-bit saturates at ~100 k docs) no longer needs
     hand-tuning.  Signatures wider than 60 bits switch to the chunk-word
     representation (:func:`_simhash_chunk_words`); ``bits <= 60`` keeps
-    the single-BIGINT path bit-for-bit identical to round 3 (dq21c's
-    oracle depends on it).
-
-    ``persist_sigs``: the simhash table feeds both sides of the chunk-bucket
-    self-join; persisting computes the token-explode+bit-sum aggregation
-    once instead of twice (compute-once signatures, as at scale).
+    the single-BIGINT signature bit-for-bit identical to round 3 (dq21c's
+    oracle depends on it).  Either way the signature table is persisted:
+    it feeds the distinct signatures and both sides of each expansion.
     """
+    if max_hamming < 0:
+        raise ValueError(f"max_hamming={max_hamming} must be >= 0")
     if max_hamming >= chunks:
         raise ValueError("pigeonhole blocking needs max_hamming < chunks")
     if bits == "auto":
-        bits = auto_simhash_bits(df.count(), chunks, target_occupancy)
+        bits = auto_simhash_bits(df.count(), chunks)
     if bits % chunks:
         raise ValueError(f"bits={bits} not divisible by chunks={chunks}")
-    if bits > 60:
-        return _simhash_wide_pairs(
-            df, max_hamming, chunks, bits // chunks, text_col, id_col, persist_sigs
-        )
-    sims = simhash(df, bits, text_col, id_col)
-    if persist_sigs:
-        sims = sims.persist()
-
-    # Hamming distance depends only on the HASH VALUES, so the quadratic
-    # stage (bucket self-join) runs over DISTINCT simhashes and doc pairs
-    # are expanded afterwards by two hash-equality joins.  On real corpora
-    # exact duplicates dominate: thousands of docs share one hash, and a
-    # doc-level bucket join would enumerate all O(n²) intra-bucket pairs
-    # BEFORE the distinct — at 100 TB that's the difference between a
-    # bounded join and a blowup.  The expansion emits exactly the output
-    # pairs, nothing more.
-    hashes = sims.select("simhash").distinct()
     width = bits // chunks
-    entries = [
-        F.struct(
-            F.lit(c).alias("chunk"),
-            F.shiftright(F.col("simhash"), c * width).bitwiseAND(F.lit(2**width - 1)).alias("val"),
-        )
-        for c in range(chunks)
-    ]
-    blocked = hashes.select(F.col("simhash"), F.explode(F.array(*entries)).alias("ck")).select(
-        "simhash", F.col("ck.chunk").alias("chunk"), F.col("ck.val").alias("val")
-    )
-    ha, hb = blocked.alias("ha"), blocked.alias("hb")
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    hash_pairs = (
-        ha.join(
-            hb,
-            (F.col("ha.chunk") == F.col("hb.chunk"))
-            & (F.col("ha.val") == F.col("hb.val"))
-            & (F.col("ha.simhash") < F.col("hb.simhash")),
-        )
-        .select(F.col("ha.simhash").alias("sh_a"), F.col("hb.simhash").alias("sh_b"))
-        .distinct()
-        .withColumn("hamming", hamming.cast("bigint"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    sa = sims.select(F.col(id_col).alias("id_x"), F.col("simhash").alias("sh_a"))
-    sb = sims.select(F.col(id_col).alias("id_y"), F.col("simhash").alias("sh_b"))
-    cross_group = (
-        hash_pairs.join(sa, "sh_a")
-        .join(sb, "sh_b")
-        .select(
-            F.least("id_x", "id_y").alias("id_a"),
-            F.greatest("id_x", "id_y").alias("id_b"),
-            "hamming",
-        )
-    )
-    # identical-hash docs: hamming 0, all intra-group pairs
-    ga = sims.select(F.col(id_col).alias("id_a"), "simhash")
-    gb = sims.select(F.col(id_col).alias("id_b"), "simhash")
-    within_group = (
-        ga.join(gb, "simhash")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.lit(0).cast("bigint").alias("hamming"))
-    )
-    return (
-        cross_group.unionByName(within_group)
-        .select(F.col("id_a").cast("bigint"), F.col("id_b").cast("bigint"), "hamming")
-        .orderBy("id_a", "id_b")
+    if bits > 60:
+        sims, sig = _simhash_chunk_words(df, chunks, width, text_col, id_col), F.col("sims")
+
+        def chunk(s, c):
+            return F.element_at(s, c + 1)
+    else:
+        sims, sig = simhash(df, bits, text_col, id_col), F.col("simhash")
+
+        def chunk(s, c):
+            return F.shiftright(s, c * width).bitwiseAND(F.lit(2**width - 1))
+    return _signature_pairs(
+        sims.persist(), None, sig,
+        lambda s: [chunk(s, c) for c in range(chunks)],
+        "hamming",
+        lambda a, b: sum(F.bit_count(chunk(a, c).bitwiseXOR(chunk(b, c))) for c in range(chunks)).cast("bigint"),
+        lambda h: h <= max_hamming,
+        0,
+        id_col,
     )
 
 

@@ -108,6 +108,14 @@ def test_simhash_blocking_is_exact(spark, sf_dir):
     assert blocked == brute
 
 
+def test_simhash_near_dup_rejects_negative_max_hamming(spark):
+    """A negative radius has no pairs; it must not fall through to the
+    identical-signature pairs, whose hamming 0 is above it."""
+    df = spark.createDataFrame([(1, "same text"), (2, "same text")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="max_hamming"):
+        dedup.simhash_near_dup(df, max_hamming=-1)
+
+
 def test_cosine_topk_self_first(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qv = [float(v) for v in emb.filter(F.col("vec_id") == 7).collect()[0]["embedding"]]

@@ -6,6 +6,8 @@ queries, top-k without global sort — so a regression in plan quality fails
 fast.
 """
 
+import pytest
+
 from agile_lakehouse_spark import declared
 from pyspark.sql import functions as F
 from agile_lakehouse_spark.operators import relational
@@ -22,15 +24,21 @@ def test_multiway_join_broadcasts_dims(spark, sf_dir):
     assert plan.count("BroadcastHashJoin") >= 3
 
 
-def test_no_python_udf_in_declared_queries(spark, sf_dir):
-    for name, fn in declared.SPARK_QUERIES.items():
+@pytest.fixture(scope="module")
+def declared_frames(spark, sf_dir):
+    """Every registry entry's frame, built once: building them is most of
+    the cost of the two registry-wide plan checks below."""
+    return {name: fn(spark, sf_dir) for name, fn in declared.SPARK_QUERIES.items()}
+
+
+def test_no_python_udf_in_declared_queries(declared_frames):
+    for name, df in declared_frames.items():
         if name == "dq25_multimodal_features":
             continue  # mapInPandas is the point there
-        df = fn(spark, sf_dir)
         assert not explain.uses_python_udf(df), f"{name} fell off the JVM fast path"
 
 
-def test_no_complex_output_columns_in_declared_queries(spark, sf_dir):
+def test_no_complex_output_columns_in_declared_queries(declared_frames):
     """Driver-canon compatibility: the correctness driver canonicalizes
     results with pandas sort_values + hashing, which cannot hash
     list/dict-valued cells.  Every registry output column must therefore
@@ -40,8 +48,7 @@ def test_no_complex_output_columns_in_declared_queries(spark, sf_dir):
 
     complex_types = (T.ArrayType, T.MapType, T.StructType)
     offenders = []
-    for name, fn in declared.SPARK_QUERIES.items():
-        df = fn(spark, sf_dir)
+    for name, df in declared_frames.items():
         for field in df.schema.fields:
             if isinstance(field.dataType, complex_types):
                 offenders.append(f"{name}.{field.name}: {field.dataType.simpleString()}")
